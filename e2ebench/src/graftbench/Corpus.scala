@@ -133,23 +133,23 @@ final class CorpusWorkload(spark: SparkSession, work: Path, repo: Path,
   private def out = dir.resolve("out").toString
   private def evalDir = dir.resolve("eval").toString
 
-  def setup(pass: Int): Unit = {
+  def setup(): Unit = {
     import spark.implicits._
-    dir = work.resolve(s"corpus-pass$pass")
+    dir = work.resolve(name)
     Files.createDirectories(dir)
     val p = CorpusGen.generate(seed, docs, evals)
     p.docs.toDS().coalesce(1).write.parquet(dir.resolve("sf/documents.parquet").toString)
     p.eval.map(CorpusGen.EvalDoc).toDS().coalesce(1).write.parquet(evalDir)
   }
 
-  def run(pass: Int, tr: Tracer): Long = {
+  def run(tr: Tracer): Long = {
     val rc = tr.span("corpus")(graft.Main.run(spark, (Seq("corpus",
       dir.resolve("sf").toString, out) ++ Flags.map(_.replace("<eval>", evalDir))).toArray))
     require(rc == 0, s"corpus verb returned $rc")
     docs.toLong
   }
 
-  def check(pass: Int): Seq[String] = {
+  def check(): Seq[String] = {
     import spark.implicits._
     val gauges = spark.read.parquet(s"$out/metrics").where("job = 'corpus'")
       .select("name", "value").as[(String, Long)].collect().toMap
@@ -164,7 +164,7 @@ final class CorpusWorkload(spark: SparkSession, work: Path, repo: Path,
     CorpusCheck(planted, docs, gauges, rows, manifest)
   }
 
-  def cleanup(pass: Int): Unit = {
+  def cleanup(): Unit = {
     spark.catalog.clearCache()
     if (dir != null) Dirs.delete(dir)
   }
@@ -209,17 +209,20 @@ object CorpusStages {
     "var corpus = kept" -> "corpus.assign",
     ".parquet(s\"$outDir/corpus\")" -> "corpus.write")
 
-  /** (first line, stage) pairs in line order; only the label stage when
-    * the markers are not found. */
+  /** (first line, stage) pairs in line order. Throws when the verb or
+    * one of its markers is not found, so a traced pass fails rather
+    * than charge every stage's time to the label stage. */
   def boundaries(main: Path): Seq[(Int, String)] = {
     val lines =
       if (Files.exists(main)) scala.jdk.CollectionConverters
         .ListHasAsScala(Files.readAllLines(main)).asScala.toVector
       else Vector.empty
     val verb = lines.indexWhere(_.contains("case \"corpus\" ::"))
-    val found = markers.flatMap { case (m, s) =>
-      val i = lines.indexWhere(_.contains(m), verb max 0)
-      if (verb < 0 || i < 0) None else Some((i + 1, s))
+    require(verb >= 0, s"no `case \"corpus\" ::` in $main")
+    val found = markers.map { case (m, s) =>
+      val i = lines.indexWhere(_.contains(m), verb)
+      require(i >= 0, s"stage marker `$m` not found after the corpus verb in $main")
+      (i + 1, s)
     }
     (0, "corpus.label") +: found.sortBy(_._1)
   }

@@ -9,18 +9,18 @@ import graft.ops.{Crawl, WebGraphOp}
 import graft.plugins.Extensions
 import graft.tables.Segment
 
-/** One workload: per pass it builds its inputs (set-up), runs the
-  * timed region, checks the outputs, and cleans up. */
+/** One workload: it builds its inputs (set-up), runs the timed
+  * region, checks the outputs, and cleans up. */
 trait Workload {
   def name: String
-  /** Items one pass processes, the unit of `items_per_s`. */
+  /** Items the timed region processes, the unit of `items_per_s`. */
   def itemsLabel: String
-  def setup(pass: Int): Unit
+  def setup(): Unit
   /** The timed region; returns the items it processed. */
-  def run(pass: Int, tr: Tracer): Long
-  /** Output check of the pass just run: one message per failure. */
-  def check(pass: Int): Seq[String]
-  def cleanup(pass: Int): Unit
+  def run(tr: Tracer): Long
+  /** Output check of the timed region: one message per failure. */
+  def check(): Seq[String]
+  def cleanup(): Unit
   /** Per-layer metrics this workload adds for a traced pass. */
   def layers(t: PassTrace): Map[String, Double] = Map.empty
   /** The label each job of a traced pass is charged to (default: its
@@ -28,33 +28,38 @@ trait Workload {
   def labels(t: PassTrace): Map[Int, String] = t.jobs.map(j => j.id -> j.span).toMap
 }
 
-/** What the crawl-shaped workloads share: the conductor config, the
-  * registry, the per-pass root and the conductor's own metrics. */
-abstract class ConductorWorkload(spark: SparkSession, work: Path)
+/** `crawl`: a fresh BFS crawl of a seeded site, then the index pass
+  * and link analysis (WebGraph build, LinkRank, ScoreUpdater). */
+final class CrawlWorkload(spark: SparkSession, work: Path, seed: Long,
+    hosts: Int, pages: Int, rounds: Int, linkrankIterations: Int)
     extends Workload {
+  def name = "crawl"
   def itemsLabel = "pages fetched"
-  protected val registry = Extensions.Registry(
+  val site = Site(seed, hosts, pages)
+  private val registry = Extensions.Registry(
     urlFilters = Seq(graft.net.RegexUrlFilter.parse(Iterator("+."))))
-  protected def config: Crawl.Config
-  protected def rounds: Int = config.rounds
+  private val config = Crawl.Config(rounds = rounds,
+    pacer = graft.net.Pacer.Config(serverDelayMs = 0))
+  private lazy val reference = Reference.crawl(site, site.topPages, rounds)
 
-  protected var root: Path = _
-  protected var stores: Crawl.Stores = _
-  protected var stats: Seq[Crawl.RoundStats] = Nil
-  protected var segments: Seq[Segment] = Nil
-  protected var summary: Crawl.Summary = _
+  private var root: Path = _
+  private var stores: Crawl.Stores = _
+  private var stats: Seq[Crawl.RoundStats] = Nil
+  private var segments: Seq[Segment] = Nil
+  private var summary: Crawl.Summary = _
   private var roundBytes = 0L
 
-  protected def openRoot(pass: Int): Unit = {
-    root = work.resolve(s"$name-pass$pass")
+  def setup(): Unit = {
+    root = work.resolve(name)
     Files.createDirectories(root)
     stores = Crawl.openStores(spark, root.toString, config)
   }
 
-  /** The conductor rounds; on a traced pass also the bytes each round
-    * leaves under the crawl root (files new or changed since the
-    * round started), measured outside the round's span. */
-  protected def runRounds(tr: Tracer, site: Site): Unit = {
+  def run(tr: Tracer): Long = {
+    tr.span("ops.inject")(Crawl.inject(spark, stores, site.topPages, registry, config))
+    // on a traced pass also the bytes each round leaves under the crawl
+    // root (files new or changed since it started), measured outside
+    // the round's span
     roundBytes = 0L
     val out = (1 to rounds).map { r =>
       val before = if (tr.active) Dirs.snapshot(root) else Map.empty[String, (Long, Long)]
@@ -67,9 +72,24 @@ abstract class ConductorWorkload(spark: SparkSession, work: Path)
     stats = out.map(_._2)
     summary = tr.span("ops.finish")(
       Crawl.finish(spark, stores, segments, stats, config))
+    val dir = s"$root/webgraph"
+    tr.span("webgraph.build")(WebGraphOp.build(spark,
+      segments.map(_.parseData).reduce(_ union _), dir))
+    tr.span("webgraph.linkrank")(
+      WebGraphOp.linkrank(spark, dir, linkrankIterations))
+    tr.span("webgraph.scoreupdater")(stores.crawldb.install(
+      WebGraphOp.scoreUpdater(stores.crawldb.read(), spark, dir),
+      "scoreupdater"))
+    stats.map(_.fetched).sum
   }
 
-  def cleanup(pass: Int): Unit = {
+  def check(): Seq[String] = {
+    val nodes = spark.read.parquet(s"$root/webgraph/nodes")
+    Checks.crawl(reference, stats, summary.indexed, nodes.count(),
+      nodes.where(col("score").isNull).count(), stores.crawldb.read().count())
+  }
+
+  def cleanup(): Unit = {
     spark.catalog.clearCache()
     if (root != null) Dirs.delete(root)
   }
@@ -98,73 +118,6 @@ abstract class ConductorWorkload(spark: SparkSession, work: Path)
   }
 }
 
-/** `crawl`: a fresh BFS crawl of a seeded site, then the index pass
-  * and link analysis (WebGraph build, LinkRank, ScoreUpdater). */
-final class CrawlWorkload(spark: SparkSession, work: Path, seed: Long,
-    hosts: Int, pages: Int, nRounds: Int, linkrankIterations: Int)
-    extends ConductorWorkload(spark, work) {
-  def name = "crawl"
-  val site = Site(seed, hosts, pages)
-  private var seeds: Seq[String] = Nil
-  protected val config = Crawl.Config(rounds = nRounds,
-    pacer = graft.net.Pacer.Config(serverDelayMs = 0))
-  private lazy val reference = Reference.crawl(site, site.topPages, rounds)
-
-  def setup(pass: Int): Unit = {
-    seeds = site.topPages
-    openRoot(pass)
-  }
-
-  def run(pass: Int, tr: Tracer): Long = {
-    tr.span("ops.inject")(Crawl.inject(spark, stores, seeds, registry, config))
-    runRounds(tr, site)
-    val dir = s"$root/webgraph"
-    tr.span("webgraph.build")(WebGraphOp.build(spark,
-      segments.map(_.parseData).reduce(_ union _), dir))
-    tr.span("webgraph.linkrank")(
-      WebGraphOp.linkrank(spark, dir, linkrankIterations))
-    tr.span("webgraph.scoreupdater")(stores.crawldb.install(
-      WebGraphOp.scoreUpdater(stores.crawldb.read(), spark, dir),
-      "scoreupdater"))
-    stats.map(_.fetched).sum
-  }
-
-  def check(pass: Int): Seq[String] = {
-    val nodes = spark.read.parquet(s"$root/webgraph/nodes")
-    Checks.crawl(reference, stats, summary.indexed, nodes.count(),
-      nodes.where(col("score").isNull).count(), stores.crawldb.read().count())
-  }
-}
-
-/** `recrawl`: the whole site injected into a large CrawlDb during
-  * set-up, then topN-bounded rounds and the index pass. Every link
-  * stays inside the injected set, so the CrawlDb never grows. */
-final class RecrawlWorkload(spark: SparkSession, work: Path, seed: Long,
-    hosts: Int, pages: Int, nRounds: Int, topN: Long)
-    extends ConductorWorkload(spark, work) {
-  def name = "recrawl"
-  val site = Site(seed, hosts, pages, deadEvery = 0)
-  protected val config = Crawl.Config(rounds = nRounds, topN = topN,
-    pacer = graft.net.Pacer.Config(serverDelayMs = 0))
-  private val injected = hosts.toLong * pages
-
-  def setup(pass: Int): Unit = {
-    openRoot(pass)
-    Crawl.inject(spark, stores, site.allUrls.toVector, registry, config)
-  }
-
-  def run(pass: Int, tr: Tracer): Long = {
-    runRounds(tr, site)
-    stats.map(_.fetched).sum
-  }
-
-  def check(pass: Int): Seq[String] = {
-    import spark.implicits._
-    Checks.recrawl(site, topN, injected, stats,
-      segments.map(_.generate.map(_.url).collect().toSeq), summary.indexed)
-  }
-}
-
 /** The conductor checks, on plain values. */
 object Checks {
   private def expectEq(what: String, got: Any, want: Any): Seq[String] =
@@ -180,26 +133,6 @@ object Checks {
       expectEq("linkrank nodes", nodes, ref.linkNodes) ++
       expectEq("unscored linkrank nodes", unscored, 0L) ++
       expectEq("crawldb size after scoreupdater", dbAfter, ref.dbSize.last)
-
-  /** A recrawl of a fully injected site: topN pages a round, never one
-    * twice, fetched unless the site has them gone, CrawlDb unchanged. */
-  def recrawl(site: Site, topN: Long, injected: Long, stats: Seq[Crawl.RoundStats],
-      generated: Seq[Seq[String]], indexed: Long): Seq[String] = {
-    val located = generated.map(_.flatMap(site.locate))
-    val ok = located.map(_.filterNot { case (i, j) => site.isGone(i, j) })
-    val all = generated.flatten
-    expectEq("generated per round", stats.map(_.generated), generated.map(_.size.toLong)) ++
-      expectEq("generate list sizes", generated.map(_.size.toLong),
-        Seq.fill(generated.size)(topN)) ++
-      expectEq("generated urls that are site pages", located.map(_.size),
-        generated.map(_.size)) ++
-      expectEq("urls generated twice", all.size - all.distinct.size, 0) ++
-      expectEq("fetched per round", stats.map(_.fetched), ok.map(_.size.toLong)) ++
-      expectEq("crawldb size per round", stats.map(_.dbSize),
-        Seq.fill(stats.size)(injected)) ++
-      expectEq("indexed", indexed,
-        ok.flatten.size - Reference.duplicates(site, ok.flatten))
-  }
 }
 
 /** Small filesystem helpers. */

@@ -2,10 +2,11 @@ package graftbench
 
 import java.nio.file.{Files, Paths}
 
-/** The run's environment record: host steal and load, and a fixed CPU
-  * calibration loop, sampled at the start and end of the run. It
-  * explains a contended run; no run is dropped or rescaled by it. */
-final case class EnvSample(atMs: Long, stealS: Double, load1: Double, calibS: Double)
+/** The run's environment record: host steal and load, sampled at the
+  * start and end of the run, and a fixed CPU calibration loop run at
+  * the end (at the start it would fall inside `setup_s`). It explains
+  * a contended run; no run is dropped or rescaled by it. */
+final case class EnvSample(atMs: Long, stealS: Double, load1: Double)
 
 object Env {
 
@@ -49,6 +50,5 @@ object Env {
     (System.nanoTime() - t0) / 1e9
   }.min
 
-  def sample(): EnvSample =
-    EnvSample(System.currentTimeMillis(), stealS(), load1(), calibrate())
+  def sample(): EnvSample = EnvSample(System.currentTimeMillis(), stealS(), load1())
 }

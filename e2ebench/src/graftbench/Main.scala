@@ -2,30 +2,25 @@ package graftbench
 
 import java.nio.file.{Files, Path, Paths}
 
-import scala.collection.mutable
-
 import org.apache.spark.sql.SparkSession
 
-/** The benchmark harness: one workload in one JVM, closed loop.
+/** The benchmark harness: one pass of one workload in a fresh JVM.
   *
-  * Every pass builds its own inputs (set-up), runs the timed region,
-  * checks its outputs and deletes them. Pass 1 is the cold pass; warm
-  * passes follow until `--seconds` of warm passes have run (at least
-  * [[MinWarm]]). With `--trace 1` the warm passes alternate untraced
-  * and traced (at least untraced, traced, untraced), so the tracing
-  * overhead is measured in the same JVM; end-to-end figures only ever
-  * come from untraced passes.
+  * The JVM creates the session, builds the pass's inputs (set-up),
+  * runs the timed region, checks the outputs and deletes them. The
+  * pass is cold, as every `graft.Main` verb runs in a new JVM; a run
+  * that wants more samples starts more JVMs. With `--trace 1` the pass
+  * runs with the tracer attached and its per-layer metrics are
+  * reported instead of the end-to-end ones.
   *
-  * Writes one JSON file (`--out`) with the metrics, every pass and the
+  * Writes one JSON file (`--out`) with the metrics, the pass and the
   * run's environment record. */
 object Main {
 
-  val MinWarm = 1
-  val SetupSamples = 3
-
-  final case class Pass(n: Int, traced: Boolean, setupS: Double, wallS: Double,
-      cpuS: Double, items: Long, errors: Seq[String], layers: Map[String, Double],
-      detail: String) {
+  /** `startMs` is the epoch time the timed region began (0 if the
+    * set-up failed). */
+  final case class Pass(startMs: Long, setupS: Double, wallS: Double, cpuS: Double,
+      items: Long, errors: Seq[String], layers: Map[String, Double], detail: String) {
     def ok: Boolean = errors.isEmpty
   }
 
@@ -33,75 +28,35 @@ object Main {
     val a = args.grouped(2).collect { case Array(k, v) => k.stripPrefix("--") -> v }.toMap
     val workload = a("workload")
     val seed = a("seed").toLong
-    val seconds = a("seconds").toDouble
     val trace = a.getOrElse("trace", "0") == "1"
     val cores = a.getOrElse("cores", "4").toInt
     val work = Paths.get(a("work")).toAbsolutePath
     val repo = Paths.get(a.getOrElse("repo", ".")).toAbsolutePath
-    val deadlineS = a.getOrElse("deadline", "160").toDouble
     Files.createDirectories(work)
 
     val jvmStart = Jvm.startMs()
-    val (spark, createS) = Env.timed(Session.create(cores, work))
-    val sessionReadyS = (System.currentTimeMillis() - jvmStart) / 1000.0
     val env0 = Env.sample()
-    val tracer = new Tracer(spark)
-    val wl: Workload = workload match {
-      case "crawl" => new CrawlWorkload(spark, work, seed, hosts = 40, pages = 60,
-        nRounds = 1, linkrankIterations = 6)
-      case "recrawl" => new RecrawlWorkload(spark, work, seed, hosts = 500,
-        pages = 200, nRounds = 3, topN = 2000)
-      case "corpus" => new CorpusWorkload(spark, work, repo, seed, docs = 2000,
-        evals = 200)
-      case other => sys.error(s"unknown workload $other")
-    }
-
-    val passes = mutable.ArrayBuffer.empty[Pass]
-    val extraSetups = mutable.ArrayBuffer.empty[Double]
-    var warmStart = 0.0
-    def sinceStart = (System.currentTimeMillis() - jvmStart) / 1000.0
-    // a warm pass takes about half the cold pass's time (0.7 leaves a
-    // margin); later ones are budgeted with a margin over the last
-    def nextCost = passes.lastOption.map(p =>
-      p.setupS + p.wallS * (if (p.n == 1) 0.7 else 1.3)).getOrElse(0.0)
-    // traced runs bracket each traced pass with untraced ones, so the
-    // overhead estimate is not skewed by passes still getting faster
-    val minWarm = if (trace) 3 else MinWarm
-    def more: Boolean = {
-      val warm = passes.size - 1
-      passes.isEmpty ||
-        (sinceStart + nextCost < deadlineS &&
-          (warm < minWarm || sinceStart - warmStart < seconds))
-    }
+    val (spark, createS) = Env.timed(Session.create(cores, work))
     try {
-      while (more) {
-        val n = passes.size + 1
-        if (n == 2) warmStart = sinceStart
-        // warm passes alternate untraced / traced in trace mode
-        val traced = trace && n > 1 && n % 2 == 1
-        passes += runPass(spark, wl, tracer, n, traced)
-        val p = passes.last
-        System.err.println(f"[e2ebench] ${wl.name} pass $n%d" +
-          (if (traced) " traced" else "") +
-          f" setup ${p.setupS}%.2f s wall ${p.wallS}%.2f s cpu ${p.cpuS}%.2f s " +
-          (if (p.ok) "ok" else "FAILED: " + p.errors.mkString("; ")))
+      val wl: Workload = workload match {
+        case "crawl" => new CrawlWorkload(spark, work, seed, hosts = 40, pages = 60,
+          rounds = 1, linkrankIterations = 2)
+        case "corpus" => new CorpusWorkload(spark, work, repo, seed, docs = 2000,
+          evals = 200)
+        case other => sys.error(s"unknown workload $other")
       }
-      // repeat the input set-up so setup_s is a median of three
-      while (passes.nonEmpty && passes.size + extraSetups.size < SetupSamples) {
-        val n = passes.size + extraSetups.size + 1
-        extraSetups += Env.timed(wl.setup(n))._2
-        wl.cleanup(n)
-      }
-    } finally {
+      val p = runPass(spark, wl, new Tracer(spark), trace)
+      System.err.println(f"[e2ebench] ${wl.name}" + (if (trace) " traced" else "") +
+        f" setup ${p.setupS}%.2f s wall ${p.wallS}%.2f s cpu ${p.cpuS}%.2f s " +
+        (if (p.ok) "ok" else "FAILED: " + p.errors.mkString("; ")))
       val env1 = Env.sample()
-      val report = Report(wl, passes.toSeq, extraSetups.toSeq, trace, createS,
-        sessionReadyS, env0, env1, cores)
+      val report = Report(wl, p, trace, jvmStart, createS, env0, env1,
+        Env.calibrate(), cores)
       Files.write(Paths.get(a("out")), report.getBytes("UTF-8"))
-      spark.stop()
-    }
+    } finally spark.stop()
   }
 
-  private def runPass(spark: SparkSession, wl: Workload, tr: Tracer, n: Int,
+  private def runPass(spark: SparkSession, wl: Workload, tr: Tracer,
       traced: Boolean): Pass = {
     var errors = Seq.empty[String]
     def guard[A](what: String)(body: => A): Option[A] =
@@ -111,30 +66,34 @@ object Main {
           errors :+= s"$what threw ${e.getClass.getName}: ${e.getMessage}"
           None
       }
-    val (_, setupS) = Env.timed(guard("setup")(wl.setup(n)))
+    val (_, setupS) = Env.timed(guard("setup")(wl.setup()))
+    var startMs = 0L
     var wallS, cpuS = 0.0
     var items = 0L
     var layers = Map.empty[String, Double]
     var detail = ""
     if (errors.isEmpty) {
+      startMs = System.currentTimeMillis()
       val cpu0 = Jvm.cpuNs()
       val t0 = System.nanoTime()
       if (traced) {
-        guard("pass")(tr.traced(wl.run(n, tr))).foreach { case (it, t) =>
+        guard("pass")(tr.traced(wl.run(tr))).foreach { case (it, t) =>
           items = it
           wallS = (t.endMs - t.startMs) / 1000.0
-          layers = Layers.of(wl, t) ++ guard("layers")(wl.layers(t)).getOrElse(Map.empty)
-          detail = Layers.detail(wl, t)
+          guard("layers") {
+            layers = Layers.of(wl, t) ++ wl.layers(t)
+            detail = Layers.detail(wl, t)
+          }
         }
       } else {
-        guard("pass")(wl.run(n, tr)).foreach(items = _)
+        guard("pass")(wl.run(tr)).foreach(items = _)
         wallS = (System.nanoTime() - t0) / 1e9
       }
       cpuS = (Jvm.cpuNs() - cpu0) / 1e9
-      if (errors.isEmpty) guard("check")(wl.check(n)).foreach(errors ++= _)
+      if (errors.isEmpty) guard("check")(wl.check()).foreach(errors ++= _)
     }
-    guard("cleanup")(wl.cleanup(n))
-    Pass(n, traced, setupS, wallS, cpuS, items, errors, layers, detail)
+    guard("cleanup")(wl.cleanup())
+    Pass(startMs, setupS, wallS, cpuS, items, errors, layers, detail)
   }
 }
 

@@ -26,11 +26,7 @@ object Layers {
     for (l <- SpanLabels; m <- Seq("jobs", "tasks", "executor_cpu_s", "shuffle_mb"))
       yield s"$l.$m"
 
-  /** Once per run rather than per pass. */
-  val Run: Seq[String] = Seq("session.create_s", "trace.overhead_s",
-    "env.steal_s", "env.load_avg", "env.calib_s")
-
-  val names: Seq[String] = Generic ++ Workload ++ PerSpan ++ Run
+  val names: Seq[String] = Generic ++ Workload ++ PerSpan
 
   /** A stage's skew counts only when its slowest task took this long;
     * shorter stages cannot hold up a pass. */
@@ -108,77 +104,50 @@ object Layers {
 /** The harness's JSON file. */
 object Report {
 
-  def median(xs: Seq[Double]): Double =
-    if (xs.isEmpty) 0.0
-    else {
-      val s = xs.sorted
-      if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
-    }
-
-  def apply(wl: Workload, passes: Seq[Main.Pass], extraSetups: Seq[Double],
-      trace: Boolean, createS: Double, sessionReadyS: Double, env0: EnvSample,
-      env1: EnvSample, cores: Int): String = {
-    val ok = passes.filter(_.ok)
-    val warm = ok.filter(p => p.n > 1 && !p.traced)
-    val tracedOk = ok.filter(_.traced)
-    val wallS = median(warm.map(_.wallS))
-    val runS = (env1.atMs - env0.atMs) / 1000.0
+  def apply(wl: Workload, p: Main.Pass, trace: Boolean, jvmStartMs: Long,
+      createS: Double, env0: EnvSample, env1: EnvSample, calibS: Double,
+      cores: Int): String = {
+    // JVM start to the start of the timed region: session creation and
+    // the pass's own input set-up
+    val setupS = (p.startMs - jvmStartMs) / 1000.0
     val envFields = Seq(
       "steal_s" -> Json.num(env1.stealS - env0.stealS),
-      "run_s" -> Json.num(runS),
+      "run_s" -> Json.num((env1.atMs - env0.atMs) / 1000.0),
       "load_avg_start" -> Json.num(env0.load1),
       "load_avg_end" -> Json.num(env1.load1),
-      "calib_start_s" -> Json.num(env0.calibS),
-      "calib_end_s" -> Json.num(env1.calibS),
+      "calib_s" -> Json.num(calibS),
       "cores" -> Json.num(cores),
       "host_cpus" -> Json.num(Runtime.getRuntime.availableProcessors()),
       "heap_max_mb" -> Json.num(Runtime.getRuntime.maxMemory() / 1048576L),
       "jvm_flags" -> Json.arr(Jvm.flags().map(Json.str)),
       "jvm_jit_s" -> Json.num(Jvm.jitMs() / 1000.0),
       "jvm_gc_s" -> Json.num(Jvm.gcMs() / 1000.0),
-      "session_create_s" -> Json.num(createS),
-      "session_ready_s" -> Json.num(sessionReadyS),
-      "extra_setups_s" -> Json.arr(extraSetups.map(Json.num)))
+      "session_create_s" -> Json.num(createS))
+    // a pass whose check failed still ran its timed region; one whose
+    // set-up or timed region threw has no figures
     val metrics: Seq[(String, Double)] =
-      if (!trace) Seq(
-        "setup_s" -> (sessionReadyS + median(ok.map(_.setupS) ++ extraSetups)),
-        "cold_s" -> ok.find(_.n == 1).map(_.wallS).getOrElse(0.0),
-        "wall_s" -> wallS,
-        "items_per_s" -> (if (wallS > 0) median(warm.map(_.items.toDouble)) / wallS else 0.0),
-        "cpu_s" -> median(warm.map(_.cpuS)))
-      else {
-        val layer = Layers.names.filterNot(Layers.Run.contains).map(n =>
-          n -> median(tracedOk.map(_.layers.getOrElse(n, 0.0))))
-        layer ++ Seq(
-          "session.create_s" -> createS,
-          "trace.overhead_s" -> (median(tracedOk.map(_.wallS)) - wallS),
-          "env.steal_s" -> (env1.stealS - env0.stealS),
-          "env.load_avg" -> (env0.load1 + env1.load1) / 2,
-          "env.calib_s" -> math.max(env0.calibS, env1.calibS))
-      }
-    // the metrics exist only when the passes they are medians of ran
-    val complete = passes.exists(p => p.n > 1 && !p.traced) &&
-      (!trace || passes.exists(_.traced))
+      if (p.startMs == 0 || p.wallS <= 0) Nil
+      else if (!trace) Seq(
+        "setup_s" -> setupS,
+        "cold_s" -> p.wallS,
+        "wall_s" -> (setupS + p.wallS),
+        "items_per_s" -> p.items / p.wallS,
+        "cpu_s" -> p.cpuS)
+      else Layers.names.map(n => n -> p.layers.getOrElse(n, 0.0)) ++ Seq(
+        "session.create_s" -> createS,
+        "env.steal_s" -> (env1.stealS - env0.stealS),
+        "env.load_avg" -> (env0.load1 + env1.load1) / 2,
+        "env.calib_s" -> calibS)
     Json.obj(Seq(
       "workload" -> Json.str(wl.name),
-      "complete" -> complete.toString,
-      "correct" -> (if (passes.nonEmpty && passes.forall(_.ok)) "true" else "false"),
-      "attempted" -> Json.num(passes.size),
-      "failed" -> Json.num(passes.count(!_.ok)),
+      "correct" -> p.ok.toString,
+      "errors" -> Json.arr(p.errors.map(Json.str)),
+      "items" -> Json.num(p.items),
+      "items_label" -> Json.str(wl.itemsLabel),
+      "timed_s" -> Json.num(p.wallS),
       "metrics" -> Json.obj(metrics.map { case (k, v) => k -> Json.num(v) }),
-      "items" -> Json.str(wl.itemsLabel),
-      "passes" -> Json.arr(passes.map(p => Json.obj(Seq(
-        "pass" -> Json.num(p.n),
-        "traced" -> p.traced.toString,
-        "setup_s" -> Json.num(p.setupS),
-        "wall_s" -> Json.num(p.wallS),
-        "cpu_s" -> Json.num(p.cpuS),
-        "items" -> Json.num(p.items),
-        "errors" -> Json.arr(p.errors.map(Json.str))) ++
-        (if (p.traced) Seq(
-          "layers" -> Json.obj(p.layers.toSeq.sorted.map { case (k, v) => k -> Json.num(v) }),
-          "jobs_by_label_and_file" -> p.detail) else Nil)))),
-      "env" -> Json.obj(envFields)))
+      "env" -> Json.obj(envFields)) ++
+      (if (p.detail.nonEmpty) Seq("jobs_by_label_and_file" -> p.detail) else Nil))
   }
 }
 

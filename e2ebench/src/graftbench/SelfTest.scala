@@ -97,26 +97,6 @@ object SelfTest {
         ref.dbSize.last + 1), "a grown crawldb")
     }
 
-    test("recrawl checker rejects a corrupted recrawl") {
-      val s = Site(5, 10, 50, deadEvery = 0)
-      val gen = s.allUrls.toSeq.grouped(40).take(3).toSeq
-      val ok = gen.map(_.flatMap(s.locate).filterNot((s.isGone _).tupled))
-      val stats = gen.indices.map(r =>
-        RoundStats(r + 1, gen(r).size, ok(r).size, 500))
-      val indexed = ok.flatten.size - Reference.duplicates(s, ok.flatten)
-      eq(Checks.recrawl(s, 40, 500, stats, gen, indexed), Nil)
-      eq(ok.flatten.size < gen.flatten.size, true, "some generated pages are gone")
-      rejects(Checks.recrawl(s, 40, 500, stats, gen.updated(0, gen(0).tail), indexed),
-        "a dropped generate row")
-      rejects(Checks.recrawl(s, 40, 500,
-        stats.updated(2, stats(2).copy(fetched = gen(2).size)), gen, indexed),
-        "a gone page counted as fetched")
-      rejects(Checks.recrawl(s, 40, 500, stats.updated(0, stats(0).copy(dbSize = 501)),
-        gen, indexed), "a grown crawldb")
-      rejects(Checks.recrawl(s, 40, 500, stats, gen.updated(1, gen(0)), indexed),
-        "a page generated twice")
-    }
-
     test("corpus checker rejects a corrupted export") {
       val p = CorpusGen.generate(9, 600, 30)
       val grouped = p.exactGroups.flatMap(_.tail).toSet

@@ -17,9 +17,7 @@ import graft.schemas.CrawlDatum
   *  - mirror pages (about 1 in `dupEvery`) whose whole body is one of
   *    `dupClasses` shared texts with no links, so the dedup step must
   *    keep one page per class.
-  * Roots are never gone or mirrors. An `*Every` of 0 plants none. With
-  * `deadEvery = 0` every link stays inside the site, so a crawl that
-  * injected the whole site never grows its CrawlDb. */
+  * Roots are never gone or mirrors. An `*Every` of 0 plants none. */
 final case class Site(seed: Long, hosts: Int, pagesPerHost: Int,
     fanout: Int = 6, goneEvery: Int = 25, dupEvery: Int = 20,
     dupClasses: Int = 8, deadEvery: Int = 10, crossLinks: Boolean = true)

@@ -102,10 +102,9 @@ final class Tracer(spark: SparkSession) {
 
   /** Run one pass with the listeners attached; returns its trace. */
   def traced[A](body: => A): (A, PassTrace) = {
-    lock.synchronized {
-      spans.clear(); jobStarts.clear(); jobs.clear()
-      stageTasks.clear(); stageAgg.clear(); planMs = 0.0
-    }
+    // events still queued from earlier jobs (the session's first job,
+    // the input set-up) must not reach this pass's listener
+    org.apache.spark.graftbench.Bus.drain(sc)
     sc.addSparkListener(listener)
     spark.listenerManager.register(qeListener)
     on = true

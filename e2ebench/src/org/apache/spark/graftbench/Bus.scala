@@ -3,8 +3,8 @@ package org.apache.spark.graftbench
 import org.apache.spark.SparkContext
 
 /** `LiveListenerBus.waitUntilEmpty` is private[spark]. The tracer
-  * flushes the bus at the end of every traced pass, so each pass's
-  * listener records are complete before they are read. */
+  * flushes the bus before and after every traced pass, so each pass's
+  * listener sees exactly its own events. */
 object Bus {
   def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty(60000L)
 }
