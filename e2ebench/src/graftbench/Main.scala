@@ -41,7 +41,7 @@ object Main {
       val wl: Workload = workload match {
         case "crawl" => new CrawlWorkload(spark, work, seed, hosts = 40, pages = 60,
           rounds = 1, linkrankIterations = 2)
-        case "corpus" => new CorpusWorkload(spark, work, repo, seed, docs = 2000,
+        case "corpus" => new CorpusWorkload(spark, work, repo, seed, docs = 5000,
           evals = 200)
         case other => sys.error(s"unknown workload $other")
       }
