@@ -35,6 +35,9 @@ OUT = os.path.join(ROOT, ".bench_build", "e2ebench")
 WORKLOADS = ("crawl", "corpus")
 CORES = 4
 HEAP = "2g"
+# the JVM's perf-data file would go to the system temp directory,
+# outside the checkout
+NO_PERF_DATA = "-XX:-UsePerfData"
 BUILD_TIMEOUT_S = 840
 RUN_TIMEOUT_S = 170
 # the module opens Spark needs on JDK 17 outside spark-submit
@@ -102,11 +105,11 @@ def build(jars):
     jcp = os.path.join(jars, "*")
     log = os.path.join(OUT, "build.log")
     t0 = time.time()
-    steps = [["java", "-Xss8m", "-Xmx3g", "-cp", jcp, "scala.tools.nsc.Main", "-nowarn",
+    steps = [["java", NO_PERF_DATA, "-Xss8m", "-Xmx3g", "-cp", jcp, "scala.tools.nsc.Main", "-nowarn",
               "-classpath", jcp, "-d", tmp, "@" + argfile]]
     javas = [f for f in files if f.endswith(".java")]
     if javas:
-        steps.append(["javac", "-nowarn", "-cp", tmp + os.pathsep + jcp, "-d", tmp] + javas)
+        steps.append(["javac", "-J" + NO_PERF_DATA, "-nowarn", "-cp", tmp + os.pathsep + jcp, "-d", tmp] + javas)
     with open(log, "w") as lf:
         for cmd in steps:
             rc = run_proc(cmd, lf, lf, BUILD_TIMEOUT_S)
@@ -138,7 +141,7 @@ def java(cp, main, args, timeout):
     work = os.path.join(OUT, "work", f"{os.getpid()}")
     os.makedirs(os.path.join(work, "tmp"), exist_ok=True)
     cmd = (["java"] + [x for p in OPENS for x in ("--add-opens", f"java.base/{p}=ALL-UNNAMED")] +
-           [f"-Xms{HEAP}", f"-Xmx{HEAP}", "-XX:ReservedCodeCacheSize=1g",
+           [NO_PERF_DATA, f"-Xms{HEAP}", f"-Xmx{HEAP}", "-XX:ReservedCodeCacheSize=1g",
             "-Dspark.callstack.depth=200",
             "-Dlog4j2.configurationFile=" + os.path.join(HERE, "conf", "log4j2.properties"),
             "-Djava.io.tmpdir=" + os.path.join(work, "tmp"),
