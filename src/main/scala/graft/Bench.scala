@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Driver-run benchmark: times every registered query at the given SF,
   * prints one JSON line. Per-query failures are REPORTED (name → error in
@@ -76,24 +75,10 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt.max(1)
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // the default 100-entry codegen class cache thrashes on a
-      // 148-query interleaved board: a query's generated classes are
-      // evicted between its reps, each rep loads a FRESH class whose
-      // hot loops re-earn JIT from scratch — measured 5× executor CPU
-      // on explode-heavy queries at similar wall (and a bigger
-      // ReservedCodeCacheSize alone does not help: the JIT state dies
-      // with the class, not the cache). Static conf, so set here.
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
     // SPARK_GRAFT_EXTENSIONS=1 benches the board under GraftExtensions
     // (same knob as Verify — measure what the optimizer rules change)
-    val spark = (if (sys.env.get("SPARK_GRAFT_EXTENSIONS").contains("1"))
-      builder.withExtensions(new graft.plans.GraftExtensions)
-    else builder).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(s"local[$cpus]", cpus,
+      extensions = sys.env.get("SPARK_GRAFT_EXTENSIONS").contains("1"))
     val loadBefore = loadAvg
     val statBefore = procStatJiffies
     // untimed warmup: JVM/codegen/parquet-footer costs land here, not in

@@ -79,26 +79,11 @@ object Main {
     * live session. (Verify/Bench keep their opt-IN knob unchanged so
     * driver artifacts stay comparable across rounds — there the rules
     * are the A/B subject, not the default.) */
-  private[graft] def session(): SparkSession = {
-    val b0 = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .appName("graft")
-    // this engine's surface is 140+ distinct query shapes; Spark's
-    // default 100-entry codegen class cache thrashes across them, and
-    // an evicted generated class re-earns JIT from zero on its next
-    // use (measured in Bench: ~5× executor CPU on explode-heavy
-    // queries, ~25% whole-board wall). Static conf; override via
-    // SPARK_GRAFT_CODEGEN_CACHE ("" keeps Spark's default).
-    val cc = sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "10000")
-    val b = if (cc.nonEmpty)
-      b0.config("spark.sql.codegen.cache.maxEntries", cc) else b0
-    (if (sys.env.get("SPARK_GRAFT_EXTENSIONS").contains("0")) b
-     else b.withExtensions(new graft.plans.GraftExtensions))
-      .getOrCreate()
-  }
+  private[graft] def session(): SparkSession =
+    GraftSession(sys.env.getOrElse("SPARK_MASTER", "local[*]"),
+      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "32"),
+      extensions = !sys.env.get("SPARK_GRAFT_EXTENSIONS").contains("0"),
+      appName = Some("graft"), ui = true)
 
   /** Build the URL filter chain from a conf dir (`-filters <dir>`, the
     * bin/nutch conf/ analog): each engine activates when its rule file
@@ -1448,7 +1433,6 @@ object Main {
 
   def main(args: Array[String]): Unit = {
     val spark = session()
-    spark.sparkContext.setLogLevel("WARN")
     val rc = try run(spark, args) finally spark.stop()
     if (rc != 0) sys.exit(rc)
   }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Optimization-round instrumentation: write `.explain("formatted")` of
@@ -9,8 +8,8 @@ import java.nio.file.{Files, Paths}
   *
   * Usage: runMain graft.PlanDump <sfDir> <outDir> <suffix> [q1,q2,...]
   *
-  * The session mirrors Bench's (same master/shuffle-partitions/codegen
-  * conf) so the captured plan is the one the bench actually executes.
+  * The session mirrors Bench's (same GraftSession master and shuffle
+  * width) so the captured plan is the one the bench actually executes.
   * NOTE: queries with eager segments (localCheckpoint loops) execute
   * those segments during construction — the dump costs roughly one
   * bench rep; the captured plan for such queries describes the FINAL
@@ -23,13 +22,7 @@ object PlanDump {
     val only: Option[Set[String]] =
       if (args.length > 3) Some(args(3).split(",").toSet) else None
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(s"local[$cpus]", cpus, extensions = false)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }

@@ -55,32 +55,20 @@ object Queries {
     if (df.rdd.getNumPartitions * 2 >= cores) df
     else {
       // Scale-adaptive width (r16; guide §2 "derive partitioning from
-      // input size, not a constant"): one task per
-      // spark.graft.spread.bytesPerTask of scan input (default 64 KB),
+      // input size, not a constant"): one task per 64 KB of scan input,
       // clamped to [2, cores]. A KB-scale table at full core width
       // schedules `cores` near-empty tasks whose CONCURRENCY is the
       // cost: measured on local[32], the same 32-task stage burns
       // 0.4-0.5 executor-CPU-s when ≤4 run at once but 6.5 CPU-s when
       // all 32 run together (~15× pure intra-JVM contention, bpe_encode
-      // subquery stage, StageProbe) — so width follows data mass, and
-      // the [2, cores] clamp keeps production semantics: any input
-      // past cores×64 KB (trivially true at real scale) still spreads
-      // to every core, and the guard above already no-ops when the
-      // scan splits wide naturally. Byte size comes from the optimizer
-      // stats of the scan-rooted frame (same cost class as the .rdd
-      // guard above). The graft.spread.width sys-prop is the OptAb16g
-      // measurement override (same-JVM width A/B); unset in production
-      // and the bench.
-      val width = sys.props.get("graft.spread.width").map(_.toInt)
-        .getOrElse {
-          val bpt = scala.util.Try(
-            sess.conf.get("spark.graft.spread.bytesPerTask", "65536")
-              .toLong).getOrElse(65536L).max(1L)
-          val bytes = scala.util.Try(
-            df.queryExecution.optimizedPlan.stats.sizeInBytes)
-            .getOrElse(BigInt(Long.MaxValue))
-          ((bytes + bpt - 1) / bpt).min(BigInt(cores)).max(BigInt(2)).toInt
-        }
+      // subquery stage; OPTIMIZATION_r16.md item 15) — so width follows
+      // data mass, and the [2, cores] clamp keeps production semantics:
+      // any input past cores×64 KB (trivially true at real scale) still
+      // spreads to every core, and the guard above already no-ops when
+      // the scan splits wide naturally. Byte size comes from the
+      // optimizer stats of the scan-rooted frame (same cost class as
+      // the .rdd guard above).
+      val width = graft.ops.Width.fromStats(df, 64L << 10, 2, cores)
       df.repartition(width, key)
     }
   }

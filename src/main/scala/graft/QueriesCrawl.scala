@@ -410,9 +410,10 @@ object QueriesCrawl {
         // (explicit COUNT, as a column-only repartition would coalesce
         // back to 1) and pin the normalized frame so the chain runs
         // once (the ccnet 2-consumer pin; rows stored are
-        // output-shaped). StageProbe: 2× 1-task 0.86 CPU-s stages →
-        // wide; bench-subset wall below. Row-identical by
-        // construction: repartition + pin change no expression.
+        // output-shaped). Measured: 2× 1-task 0.86 CPU-s stages →
+        // wide; bench-subset wall below (OPTIMIZATION_r16.md item 24).
+        // Row-identical by construction: repartition + pin change no
+        // expression.
         .repartition(s.sparkContext.defaultParallelism, col("vid"))
         .withColumn("normalized",
           graft.functions.Urls.normalizeCol(col("url")))

@@ -154,22 +154,15 @@ object QueriesGraph {
     * are deduped per (src domain, dst) with a deterministic keeper
     * (lowest src). Graph: lineitem edges modded to ~500 nodes;
     * domain = src % 50. */
-  /** The linkrank plan, parameterized for tools.LinkrankBench's
-    * within-one-JVM variant comparison. `finalEager` materializes the
-    * final node table (localCheckpoint) so the edge cache can be
-    * released before returning; `cacheEdges` toggles the explicit edge
-    * cache vs relying on AQE exchange reuse.
-    *
-    * Measured (sf0.1, local[32], 3 reps in one JVM — LinkrankBench):
-    * lazy+nocache 2.5 s < lazy+cache 3.0 s < eager+cache 4.2-5.4 s ≈
-    * eager+nocache. The final eager checkpoint costs ~1.5-2 s (it adds
-    * a full materialize-then-rescan of the result) and the edge cache
-    * loses ~0.5 s to AQE's ReusedExchange, which already shares the
-    * edge shuffle across the loop's joins inside one job. The shipped
-    * query is therefore lazy+nocache — which also removes the block-
-    * cache leak the r3 eager+unpersist dance existed to prevent. */
+  /** The linkrank plan. `finalEager` materializes the final node table
+    * (localCheckpoint) so the edge cache can be released before
+    * returning — for library callers that compose queries without
+    * clearing the block cache (CacheHygieneSpec). The Q surface stays
+    * lazy: an in-JVM A/B (sf0.1, local[32], 3 reps; STATUS.md §2.10)
+    * measured the final eager checkpoint at +1.5-2 s, a full
+    * materialize-then-rescan of the result. */
   private[graft] def buildLinkrank(s: SparkSession, dir: String,
-      finalEager: Boolean, cacheEdges: Boolean): DataFrame = {
+      finalEager: Boolean): DataFrame = {
     val li = t(s, dir, "lineitem")
     val rawEdges = li.select(
       (col("l_orderkey") % 500).as("src"),
@@ -185,29 +178,29 @@ object QueriesGraph {
     // agg, not three joins. (No broadcast hints: at real scale BOTH
     // sides are |V|/|E|-sized — shuffle joins are the right shape.)
     val outDeg = rawEdges.groupBy("src").agg(count(lit(1)).as("out_deg"))
-    val edges0 = rawEdges
+    val edges = rawEdges
       .withColumn("rn", row_number().over(wDom))
       .filter(col("rn") === 1).drop("rn")
       .join(outDeg, "src")
-    val edges = if (cacheEdges) edges0.cache() else edges0
+      .cache()
     val nodes0 = rawEdges.select(col("src").as("url"))
       .union(rawEdges.select(col("dst").as("url")))
       .distinct()
       .withColumn("score", lit(1.0))
-    // r16 NEGATIVE RESULT (kept as the buildHits contrast): rewriting
-    // this loop onto src-keyed score frames (the buildHits r16 shape —
-    // per-iteration left join against the src set instead of nodes0,
-    // one final nodes0 join) measured WORSE in the paired in-JVM A/B
-    // (OptAb16: cpu 2.5 → 32 s raw, still 2.5 → 6.8 s after pinning
-    // the src set as a checkpoint leaf; wall ~equal). This loop is
-    // LAZY between its 5-iteration checkpoints, and Spark reuses the
-    // one nodes0 exchange across all five nested references — the
-    // src-keyed frame defeated that reuse (its subtree is rewritten
-    // per nesting level by self-join deduplication, so nothing
-    // canonicalizes equal), turning a shared shuffle into per-level
-    // recompute. buildHits wins from the same idea only because its
-    // half-steps are EAGER checkpoints — there is no cross-level plan
-    // sharing to lose. Shipped: the r15 nodes0 form, unchanged.
+    // r16 NEGATIVE RESULT (kept as the buildHits contrast): rewriting this
+    // loop onto src-keyed score frames (the buildHits r16 shape —
+    // per-iteration left join against the src set instead of nodes0, one
+    // final nodes0 join) measured WORSE in the paired in-JVM A/B (cpu 2.5 →
+    // 32 s raw, still 2.5 → 6.8 s after pinning the src set as a checkpoint
+    // leaf; wall ~equal; OPTIMIZATION_r16.md item 2). This loop is LAZY
+    // between its 5-iteration checkpoints, and Spark reuses the one nodes0
+    // exchange across all five nested references — the src-keyed frame
+    // defeated that reuse (its subtree is rewritten per nesting level by
+    // self-join deduplication, so nothing canonicalizes equal), turning a
+    // shared shuffle into per-level recompute. buildHits wins from the same
+    // idea only because its half-steps are EAGER checkpoints — there is no
+    // cross-level plan sharing to lose. Shipped: the r15 nodes0 form,
+    // unchanged.
     var nodes = nodes0
     var deadNodes: Option[org.apache.spark.sql.DataFrame] = None
     // localCheckpoint every 5th iteration: truncates lineage so the
@@ -244,20 +237,20 @@ object QueriesGraph {
       // cache — callers that never clear the block cache (a conductor
       // composing queries) would otherwise leak it (VERDICT r2 #5)
       val result = plan.localCheckpoint()
-      if (cacheEdges) edges.unpersist()
+      edges.unpersist()
       result
     } else plan
   }
 
   val linkrank = Q(
     "linkrank",
-    // cacheEdges: the loop-invariant edge table feeds all 10
-    // iterations — uncached, every post-checkpoint iteration's lineage
+    // buildLinkrank caches the loop-invariant edge table: it feeds all
+    // 10 iterations — uncached, every post-checkpoint iteration's lineage
     // re-embeds the scan+distinct+window subtree (measured 7.0 s warm
     // vs 4.0 s cached at sf0.1). The Q surface's only drivers (Bench/
     // Verify) clear the block cache per query; paths that compose
     // queries without clearing use finalEager=true, which unpersists.
-    (s, dir) => buildLinkrank(s, dir, finalEager = false, cacheEdges = true),
+    (s, dir) => buildLinkrank(s, dir, finalEager = false),
     Some {
       val base = """
       WITH e0 AS (SELECT DISTINCT (l_orderkey % 500) AS src,
@@ -320,11 +313,11 @@ object QueriesGraph {
     // the scan+distinct shuffle (measured 8.4 s → ~3 s at sf0.1)
     // r16: pinned with EAGER localCheckpoint, not .cache() — the
     // columnar cache's compression build + 20 columnar re-reads cost
-    // ~10 executor-CPU-s at sf0.1 (StageProbe put ~11 of the query's
-    // ~16 CPU-s in the e/nodes builds; OptAb16l: CPU 12.1 → 1.9 s,
-    // 6.4×, wall flat, referee row-identical). Raw checkpoint blocks
-    // trade ~2-4× more pinned bytes for that CPU — the same measured
-    // call as ccnet_buckets' r16 pin.
+    // ~10 executor-CPU-s at sf0.1 (~11 of the query's ~16 CPU-s sat in
+    // the e/nodes builds; the paired A/B gave CPU 12.1 → 1.9 s, 6.4×,
+    // wall flat, row-identical; OPTIMIZATION_r16.md item 21). Raw
+    // checkpoint blocks trade ~2-4× more pinned bytes for that CPU —
+    // the same measured call as ccnet_buckets' r16 pin.
     val e = edges.distinct().localCheckpoint()
     val nodes = e.select(col("src").as("url"))
       .union(e.select(col("dst").as("url"))).distinct().localCheckpoint()

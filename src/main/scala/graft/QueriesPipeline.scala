@@ -828,10 +828,11 @@ object QueriesPipeline {
           col("g"))
         // r16: the ccnetBucketAssign localCheckpoint pin was TRIED here
         // too (same three-consumer shape) and reverted on measurement:
-        // OptAb16b wall 0.432 pinned vs 0.395 unpinned, CPU identical
-        // (0.241) — recomputing the scalar explode three times is
-        // cheaper than storing the occurrence rows (ccnet wins because
-        // its frame carries lang and feeds the wider bucket join).
+        // wall 0.432 pinned vs 0.395 unpinned, CPU identical (0.241;
+        // OPTIMIZATION_r16.md item 9) — recomputing the scalar explode
+        // three times is cheaper than storing the occurrence rows (ccnet
+        // wins because its frame carries lang and feeds the wider bucket
+        // join).
       val c1 = bi.groupBy("w").agg(count(lit(1)).as("cw"))
       val c2 = bi.groupBy("g").agg(count(lit(1)).as("cg"))
       bi.join(c2, "g").join(c1, "w")
@@ -2094,19 +2095,11 @@ object QueriesPipeline {
       LIMIT 50"""
     })
 
-  /** Board/oracle merge depth. Overridable via SPARK_GRAFT_BPE_K:
-    * BOTH surfaces read this once (the oracle SQL unrolls the same K),
-    * so correctness stays checkable at any depth a DuckDB unroll can
-    * stomach; deep ladders (K=64+) run the Scala side through
-    * [[bpeLoop]]'s k parameter (BpeDepthProbe / BpeDsirSpec A/B). */
-  private[graft] val BPE_K: Int = {
-    val raw = sys.env.getOrElse("SPARK_GRAFT_BPE_K", "6")
-    val k = raw.toIntOption.getOrElse(throw new IllegalArgumentException(
-      s"SPARK_GRAFT_BPE_K must be an integer, got '$raw'"))
-    require(k >= 1 && k <= 128, s"SPARK_GRAFT_BPE_K must be in [1, 128]" +
-      s" — the DuckDB oracle unrolls 2K CTE rounds — got $k")
-    k
-  }
+  /** Board/oracle merge depth: BOTH surfaces read this one constant
+    * (the oracle SQL unrolls the same K rounds). Deeper ladders run
+    * the Scala side through [[bpeLoop]]'s `depth` parameter (the `bpe`
+    * verb's `-merges`, BpeDsirSpec). */
+  private[graft] val BPE_K: Int = 6
 
   /** BPE tokenizer training (Sennrich, Haddow & Birch, ACL 2016) as
     * DataFrame algebra: learn the first K merge rules over the corpus
@@ -2140,14 +2133,7 @@ object QueriesPipeline {
     * pairwise token-disjoint top pairs are elected and applied in ONE
     * sweep (see [[bpeLoop]]'s exactness argument). B=1 is r14's
     * one-merge-per-pass behavior. */
-  private[graft] val BPE_B: Int = {
-    val raw = sys.env.getOrElse("SPARK_GRAFT_BPE_B", "8")
-    val b = raw.toIntOption.getOrElse(throw new IllegalArgumentException(
-      s"SPARK_GRAFT_BPE_B must be an integer, got '$raw'"))
-    require(b >= 1 && b <= 1024,
-      s"SPARK_GRAFT_BPE_B must be in [1, 1024], got $b")
-    b
-  }
+  private[graft] val BPE_B: Int = 8
 
   /** The shared BPE training loop over a (word, freq) vocabulary:
     * elect-most-frequent-pair + greedy left-to-right merge until

@@ -218,10 +218,10 @@ object QueriesText {
           (0 until MINHASH_H).map(i =>
             col("p.ms").getItem(i).as(s"m$i")): _*)
         // pin strategy MEASURED (r16): .cache() beats localCheckpoint
-        // here (wall 1.11/CPU 7.6 vs 1.24/8.1 in OptAb16i) — the
-        // wide hbs arrays compress well columnar and the 4 consumers
-        // re-read them, the opposite trade from buildHits' narrow
-        // 2-long edge rows where the checkpoint won 6.4× CPU.
+        // here (wall 1.11/CPU 7.6 vs 1.24/8.1; OPTIMIZATION_r16.md
+        // item 22) — the wide hbs arrays compress well columnar and the
+        // 4 consumers re-read them, the opposite trade from buildHits'
+        // narrow 2-long edge rows where the checkpoint won 6.4× CPU.
         .cache()
       val nBands = MINHASH_H / MINHASH_BAND
       val bandCols = (0 until nBands).map { b =>
@@ -257,8 +257,8 @@ object QueriesText {
       // pair rows (two ids + two ints each) to full core width costs a
       // KB-scale exchange and restores the verify parallelism; at real
       // scale pair count >> cores, so full width is the right target
-      // there too (StageProbe: stage cpu 20.7 over 10 tasks = 2.1
-      // s/task serialized; 0.73 s/task at 32).
+      // there too (stage cpu 20.7 over 10 tasks = 2.1 s/task
+      // serialized; 0.73 s/task at 32; OPTIMIZATION_r16.md item 16).
       candSized.repartition(s.sparkContext.defaultParallelism)
         .join(sa, "a_id").join(sb, "b_id")
         // merge-count over the pre-sorted per-doc hash arrays — the

@@ -237,18 +237,10 @@ object ScaleProbe {
       "SPARK_GRAFT_SCALE_QUERIES is set but names no series")
     val names = explicitNames.getOrElse(defaultQueries)
     val out = args.headOption.getOrElse("SCALE_r9.json")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // 148 distinct query shapes thrash the default 100-entry
-      // codegen class cache (see Bench.scala / Main.session)
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      // NOTE: spark.driver.memory is NOT set here — in local mode the
-      // driver JVM already exists, so the conf would be a silent no-op;
-      // the heap comes from build.sbt's forked-JVM -Xmx
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // spark.driver.memory is NOT set: in local mode the driver JVM
+    // already exists, so the conf would be a silent no-op; the heap
+    // comes from build.sbt's forked-JVM -Xmx
+    val spark = GraftSession(s"local[$cpus]", cpus, extensions = false)
     // SPARK_GRAFT_SCALE_PIN_SMJ=1 disables broadcast joins for the
     // whole probe (explicit broadcast() hints still honored): the
     // documented remedy when a decade pair is a plan transition —

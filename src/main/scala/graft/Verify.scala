@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,22 +9,12 @@ object Verify {
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // 148 distinct query shapes thrash the default 100-entry
-      // codegen class cache (see Bench.scala / Main.session)
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
     // SPARK_GRAFT_EXTENSIONS=1: run the whole board under
     // GraftExtensions (incl. the window-agg-to-join rewrite) — the
     // dogfood proof that the optimizer rules are answer-preserving on
     // every oracle-checked query, not only on their own spec
-    val spark = (if (sys.env.get("SPARK_GRAFT_EXTENSIONS").contains("1"))
-      builder.withExtensions(new graft.plans.GraftExtensions)
-    else builder).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(s"local[$cpus]", cpus,
+      extensions = sys.env.get("SPARK_GRAFT_EXTENSIONS").contains("1"))
     new java.io.File(outDir).mkdirs()
     // per-query stdout record (r15, verdict Next #4): two of the last
     // three driver-side CORRECTNESS artifacts arrived as empty {}

@@ -10,7 +10,7 @@ object HashOps {
 
   // MessageDigest is stateful; one instance per executor thread
   // (getInstance costs a provider lookup per call — measured 204 vs
-  // 143 ns on 5-byte inputs, graft.tools.Md5Bench). digest() resets
+  // 143 ns on 5-byte inputs; OPTIMIZATION_r15.md §3b). digest() resets
   // the instance, so reuse is safe.
   private val mdLocal = new ThreadLocal[java.security.MessageDigest] {
     override def initialValue(): java.security.MessageDigest =
@@ -27,7 +27,8 @@ object HashOps {
     * aligned). A hand-rolled RFC 1321 core was tried in r15 and
     * REJECTED on measurement: HotSpot intrinsifies MD5's compression
     * (md5_implCompress), so the JDK path wins — 135 vs 205 ns/call on
-    * 5-byte shingles, 242 vs 456 on 100-byte windows (Md5Bench). */
+    * 5-byte shingles, 242 vs 456 on 100-byte windows
+    * (OPTIMIZATION_r15.md §3b). */
   def md5Long(s: UTF8String): Long = {
     val d = mdLocal.get()
     s.getBaseObject match {

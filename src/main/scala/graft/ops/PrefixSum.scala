@@ -85,31 +85,19 @@ object PrefixSum {
     // Scale-adaptive width (r16, guide §2 — same finding as spread():
     // a range stage of `maxParts` CONCURRENT near-empty tasks burns
     // ~10× its real CPU in intra-JVM contention; asof_join's two scan
-    // stages cost 8.1+3.1 CPU-s at parts=32 vs 0.94+0.20 at 8,
-    // OptAb16h wall 2.38→1.20). One range partition per
-    // spark.graft.prefixsum.bytesPerTask of input (default 512 KB,
-    // optimizer stats of the incoming frame), clamped to
-    // [max(2, maxParts/4), maxParts]: the FLOOR keeps a mis-estimated
-    // big input within 4× of the session's tuned width (range
-    // partitions cap the scan's parallelism, so an underestimate at
-    // real scale must not collapse it), the CAP preserves the
-    // documented contract that partitions fit executor memory at
-    // scale. Result is parts-invariant by construction (OptAb16h
-    // referees parts 32/16/8/4 row-identical on asof_join,
-    // curriculum_order, pack_chunks). The graft.prefixsum.parts
-    // sys-prop is the measurement override (same-JVM parts A/B).
-    val parts = sys.props.get("graft.prefixsum.parts").map(_.toInt)
-      .getOrElse {
-        val bpt = scala.util.Try(
-          s.conf.get("spark.graft.prefixsum.bytesPerTask", "524288")
-            .toLong).getOrElse(524288L).max(1L)
-        val bytes = scala.util.Try(
-          df.queryExecution.optimizedPlan.stats.sizeInBytes)
-          .getOrElse(BigInt(Long.MaxValue))
-        ((bytes + bpt - 1) / bpt)
-          .min(BigInt(maxParts))
-          .max(BigInt(math.max(2, maxParts / 4))).toInt
-      }
+    // stages cost 8.1+3.1 CPU-s at parts=32 vs 0.94+0.20 at 8, wall
+    // 2.38→1.20; OPTIMIZATION_r16.md item 17). One range partition per
+    // 512 KB of input (optimizer stats of the incoming frame), clamped
+    // to [max(2, maxParts/4), maxParts]: the FLOOR keeps a
+    // mis-estimated big input within 4× of the session's tuned width
+    // (range partitions cap the scan's parallelism, so an
+    // underestimate at real scale must not collapse it), the CAP
+    // preserves the documented contract that partitions fit executor
+    // memory at scale. Result is parts-invariant by construction (the
+    // r16 parts sweep 32/16/8/4 was row-identical on asof_join,
+    // curriculum_order and pack_chunks).
+    val parts = Width.fromStats(df, 512L << 10, math.max(2, maxParts / 4),
+      maxParts)
     // working-column names must not clobber caller columns: salt the
     // fixed prefix until it collides with nothing (incl. `out`)
     val taken = df.columns.toSet + out

@@ -89,10 +89,11 @@ object RangeJoin {
     // REPARTITION_BY_NUM on the cell key. The equi-join's cost is the
     // within-cell candidate EXPANSION + exact re-check, not its input
     // bytes — AQE's byte-based coalescing sees a KB-scale exchange and
-    // ran the whole join in ONE task at sf0.1 (StageProbe: a single
-    // 1.83 CPU-s / 1.83 s stage = the entire query wall). The explicit
-    // count replaces the coalescible ENSURE_REQUIREMENTS exchange (no
-    // extra shuffle) and is what pre-AQE Spark would plan:
+    // ran the whole join in ONE task at sf0.1 (a single 1.83 CPU-s /
+    // 1.83 s stage = the entire query wall; OPTIMIZATION_r16.md item
+    // 23). The explicit count replaces the coalescible
+    // ENSURE_REQUIREMENTS exchange (no extra shuffle) and is what
+    // pre-AQE Spark would plan:
     // max(defaultParallelism, spark.sql.shuffle.partitions), both
     // cluster-tuned — not a local[32] constant. The answer is
     // partitioning-invariant (hash equi-join + exact re-check;

@@ -9,8 +9,9 @@ import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.IntegerType
 
 /** The engine's `SparkSessionExtensions` hook (SURVEY §7.3): what a
-  * deployment passes to `SparkSession.builder().withExtensions(...)`
-  * (or `spark.sql.extensions=graft.plans.GraftExtensions`).
+  * deployment passes to its session builder's `withExtensions(...)`
+  * (as `graft.GraftSession` does) or names in
+  * `spark.sql.extensions=graft.plans.GraftExtensions`.
   *
   * Registers:
   *  - `bounded_sorted_list(expr, k)` as a SQL function, so the O(k)

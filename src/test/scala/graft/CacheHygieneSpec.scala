@@ -19,8 +19,7 @@ class CacheHygieneSpec extends AnyFunSuite with SparkSuite {
   test("composing linkrank + hits with finalEager leaks zero cached plans") {
     spark.catalog.clearCache()
     assert(ColumnBridge.cacheIsEmpty(spark))
-    val lr = QueriesGraph.buildLinkrank(spark, dir,
-      finalEager = true, cacheEdges = true)
+    val lr = QueriesGraph.buildLinkrank(spark, dir, finalEager = true)
     val hits = QueriesGraph.buildHits(
       Queries.t(spark, dir, "lineitem").selectExpr(
         "l_orderkey % 500 as src", "l_partkey % 500 + 500 as dst"),
@@ -45,10 +44,11 @@ class CacheHygieneSpec extends AnyFunSuite with SparkSuite {
     assert(ColumnBridge.cacheIsEmpty(spark))
     // hits_scores pins its loop-invariant frames with EAGER
     // localCheckpoint since r16 (measured: the columnar cache build
-    // cost ~10 CPU-s — OptAb16l): its loop state lives in RDD storage
-    // blocks, freed by the ContextCleaner once the frames are GC'd
-    // (exactly like the per-half-step loop checkpoints since r13) or
-    // eagerly by the finalEager hook — NOT in the CacheManager.
+    // cost ~10 CPU-s — OPTIMIZATION_r16.md item 21): its loop state
+    // lives in RDD storage blocks, freed by the ContextCleaner once the
+    // frames are GC'd (exactly like the per-half-step loop checkpoints
+    // since r13) or eagerly by the finalEager hook — NOT in the
+    // CacheManager.
     val hits = Queries.byName("hits_scores").build(spark, dir)
     assert(hits.count() > 0)
     assert(ColumnBridge.cacheIsEmpty(spark),

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -13,22 +12,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * function resolves, and the keeper-election rewrite actually fires
   * on a naturally-phrased query. Builds (and fully tears down) its own
   * session, because extensions bind at session construction. */
-class ProductSessionSpec extends AnyFunSuite {
-
-  private def withProductSession[A](f: SparkSession => A): A = {
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val spark = Main.session()
-    try f(spark)
-    finally {
-      spark.stop()
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
-    }
-  }
+class ProductSessionSpec extends AnyFunSuite with OwnSessions {
 
   test("product session registers bounded_sorted_list in SQL") {
-    withProductSession { spark =>
+    withOwnSession(Main.session()) { spark =>
       import spark.implicits._
       Seq((0, 5), (0, 3), (0, 9), (1, 2)).toDF("k", "v")
         .createOrReplaceTempView("t")
@@ -40,7 +27,7 @@ class ProductSessionSpec extends AnyFunSuite {
   }
 
   test("product session rewrites keeper election to an aggregate") {
-    withProductSession { spark =>
+    withOwnSession(Main.session()) { spark =>
       import spark.implicits._
       val df = Seq(("a", 3L), ("a", 1L), ("b", 7L), ("b", 9L))
         .toDF("k", "v")

@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -8,25 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * surface of bounded_sorted_list and the optimizer rewrite of the
   * naive collect_list-sort-slice phrasing into the O(k) aggregate.
   * Builds its OWN session (extensions bind at session construction). */
-class GraftExtensionsSpec extends AnyFunSuite {
-
-  private def withExtendedSession[A](f: SparkSession => A): A = {
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .appName(getClass.getSimpleName)
-      .getOrCreate()
-    try f(spark)
-    finally {
-      spark.stop()
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
-    }
-  }
+class GraftExtensionsSpec extends AnyFunSuite with graft.OwnSessions {
 
   test("rule rewrites slice(array_sort(collect_list)) to bounded_sorted_list") {
     withExtendedSession { spark =>

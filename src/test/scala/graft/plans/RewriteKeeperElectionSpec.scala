@@ -11,25 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * ties, nulls, desc NaN doubles, Long.MinValue under desc), Window-
   * free in the optimized plan, and left alone whenever the rewrite
   * would be unsound. Own session — extensions bind at construction. */
-class RewriteKeeperElectionSpec extends AnyFunSuite {
-
-  private def withExtendedSession[A](f: SparkSession => A): A = {
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .appName(getClass.getSimpleName)
-      .getOrCreate()
-    try f(spark)
-    finally {
-      spark.stop()
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
-    }
-  }
+class RewriteKeeperElectionSpec extends AnyFunSuite with graft.OwnSessions {
 
   private def optimized(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.optimizedPlan.toString
@@ -299,21 +281,11 @@ class RewriteKeeperElectionSpec extends AnyFunSuite {
       }
     assert(!mergePlan.contains("Window"), mergePlan)
     assert(!corpusPlan.contains("Window"), corpusPlan)
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val plain = SparkSession.builder()
-      .master("local[4]").config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", "false")
-      .appName("plain").getOrCreate()
-    try {
+    withPlainSession { plain =>
       assert(dedupMergeWindowed(plain).collect().map(_.toSeq).toSet
         == extMerge)
       assert(corpusStage1Windowed(plain).collect().map(_.toSeq).toSet
         == extCorpus)
-    } finally {
-      plain.stop()
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
     }
   }
 }

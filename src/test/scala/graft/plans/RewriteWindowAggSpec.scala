@@ -11,25 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * never touched when order, frames, row-identity functions, or
   * nondeterminism make the rewrite unsound. Own session — extensions
   * bind at construction. */
-class RewriteWindowAggSpec extends AnyFunSuite {
-
-  private def withExtendedSession[A](f: SparkSession => A): A = {
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .appName(getClass.getSimpleName)
-      .getOrCreate()
-    try f(spark)
-    finally {
-      spark.stop()
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
-    }
-  }
+class RewriteWindowAggSpec extends AnyFunSuite with graft.OwnSessions {
 
   private def optimized(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.optimizedPlan.toString
@@ -171,18 +153,7 @@ class RewriteWindowAggSpec extends AnyFunSuite {
     }
     assert(!extPlan.contains("Window"), extPlan)
     // plain session: same rows, window plan
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val plain = SparkSession.builder()
-      .master("local[4]").config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", "false")
-      .appName("plain").getOrCreate()
-    try assert(rows(plain) == extRows)
-    finally {
-      plain.stop()
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
-    }
+    withPlainSession { plain => assert(rows(plain) == extRows) }
   }
 
   test("the rewritten plan composes: filter-to-keeper (the dedup " +
