@@ -386,13 +386,10 @@ object Main {
               topN = optL(rest, "-topN", Long.MaxValue),
               startTime = now0,
               pacer = Pacer.Config(serverDelayMs = optL(rest, "-delay", 0)),
-              // bucketed is the default; `-buckets 0` opts out to
-              // the plain layout, `-buckets N` sizes the layout
-              buckets = opt(rest, "-buckets").map(_.toInt) match {
-                case Some(0) => None
-                case Some(n) => Some(n)
-                case None => Some(Crawl.DefaultBuckets)
-              },
+              // bucketed is the default, sized by the session on a
+              // fresh root; `-buckets 0` opts out to the plain layout,
+              // `-buckets N` sizes the layout
+              buckets = opt(rest, "-buckets").map(_.toInt),
               storeResponseTime = rest.contains("-responsetime"))
             val summary =
               if (rest.contains("-stream") && nRounds >= 1 &&
@@ -882,6 +879,7 @@ object Main {
         }
         var contamDropped = 0L
         var piiCache: Option[org.apache.spark.sql.DataFrame] = None
+        var contamCache: Option[org.apache.spark.sql.DataFrame] = None
         opt(rest, "-decontaminate").foreach { benchDir =>
           // Benchmark decontamination gate (the decontaminate query's
           // relation, applied): drop any kept doc sharing a word
@@ -916,11 +914,15 @@ object Main {
               require(benchDocs.columns.contains("text"),
                 s"-decontaminate $benchDir needs a `text` column, has " +
                   benchDocs.columns.mkString(", "))
+              // persisted for the census and the join; every later
+              // pass over `kept` reads it too, so it is freed with the
+              // verb's other caches
               val bench = QueriesPipeline.wordGrams8(
                   benchDocs
                     .select(monotonically_increasing_id().as("doc_id"),
                       col("text")), rawNorm)
-                .select(col("g")).distinct()
+                .select(col("g")).distinct().persist()
+              contamCache = Some(bench)
               QueriesPipeline.contaminationHits(
                 QueriesPipeline.wordGrams8(
                   kept.select(col("doc_id"), col("text")), rawNorm), bench)
@@ -1055,61 +1057,45 @@ object Main {
             .coalesce(1).write.mode("overwrite")
             .parquet(s"$outDir/epochs")
         }
-        val metrics = new Metrics.Table(spark, s"$outDir/metrics")
         val reasons = labeled.groupBy("drop_reason").count()
           .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-        metrics.append(Metrics.gauge(spark, 0, "corpus", "docs_in",
-          reasons.values.sum))
+        // every gauge is a driver-side value: gather them, append once
+        val gauges = Seq.newBuilder[(String, Long)]
+        gauges += "docs_in" -> reasons.values.sum
         reasons.foreach { case (reason, n) =>
-          metrics.append(Metrics.gauge(spark, 0, "corpus",
-            if (reason == "keep") "docs_kept"
-            else s"dropped_$reason",
-            if (reason == "keep")
-              n - substrEmptied - mixtureDropped - ccnetDropped -
-                dsirDropped - contamDropped - classifyDropped
-            else n))
+          gauges += (
+            if (reason == "keep") "docs_kept" -> (n - substrEmptied -
+              mixtureDropped - ccnetDropped - dsirDropped - contamDropped -
+              classifyDropped)
+            else s"dropped_$reason" -> n)
         }
         if (rest.contains("-exactsubstr")) {
-          metrics.append(Metrics.gauge(spark, 0, "corpus",
-            "exactsubstr_tokens_removed", spansRemoved))
-          metrics.append(Metrics.gauge(spark, 0, "corpus",
-            "dropped_exactsubstr_empty", substrEmptied))
+          gauges += "exactsubstr_tokens_removed" -> spansRemoved
+          gauges += "dropped_exactsubstr_empty" -> substrEmptied
         }
-        if (rest.contains("-temperature")) {
-          metrics.append(Metrics.gauge(spark, 0, "corpus",
-            "dropped_mixture", mixtureDropped))
-        }
-        if (rest.contains("-ccnet")) {
-          metrics.append(Metrics.gauge(spark, 0, "corpus",
-            "dropped_ccnet", ccnetDropped))
-        }
-        if (rest.contains("-dsir")) {
-          metrics.append(Metrics.gauge(spark, 0, "corpus",
-            "dropped_dsir", dsirDropped))
-        }
-        if (opt(rest, "-decontaminate").isDefined) {
-          metrics.append(Metrics.gauge(spark, 0, "corpus",
-            "dropped_contaminated", contamDropped))
-        }
-        if (rest.contains("-classify")) {
-          metrics.append(Metrics.gauge(spark, 0, "corpus",
-            "dropped_classify", classifyDropped))
-        }
-        if (rest.contains("-pii")) {
-          // a TRANSFORM gauge, not a drop reason: how many PII spans
-          // were redacted in the exported text (docs are all kept)
-          metrics.append(Metrics.gauge(spark, 0, "corpus",
-            "pii_redacted", piiRedacted))
-        }
-        if (rest.contains("-split")) {
+        if (rest.contains("-temperature"))
+          gauges += "dropped_mixture" -> mixtureDropped
+        if (rest.contains("-ccnet")) gauges += "dropped_ccnet" -> ccnetDropped
+        if (rest.contains("-dsir")) gauges += "dropped_dsir" -> dsirDropped
+        if (opt(rest, "-decontaminate").isDefined)
+          gauges += "dropped_contaminated" -> contamDropped
+        if (rest.contains("-classify"))
+          gauges += "dropped_classify" -> classifyDropped
+        // a TRANSFORM gauge, not a drop reason: how many PII spans were
+        // redacted in the exported text (docs are all kept)
+        if (rest.contains("-pii")) gauges += "pii_redacted" -> piiRedacted
+        if (rest.contains("-split"))
           corpus.groupBy("split").count().collect().foreach(r =>
-            metrics.append(Metrics.gauge(spark, 0, "corpus",
-              s"split_${r.getString(0)}", r.getLong(1))))
-        }
+            gauges += s"split_${r.getString(0)}" -> r.getLong(1))
+        new Metrics.Table(spark, s"$outDir/metrics").append(
+          gauges.result().map { case (name, v) =>
+            Metrics.MetricRow(0, "corpus", name, v)
+          })
         labeled.unpersist()
         substrCache.foreach(_.unpersist())
         dsirCache.foreach(_.unpersist())
         piiCache.foreach(_.unpersist())
+        contamCache.foreach(_.unpersist())
         println(s"corpus: ${reasons.getOrElse("keep", 0L)} docs kept of " +
           s"${reasons.values.sum} into $shards shards " +
           reasons.toSeq.sortBy(_._1)

@@ -273,7 +273,13 @@ object QueriesPipeline {
     * (grams are near-unique by construction), and the only shape that
     * survives a corpus-sized benchmark. Shared by the `decontaminate`
     * query (auto), `decontaminate_shuffle` (forced big regime), and
-    * the `corpus -decontaminate` export gate. */
+    * the `corpus -decontaminate` export gate.
+    *
+    * The census and the join both read `benchGrams`. A caller that
+    * wants the gram set computed once passes it persisted and OWNS
+    * that cache: it unpersists after the last action over the result
+    * (earlier only buys a silent recompute), so no call leaves blocks
+    * behind for the next equal plan to re-cache. */
   private[graft] def contaminationHits(
       corpusGrams: org.apache.spark.sql.DataFrame,
       benchGrams: org.apache.spark.sql.DataFrame,
@@ -281,15 +287,11 @@ object QueriesPipeline {
       : org.apache.spark.sql.DataFrame = {
     // limit <= 0 pins the shuffle regime outright — the census could
     // not change the decision, so don't pay a full bench-gram pass for
-    // it; otherwise PERSIST the bench side so the one-aggregate census
-    // and the join read the same blocks instead of computing the gram
-    // set twice (callers clear the cache after the query's action)
+    // it
     val bench =
-      if (broadcastLimit <= 0L) benchGrams
-      else {
-        val cached = benchGrams.persist()
-        if (cached.count() <= broadcastLimit) broadcast(cached) else cached
-      }
+      if (broadcastLimit > 0L && benchGrams.count() <= broadcastLimit)
+        broadcast(benchGrams)
+      else benchGrams
     corpusGrams.join(bench, "g")
       .groupBy("doc_id")
       .agg(countDistinct(col("g")).as("n_shared_grams"))
@@ -302,9 +304,13 @@ object QueriesPipeline {
       val grams = wordGrams8(
         spread(t(s, dir, "documents"), col("doc_id"))
           .select(col("doc_id"), col("text")), normalize)
+      // the Q surface's caches are cleared by its caller (Bench and
+      // Verify clear them per query); the forced shuffle regime runs no
+      // census, so it reads the gram set once and needs none
       val bench =
         grams.where(col("doc_id") % 25 === 0).select(col("g")).distinct()
-      contaminationHits(grams, bench, broadcastLimit)
+      contaminationHits(grams,
+        if (broadcastLimit > 0L) bench.persist() else bench, broadcastLimit)
     },
     Some {
       val words = if (normalize) sqlNormWords("text")

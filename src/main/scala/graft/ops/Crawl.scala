@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 
 import graft.crawl.{FetchSchedule, UpdateDb}
 import graft.plugins.Extensions
@@ -16,10 +16,10 @@ import graft.tables.{CrawlDbTable, HostDbTable, LinkDbTable, Segment}
   * under `root`. */
 object Crawl {
 
-  /** Default bucket count for the conductor's CrawlDb. Matches the
-    * local shuffle parallelism; a 1000-executor deployment would size
-    * it to its target per-bucket file size (the layout is rewritten
-    * every generation anyway, so it can be raised at any install). */
+  /** Cap of the bucket count a fresh root gets when none was asked for
+    * ([[Width.fromSlots]]: one bucket per task slot, at most this). A
+    * 1000-executor deployment would size the layout to its target
+    * per-bucket file size with an explicit count instead. */
   val DefaultBuckets = 32
 
   final case class Config(
@@ -52,11 +52,14 @@ object Crawl {
       // THE DEFAULT since r9: every url-keyed join reads the db side
       // Exchange-free (the co-located-join layout for a CrawlDb that
       // outweighs its per-round segments by orders of magnitude;
-      // byte-identical output A/B-proven in CrawlRoundSpec). None
-      // opts out to the plain generation-swapped layout. An existing
-      // plain crawldb migrates automatically on the next bucketed run
-      // (one-time rewrite into generation 1).
-      buckets: Option[Int] = Some(Crawl.DefaultBuckets),
+      // byte-identical output A/B-proven in CrawlRoundSpec). The
+      // field mirrors the crawl verb's `-buckets`: None (not asked)
+      // sizes a fresh root by the session (Width.fromSlots), Some(n)
+      // gives it n buckets, Some(0) opts out to the plain
+      // generation-swapped layout. An existing root keeps its count.
+      // An existing plain crawldb migrates automatically on the next
+      // bucketed run (one-time rewrite into generation 1).
+      buckets: Option[Int] = None,
       // record per-URL protocol elapsed ms (_rs_) so the metrics table
       // carries real fetch_latency_* percentiles (http.store.responsetime)
       storeResponseTime: Boolean = false)
@@ -84,11 +87,17 @@ object Crawl {
       require(!java.nio.file.Files.exists(
         java.nio.file.Paths.get(root, db, "GENERATION")),
         s"$root/$db uses the bucketed layout (GENERATION file " +
-          "present); run with buckets set, or copy the current " +
+          "present); run without -buckets 0, or copy the current " +
           "generation out to a plain layout first")
     val (crawldb, linkdb, hostdb) = cfg.buckets match {
-      case Some(n) =>
-        // cfg.buckets only sizes a FRESH root: BucketedGenTable keeps
+      case Some(0) =>
+        guardPlain("crawldb"); guardPlain("linkdb"); guardPlain("hostdb")
+        (new CrawlDbTable(spark, s"$root/crawldb"),
+          new LinkDbTable(spark, s"$root/linkdb"),
+          new HostDbTable(spark, s"$root/hostdb"))
+      case asked =>
+        val n = asked.getOrElse(Width.fromSlots(spark, DefaultBuckets))
+        // the count only sizes a FRESH root: BucketedGenTable keeps
         // an existing root's on-disk count (its _BUCKETS sidecar), so a
         // default run can never silently re-layout a db installed with
         // a different -buckets. The CrawlDb and LinkDb share the count
@@ -105,11 +114,6 @@ object Crawl {
           spark, s"$root/hostdb", cdb.buckets)
         hdb.migrateFromPlain()
         (cdb, ldb, hdb)
-      case None =>
-        guardPlain("crawldb"); guardPlain("linkdb"); guardPlain("hostdb")
-        (new CrawlDbTable(spark, s"$root/crawldb"),
-          new LinkDbTable(spark, s"$root/linkdb"),
-          new HostDbTable(spark, s"$root/hostdb"))
     }
     Stores(crawldb, linkdb, hostdb,
       if (cfg.metrics) Some(new Metrics.Table(spark, s"$root/metrics"))
@@ -129,7 +133,14 @@ object Crawl {
   /** ONE conductor round (generate → fetch → parse → updatedb →
     * invertlinks → dedup → hostdb/sitemaps) against `stores`, writing
     * the segment under `<root>/segments/r<r>`. The batch loop and the
-    * streaming twin both call exactly this. */
+    * streaming twin both call exactly this.
+    *
+    * The round's metrics — four counter groups (generator, fetcher,
+    * parser, crawldb) and one `wall_ms` gauge per job — run as one
+    * query after the last install and land in `<root>/metrics` as ONE
+    * append; `RoundStats` reads its numbers off the same counters. A
+    * round that throws therefore leaves no metric rows. With
+    * `cfg.metrics` off the counters are still computed, not written. */
   def round(spark: SparkSession, root: String, stores: Stores, r: Int,
       protocol: Fetch.Protocol, registry: Extensions.Registry,
       cfg: Config): (Segment, RoundStats) = {
@@ -140,84 +151,81 @@ object Crawl {
     val schedule: FetchSchedule = registry.schedule
     val filter = registry.filterChain
     val useHostDb = cfg.maxCountExpr.isDefined || cfg.fetchDelayExpr.isDefined
-    def record(r: Int, job: String, wallMs: Long, counters: DataFrame*)
-        : Unit =
-      stores.metrics.foreach { t =>
-        counters.foreach(t.append)
-        t.append(Metrics.gauge(spark, r, job, "wall_ms", wallMs))
-      }
-    locally {
-      val now = cfg.startTime + r * cfg.roundMillis
-      val seg = new Segment(spark, s"$root/segments/r$r")
-      val (_, genMs) = Metrics.timed {
-        seg.writeGenerate(Generate(crawldb.read(),
-          Generate.Config(topN = cfg.topN, maxPerHost = cfg.maxPerHost,
-            curTime = now, segnum = r, maxCountExpr = cfg.maxCountExpr,
-            fetchDelayExpr = cfg.fetchDelayExpr), schedule,
-          hostDb = if (useHostDb) Some(hostdbTable.read()) else None))
-      }
-      record(r, "generator", genMs, Metrics.generator(r, seg.generate))
-      val generated = seg.generate.count()
-      if (cfg.updateCrawlDbOnGenerate)
-        crawldb.install(
-          Generate.markGenerated(crawldb.read(), seg.generate, now),
-          s"generate-mark-r$r")
-
-      // fetch ONCE, stream-to-parquet: the protocol pass writes a staged
-      // file and crawl_fetch/content are DERIVED from it — no executor
-      // block-cache holding payloads (the 100 TB shape)
-      val (_, fetchMs) = Metrics.timed {
-        Fetch.toSegment(seg.generate, protocol, now, seg, cfg.agent,
-          pacer = cfg.pacer, storeResponseTime = cfg.storeResponseTime)
-      }
-      record(r, "fetcher", fetchMs, Metrics.fetcher(r, seg.fetch, seg.content))
-
-      val (_, parseMs) = Metrics.timed {
-        val parsed = Parse(seg.fetch, seg.content, Parse.Config(), filter,
-          registry.normalize(_, Extensions.Scope.Outlink))
-        seg.writeParseData(parsed.parseData)
-        seg.writeParseText(parsed.parseText)
-        seg.writeCrawlParse(parsed.crawlParse)
-      }
-      record(r, "parser", parseMs,
-        Metrics.parser(r, seg.parseData, seg.crawlParse))
-
-      val (_, updMs) = Metrics.timed {
-        crawldb.install(
-          UpdateDb(crawldb.read().union(seg.fetch).union(seg.crawlParse),
-            now, schedule, registry.scoring),
-          s"updatedb-r$r")
-      }
-      linkdb.install(
-        InvertLinks(seg.parseData, linkdb.read(), InvertLinks.Config()),
-        s"invertlinks-r$r")
-      val (_, dedupMs) = Metrics.timed {
-        if (cfg.dedup)
-          crawldb.install(Dedup(crawldb.read()), s"dedup-r$r")
-      }
-      // refresh the hostdb census for the next round's generator
-      if (useHostDb || cfg.sitemaps)
-        hostdbTable.install(
-          UpdateHostDb(crawldb.read(), hostdbTable.read(), now),
-          s"hostdb-r$r")
-      // per-round sitemap processing: discover per-host sitemaps via
-      // robots + protocol, merge declared URLs into the crawldb
-      // (SitemapProcessor; bin/crawl sitemap stage)
-      if (cfg.sitemaps)
-        crawldb.install(
-          Sitemap.merge(crawldb.read(),
-            Sitemap.discover(hostdbTable.read().map(_.host), protocol,
-              now, cfg.agent, Sitemap.Config()),
-            Sitemap.Config()),
-          s"sitemap-r$r")
-      // post-updatedb/dedup db census (crawldb job includes the round's
-      // update + dedup wall time)
-      record(r, "crawldb", updMs + dedupMs, Metrics.crawldb(r, crawldb.read()))
-      (seg, RoundStats(r, generated,
-        seg.fetch.filter(_.datum.status ==
-          graft.schemas.CrawlStatus.FETCH_SUCCESS).count(),
-        crawldb.read().count()))
+    val now = cfg.startTime + r * cfg.roundMillis
+    val seg = new Segment(spark, s"$root/segments/r$r")
+    val (_, genMs) = Metrics.timed {
+      seg.writeGenerate(Generate(crawldb.read(),
+        Generate.Config(topN = cfg.topN, maxPerHost = cfg.maxPerHost,
+          curTime = now, segnum = r, maxCountExpr = cfg.maxCountExpr,
+          fetchDelayExpr = cfg.fetchDelayExpr), schedule,
+        hostDb = if (useHostDb) Some(hostdbTable.read()) else None))
     }
+    if (cfg.updateCrawlDbOnGenerate)
+      crawldb.install(
+        Generate.markGenerated(crawldb.read(), seg.generate, now),
+        s"generate-mark-r$r")
+
+    // fetch ONCE, stream-to-parquet: the protocol pass writes a staged
+    // file and crawl_fetch/content are DERIVED from it — no executor
+    // block-cache holding payloads (the 100 TB shape)
+    val (_, fetchMs) = Metrics.timed {
+      Fetch.toSegment(seg.generate, protocol, now, seg, cfg.agent,
+        pacer = cfg.pacer, storeResponseTime = cfg.storeResponseTime)
+    }
+
+    val (_, parseMs) = Metrics.timed {
+      val parsed = Parse(seg.fetch, seg.content, Parse.Config(), filter,
+        registry.normalize(_, Extensions.Scope.Outlink))
+      seg.writeParseData(parsed.parseData)
+      seg.writeParseText(parsed.parseText)
+      seg.writeCrawlParse(parsed.crawlParse)
+    }
+
+    val (_, updMs) = Metrics.timed {
+      crawldb.install(
+        UpdateDb(crawldb.read().union(seg.fetch).union(seg.crawlParse),
+          now, schedule, registry.scoring),
+        s"updatedb-r$r")
+    }
+    linkdb.install(
+      InvertLinks(seg.parseData, linkdb.read(), InvertLinks.Config()),
+      s"invertlinks-r$r")
+    val (_, dedupMs) = Metrics.timed {
+      if (cfg.dedup)
+        crawldb.install(Dedup(crawldb.read()), s"dedup-r$r")
+    }
+    // refresh the hostdb census for the next round's generator
+    if (useHostDb || cfg.sitemaps)
+      hostdbTable.install(
+        UpdateHostDb(crawldb.read(), hostdbTable.read(), now),
+        s"hostdb-r$r")
+    // per-round sitemap processing: discover per-host sitemaps via
+    // robots + protocol, merge declared URLs into the crawldb
+    // (SitemapProcessor; bin/crawl sitemap stage)
+    if (cfg.sitemaps)
+      crawldb.install(
+        Sitemap.merge(crawldb.read(),
+          Sitemap.discover(hostdbTable.read().map(_.host), protocol,
+            now, cfg.agent, Sitemap.Config()),
+          Sitemap.Config()),
+        s"sitemap-r$r")
+
+    // the crawldb group is the post-updatedb/dedup db census, and its
+    // wall_ms covers the round's update + dedup
+    val counters = Metrics.collect(Seq(
+      Metrics.generator(r, seg.generate),
+      Metrics.fetcher(r, seg.fetch, seg.content),
+      Metrics.parser(r, seg.parseData, seg.crawlParse),
+      Metrics.crawldb(r, crawldb.read())))
+    val walls = Seq("generator" -> genMs, "fetcher" -> fetchMs,
+      "parser" -> parseMs, "crawldb" -> (updMs + dedupMs))
+      .map { case (job, ms) => Metrics.MetricRow(r, job, "wall_ms", ms) }
+    stores.metrics.foreach(_.append(counters ++ walls))
+    def counter(job: String, name: String): Long =
+      counters.find(m => m.job == job && m.name == name).get.value
+    (seg, RoundStats(r, counter("generator", "records_generated_total"),
+      counter("fetcher", "fetched_total"),
+      counter("crawldb", "db_size_total")))
   }
 
   /** The post-rounds pass: hostdb census (when not maintained
@@ -249,8 +257,8 @@ object Crawl {
           case None => docs.count()
         }
       } else 0L
-    stores.metrics.foreach(_.append(
-      Metrics.gauge(spark, cfg.rounds, "indexer", "indexed_total", indexed)))
+    stores.metrics.foreach(_.append(Seq(
+      Metrics.MetricRow(cfg.rounds, "indexer", "indexed_total", indexed))))
 
     Summary(stats, indexed, hostdb.count())
   }

@@ -157,12 +157,13 @@ object Fetch {
     val spark: SparkSession = fetchlist.sparkSession
     import spark.implicits._
     val stagingDir = s"${seg.dir}/fetch_staged"
-    protocolPass(fetchlist, protocol, now, agent, honorRobots, pacer,
-      clockFactory, publisher, storeResponseTime)
+    val staged = protocolPass(fetchlist, protocol, now, agent, honorRobots,
+      pacer, clockFactory, publisher, storeResponseTime)
       .toDF("rows", "content")
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(stagingDir)
+    staged.write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(stagingDir)
     try {
-      val st = spark.read.parquet(stagingDir)
+      // read back with the schema it was written with: no inference job
+      val st = spark.read.schema(staged.schema).parquet(stagingDir)
       seg.writeFetch(st.select(explode(col("rows")).as("r"))
         .select(col("r.url"), col("r.datum")).as[CrawlRow])
       seg.writeContent(st

@@ -181,17 +181,23 @@ object Metrics {
       Seq("network", "timeout", "url", "protocol", "parsing", "other")
   }
 
-  /** A single gauge row (wall_ms per job, indexed_total, …). */
-  def gauge(spark: SparkSession, round: Int, job: String, name: String,
-      value: Long): DataFrame = {
+  /** The rows of several counter frames, run as ONE query (the frames'
+    * aggregates union into one job) and collected: O(#counters) rows. */
+  def collect(frames: Seq[DataFrame]): Seq[MetricRow] = {
+    val spark = frames.head.sparkSession
     import spark.implicits._
-    Seq(MetricRow(round, job, name, value)).toDS().toDF()
+    frames.reduce(_ union _).as[MetricRow].collect().toSeq
   }
 
   /** Append-only metrics table under `<root>/metrics`. */
   final class Table(spark: SparkSession, val dir: String) {
-    def append(df: DataFrame): Unit =
-      df.write.mode("append").parquet(dir)
+    /** One parquet file per call: the rows are driver-side and few, so
+      * a caller gathers a step's counters and gauges and appends them
+      * once instead of paying a write job per metric. */
+    def append(rows: Seq[MetricRow]): Unit = {
+      import spark.implicits._
+      rows.toDS().coalesce(1).write.mode("append").parquet(dir)
+    }
     def read(): DataFrame = {
       if (!new java.io.File(dir).exists())
         return spark.emptyDataFrame
@@ -209,7 +215,7 @@ object Metrics {
         .orderBy("job", "name")
   }
 
-  /** Time a stage, append its wall_ms gauge alongside its counters. */
+  /** Time a stage: its result and its wall-clock milliseconds. */
   def timed[A](body: => A): (A, Long) = {
     val t0 = System.nanoTime()
     val r = body

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.functions.Urls
 import graft.schemas.{CrawlRow, ParseDataRow}
@@ -22,6 +23,20 @@ import graft.schemas.{CrawlRow, ParseDataRow}
   */
 object WebGraphOp {
 
+  /** The two tables' fixed schemas, given to every read so Spark does
+    * not run a job to infer them from the files. */
+  private val OutlinksSchema = StructType(Seq(
+    StructField("src", StringType), StructField("dst", StringType),
+    StructField("anchor", StringType)))
+  private val NodesSchema = StructType(Seq(
+    StructField("url", StringType), StructField("num_inlinks", LongType),
+    StructField("num_outlinks", LongType), StructField("score", DoubleType)))
+
+  private def readOutlinks(spark: SparkSession, dir: String): DataFrame =
+    spark.read.schema(OutlinksSchema).parquet(s"$dir/outlinks")
+  private def readNodes(spark: SparkSession, dir: String): DataFrame =
+    spark.read.schema(NodesSchema).parquet(s"$dir/nodes")
+
   /** Build/extend the webgraph from segment parse outputs: explode
     * outlinks, drop self-loops, dedup (src, dst) pairs (WebGraph.java
     * OutlinkDb latest-wins), union with the existing graph when
@@ -37,7 +52,7 @@ object WebGraphOp {
       .filter(col("src") =!= col("dst"))
     val prior =
       if (java.nio.file.Files.exists(java.nio.file.Paths.get(s"$dir/outlinks")))
-        spark.read.parquet(s"$dir/outlinks")
+        readOutlinks(spark, dir)
       else fresh.limit(0)
     // one row per (src, dst); deterministic keeper by anchor
     val edges = graft.operators.Relational.latestWins(
@@ -46,7 +61,7 @@ object WebGraphOp {
     // prior generation above never races its own overwrite
     edges.write.mode(SaveMode.Overwrite).parquet(s"$dir/outlinks_next")
     swap(dir, "outlinks")
-    val e = spark.read.parquet(s"$dir/outlinks")
+    val e = readOutlinks(spark, dir)
     val outDeg = e.groupBy(col("src").as("url"))
       .agg(count(lit(1)).as("num_outlinks"))
     val inDeg = e.groupBy(col("dst").as("url"))
@@ -77,7 +92,7 @@ object WebGraphOp {
     * Writes scores back into <dir>/nodes. */
   def linkrank(spark: SparkSession, dir: String, iterations: Int = 10)
       : Unit = {
-    val e0 = spark.read.parquet(s"$dir/outlinks")
+    val e0 = readOutlinks(spark, dir)
       .select(col("src"), col("dst"))
     val wDom = Window
       .partitionBy(Urls.host(col("src")).as("dom"), col("dst"))
@@ -86,7 +101,7 @@ object WebGraphOp {
     val edges = e0.withColumn("rn", row_number().over(wDom))
       .filter(col("rn") === 1).drop("rn")
       .join(outDeg, "src")
-    val nodes0 = spark.read.parquet(s"$dir/nodes")
+    val nodes0 = readNodes(spark, dir)
       .select(col("url"), col("num_inlinks"), col("num_outlinks"))
     var nodes = nodes0.withColumn("score", lit(1.0))
       .select(col("url"), col("score"))
@@ -125,7 +140,7 @@ object WebGraphOp {
   def scoreUpdater(crawldb: Dataset[CrawlRow], spark: SparkSession,
       dir: String): Dataset[CrawlRow] = {
     import spark.implicits._
-    val scores = spark.read.parquet(s"$dir/nodes")
+    val scores = readNodes(spark, dir)
       .select(col("url"), col("score").as("__ns"))
     crawldb.toDF()
       .join(scores, Seq("url"), "left")
@@ -146,7 +161,7 @@ object WebGraphOp {
     * global sort. */
   def nodeDumper(spark: SparkSession, dir: String, by: String, k: Int)
       : DataFrame = {
-    val nodes = spark.read.parquet(s"$dir/nodes")
+    val nodes = readNodes(spark, dir)
     val key = by match {
       case "score" => col("score")
       case "inlinks" => col("num_inlinks")

@@ -175,6 +175,8 @@ object GraftExtensions {
               .as("doc_id"),
             org.apache.spark.sql.functions.col("text")), norm)
         .select("g").distinct()
+      // not persisted: nothing here outlives the query to unpersist it,
+      // so the census and the join each compute the (small) gram set
       graft.QueriesPipeline.contaminationHits(
           graft.QueriesPipeline.wordGrams8(corpus, norm), benchGrams)
         .queryExecution.analyzed

@@ -349,7 +349,9 @@ final class BucketedLinkDbTable(spark: SparkSession, dir: String,
     with LinkDbStore
 
 /** One segment directory with its parquet parts (SURVEY §1.1; segment
-  * naming Generator.java:58-63). */
+  * naming Generator.java:58-63). Every part is a typed table, so it is
+  * read with its encoder's schema: Spark then skips the job that would
+  * infer the schema from the files on every read. */
 final class Segment(spark: SparkSession, val dir: String) {
   import spark.implicits._
 
@@ -366,18 +368,15 @@ final class Segment(spark: SparkSession, val dir: String) {
   def writeParseText(ds: Dataset[ParseTextRow]): Unit =
     ds.write.mode(SaveMode.Overwrite).parquet(s"$dir/parse_text")
 
-  def generate: Dataset[GenerateEntry] =
-    spark.read.parquet(s"$dir/crawl_generate").as[GenerateEntry]
-  def fetch: Dataset[CrawlRow] =
-    spark.read.parquet(s"$dir/crawl_fetch").as[CrawlRow]
-  def content: Dataset[ContentRow] =
-    spark.read.parquet(s"$dir/content").as[ContentRow]
-  def crawlParse: Dataset[CrawlRow] =
-    spark.read.parquet(s"$dir/crawl_parse").as[CrawlRow]
-  def parseData: Dataset[ParseDataRow] =
-    spark.read.parquet(s"$dir/parse_data").as[ParseDataRow]
-  def parseText: Dataset[ParseTextRow] =
-    spark.read.parquet(s"$dir/parse_text").as[ParseTextRow]
+  def generate: Dataset[GenerateEntry] = part[GenerateEntry]("crawl_generate")
+  def fetch: Dataset[CrawlRow] = part[CrawlRow]("crawl_fetch")
+  def content: Dataset[ContentRow] = part[ContentRow]("content")
+  def crawlParse: Dataset[CrawlRow] = part[CrawlRow]("crawl_parse")
+  def parseData: Dataset[ParseDataRow] = part[ParseDataRow]("parse_data")
+  def parseText: Dataset[ParseTextRow] = part[ParseTextRow]("parse_text")
+
+  private def part[T](name: String)(implicit enc: Encoder[T]): Dataset[T] =
+    spark.read.schema(enc.schema).parquet(s"$dir/$name").as[T]
 }
 
 /** Opt-in url-bucketed table layout — the 100 TB co-located-join path.

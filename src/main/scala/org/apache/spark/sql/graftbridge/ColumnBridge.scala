@@ -11,8 +11,8 @@ import org.apache.spark.sql.classic.ExpressionUtils
   * Catalyst expressions (our `StaticInvoke`-based codegen functions)
   * need exactly these two calls, so this one-file shim lives in an
   * `org.apache.spark.sql` subpackage — the conventional pattern for
-  * Spark-native extension libraries. No other Spark internals are
-  * touched.
+  * Spark-native extension libraries. The few other private[spark] or
+  * private[sql] reads below are each named in their scaladoc.
   */
 object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
@@ -41,11 +41,15 @@ object ColumnBridge {
     * memory pressure (measured: per-round wall ~2× by round 100).
     * Only call once every DOWNSTREAM checkpoint derived from `df` is
     * itself materialized: localCheckpoint truncates lineage, so the
-    * freed blocks are unrecoverable. No-op on non-LogicalRDD plans. */
+    * freed blocks are unrecoverable. No-op on non-LogicalRDD plans.
+    * Frees through `SparkContext.unpersistRDD` (private[spark], hence
+    * the bridge) rather than `RDD.unpersist`, which WARNs on every
+    * locally checkpointed RDD that its lineage cannot be recomputed —
+    * the point of a deliberate free, not news. */
   def freeLocalCheckpoint(df: org.apache.spark.sql.DataFrame): Unit =
     df.queryExecution.analyzed match {
       case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
+        lr.rdd.sparkContext.unpersistRDD(lr.rdd.id, blocking = false)
       case _ => ()
     }
 

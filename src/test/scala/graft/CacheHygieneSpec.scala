@@ -54,4 +54,68 @@ class CacheHygieneSpec extends AnyFunSuite with SparkSuite {
     assert(ColumnBridge.cacheIsEmpty(spark),
       "hits_scores' checkpoint pin must not register cached plans")
   }
+
+  test("the decontamination gate's bench-gram cache has an owner: equal " +
+    "plans never re-cache it and nothing stays cached") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.spark.sql.functions.col
+    spark.catalog.clearCache()
+    val msgs = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val appender = new AbstractAppender(
+        "graft-cache-capture", null, null, false,
+        org.apache.logging.log4j.core.config.Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = {
+        val m = e.getMessage.getFormattedMessage
+        if (m.contains("Asked to cache already cached data")) msgs.add(m)
+      }
+    }
+    appender.start()
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val rootCfg = ctx.getConfiguration.getRootLogger
+    val priorLevel = rootCfg.getLevel
+    rootCfg.addAppender(appender, Level.WARN, null)
+    if (priorLevel.isMoreSpecificThan(Level.WARN)) rootCfg.setLevel(Level.WARN)
+    ctx.updateLoggers()
+    var selfCheck = 0
+    val root = java.nio.file.Files.createTempDirectory("decon-cache").toString
+    try {
+      // self-check: a frame persisted twice MUST be captured, or the
+      // zero-assertion below would pass vacuously
+      val probe = spark.range(3).toDF("x")
+      probe.persist(); probe.persist(); probe.unpersist()
+      selfCheck = msgs.size
+      msgs.clear()
+
+      // the library call twice over equal plans (DecontaminateNormSpec's
+      // shape): the caller passes no cache, so none is left behind
+      val docs = Queries.t(spark, dir, "documents").select("doc_id", "text")
+      def hits(): Long = QueriesPipeline.contaminationHits(
+          QueriesPipeline.wordGrams8(docs),
+          QueriesPipeline.wordGrams8(docs.where(col("doc_id") % 25 === 0))
+            .select("g").distinct())
+        .count()
+      assert(hits() > 0)
+      assert(hits() == hits())
+      assert(ColumnBridge.cacheIsEmpty(spark))
+
+      // the corpus verb persists its bench grams and frees them with its
+      // other caches: two equal runs, nothing cached after either
+      docs.where(col("doc_id") % 25 === 0).select("text")
+        .write.parquet(s"$root/bench")
+      for (out <- Seq("a", "b")) {
+        assert(Main.run(spark, Array("corpus", dir, s"$root/$out",
+          "-decontaminate", s"$root/bench")) == 0)
+        assert(ColumnBridge.cacheIsEmpty(spark), s"after run $out")
+      }
+    } finally {
+      rootCfg.removeAppender("graft-cache-capture")
+      rootCfg.setLevel(priorLevel)
+      ctx.updateLoggers()
+      appender.stop()
+    }
+    assert(selfCheck > 0, "capture self-check failed")
+    assert(msgs.isEmpty, msgs.toArray.mkString("\n"))
+  }
 }

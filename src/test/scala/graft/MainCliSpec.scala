@@ -193,6 +193,15 @@ class MainCliSpec extends AnyFunSuite with SparkSuite {
       s"$root/crawl/crawldb", graft.ops.Crawl.DefaultBuckets)
       .read().collect()
     assert(db.length == 2) // seed + discovered p1
+    // no -buckets: the fresh root got one bucket per slot of the
+    // local[4] session; -buckets 0 is the plain layout
+    assert(Files.readString(Paths.get(root, "crawl", "crawldb", "BUCKETS"))
+      .trim == "4")
+    assert(Main.run(spark, Array("crawl", s"$root/plain", s"$root/seeds.txt",
+      "-site", s"$root/site.json", "-now", "1700000000000",
+      "-buckets", "0")) == 0)
+    assert(Files.exists(Paths.get(root, "plain", "crawldb", "current")))
+    assert(!Files.exists(Paths.get(root, "plain", "crawldb", "GENERATION")))
     // the conductor appended per-job counters; the metrics verb reads
     // them back (summed across rounds, and raw per round)
     assert(Main.run(spark,

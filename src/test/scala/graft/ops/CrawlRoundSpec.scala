@@ -275,12 +275,11 @@ class CrawlRoundSpec extends AnyFunSuite with SparkSuite {
       s"interval ${d2.fetchInterval} did not grow from $firstInterval")
   }
 
-  test("bucketed CrawlDb layout: conductor A/B identical, join Exchange-free") {
-    import org.apache.spark.sql.functions.col
-    import graft.plugins.Extensions
+  // a two-host site for the layout A/Bs; its cross-host links survive
+  // db.ignore.internal.links, so both layouts also carry a NON-EMPTY
+  // linkdb
+  private object Bk {
     val A = "http://bk-a.example.com"
-    // second host: cross-host links survive db.ignore.internal.links, so
-    // the A/B below also exercises a NON-EMPTY linkdb in both layouts
     val B = "http://bk-b.example.com"
     val site = Map(
       s"$A/" -> (Fetch.Code.Success,
@@ -295,18 +294,111 @@ class CrawlRoundSpec extends AnyFunSuite with SparkSuite {
            |<a href="$A/p2">ap2</a></body></html>""".stripMargin,
         "text/html"))
     val seeds = Seq(s"$A/", s"$B/")
-    val registry = Extensions.Registry(
+    val registry = graft.plugins.Extensions.Registry(
       urlFilters = Seq(RegexUrlFilter.parse(Iterator("+."))))
-    def runIt(buckets: Option[Int]): (String, Crawl.Summary) = {
+    def config(buckets: Option[Int]) = Crawl.Config(
+      rounds = 2, buckets = buckets,
+      pacer = graft.net.Pacer.Config(serverDelayMs = 0))
+    /** A 2-round crawl on a fresh root. */
+    def crawl(buckets: Option[Int]): (String, Crawl.Summary) = {
       val root = Files.createTempDirectory("crawl-ab").toString
-      val s = Crawl.run(spark, root, seeds,
-        Fetch.MockProtocol(site), registry,
-        Crawl.Config(rounds = 2, buckets = buckets,
-          pacer = graft.net.Pacer.Config(serverDelayMs = 0)))
-      (root, s)
+      (root, Crawl.run(spark, root, seeds, Fetch.MockProtocol(site),
+        registry, config(buckets)))
     }
-    val (plainRoot, plainSum) = runIt(None)
-    val (bRoot, bSum) = runIt(Some(8))
+  }
+
+  /** The bucket counts of the three stores `openStores` hands out for
+    * `root` (0 for a plain store). */
+  private def storeBuckets(root: String, cfg: Crawl.Config): Seq[Int] = {
+    import graft.tables._
+    val s = Crawl.openStores(spark, root, cfg)
+    Seq(s.crawldb, s.linkdb, s.hostdb).map {
+      case t: BucketedCrawlDbTable => t.buckets
+      case t: BucketedLinkDbTable => t.buckets
+      case t: BucketedHostDbTable => t.buckets
+      case _: CrawlDbTable | _: LinkDbTable | _: HostDbTable => 0
+    }
+  }
+
+  test("bucket count changes no result; a fresh root's count follows " +
+    "the session, an existing root keeps its own") {
+    import org.apache.spark.sql.functions.col
+    import graft.tables.{CrawlDbStore, LinkDbStore}
+    // what a crawl leaves behind, layout-free: sorted db and linkdb
+    // rows and every counter (wall_ms is a clock, not a result)
+    def outcome(run: (String, Crawl.Summary)) = {
+      val (root, sum) = run
+      val sp = spark; import sp.implicits._
+      (sum,
+        CrawlDbStore.open(spark, s"$root/crawldb").read().collect()
+          .map(r => r.url -> r.datum).sortBy(_._1).toSeq,
+        LinkDbStore.open(spark, s"$root/linkdb").read().collect()
+          .map(r => r.url -> r.inlinks.sortBy(i => (i.fromUrl, i.anchor)))
+          .sortBy(_._1).toSeq,
+        new Metrics.Table(spark, s"$root/metrics").read()
+          .where(col("name") =!= "wall_ms").as[Metrics.MetricRow]
+          .collect().sortBy(m => (m.round, m.job, m.name)).toSeq)
+    }
+    val layouts = Seq(Some(0), Some(1), Some(4), Some(8), Some(32), None)
+    val runs = layouts.map(b => b -> Bk.crawl(b)).toMap
+    val plain = outcome(runs(Some(0)))
+    assert(plain._3.nonEmpty && plain._4.nonEmpty)
+    for (b <- layouts.tail)
+      assert(outcome(runs(b)) == plain, s"buckets $b")
+
+    // the rule: one bucket per slot on a fresh root, shared by all
+    // three stores; an explicit count wins; an existing root keeps its
+    // count whatever is asked; -buckets 0 is the plain layout
+    assert(spark.sparkContext.defaultParallelism == 4)
+    def fresh() = Files.createTempDirectory("crawl-rule").toString
+    assert(storeBuckets(fresh(), Bk.config(None)) == Seq(4, 4, 4))
+    assert(storeBuckets(fresh(), Crawl.Config()) == Seq(4, 4, 4))
+    assert(storeBuckets(fresh(), Bk.config(Some(32))) == Seq(32, 32, 32))
+    assert(storeBuckets(fresh(), Bk.config(Some(0))) == Seq(0, 0, 0))
+    assert(storeBuckets(runs(None)._1, Bk.config(None)) == Seq(4, 4, 4))
+    assert(storeBuckets(runs(Some(32))._1, Bk.config(None)) ==
+      Seq(32, 32, 32))
+    for (b <- Seq(None, Some(4), Some(32)))
+      assert(storeBuckets(runs(Some(8))._1, Bk.config(b)) == Seq(8, 8, 8),
+        s"$b")
+
+    // the session-sized root still reads both db sides of the indexing
+    // join in place: every Exchange in its plan moves a segment side
+    val root4 = runs(None)._1
+    val stores = Crawl.openStores(spark, root4, Bk.config(None))
+    val segs = (1 to 2).map(r => new Segment(spark, s"$root4/segments/r$r"))
+    val priorAqe = spark.conf.get("spark.sql.adaptive.enabled")
+    val priorBj = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try {
+      import org.apache.spark.sql.execution.FileSourceScanExec
+      import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+      val plan = Index(stores.crawldb.read(), segs.map(_.fetch).reduce(_ union _),
+        segs.map(_.parseData).reduce(_ union _),
+        segs.map(_.parseText).reduce(_ union _), stores.linkdb.read(),
+        Index.Config()).queryExecution.executedPlan
+      def dbScans(p: org.apache.spark.sql.execution.SparkPlan) = p.collect {
+        case s: FileSourceScanExec if s.relation.location.rootPaths.exists(
+            q => q.toString.contains(s"$root4/crawldb") ||
+              q.toString.contains(s"$root4/linkdb")) => s
+      }
+      assert(dbScans(plan).size == 2, plan)
+      assert(dbScans(plan).forall(_.bucketedScan), plan)
+      val exchanges = plan.collect { case e: ShuffleExchangeLike => e }
+      assert(exchanges.nonEmpty, plan)
+      assert(exchanges.forall(e => dbScans(e).isEmpty), plan)
+    } finally {
+      spark.conf.set("spark.sql.adaptive.enabled", priorAqe)
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", priorBj)
+    }
+  }
+
+  test("bucketed CrawlDb layout: conductor A/B identical, join Exchange-free") {
+    import org.apache.spark.sql.functions.col
+    import Bk.{registry, seeds}
+    val (plainRoot, plainSum) = Bk.crawl(Some(0))
+    val (bRoot, bSum) = Bk.crawl(Some(8))
 
     // byte-identical rounds and final db between the two layouts
     assert(bSum == plainSum)
@@ -339,13 +431,13 @@ class CrawlRoundSpec extends AnyFunSuite with SparkSuite {
     // plain current is rewritten as generation 1 and round 2 continues
     // on it; final db byte-identical to both straight 2-round runs
     val migRoot = Files.createTempDirectory("crawl-mig").toString
-    val cfg1 = Crawl.Config(rounds = 1, buckets = None,
+    val cfg1 = Crawl.Config(rounds = 1, buckets = Some(0),
       pacer = graft.net.Pacer.Config(serverDelayMs = 0))
-    Crawl.run(spark, migRoot, seeds, Fetch.MockProtocol(site),
+    Crawl.run(spark, migRoot, seeds, Fetch.MockProtocol(Bk.site),
       registry, cfg1)
     assert(Files.exists(
       java.nio.file.Paths.get(migRoot, "crawldb", "current")))
-    Crawl.run(spark, migRoot, seeds, Fetch.MockProtocol(site),
+    Crawl.run(spark, migRoot, seeds, Fetch.MockProtocol(Bk.site),
       registry, cfg1.copy(buckets = Some(8),
         startTime = cfg1.startTime + cfg1.roundMillis)) // round 2's clock
     assert(!Files.exists(
@@ -359,7 +451,7 @@ class CrawlRoundSpec extends AnyFunSuite with SparkSuite {
     // opting back out against a bucketed root fails loudly instead of
     // silently restarting from an empty plain db
     val ex = intercept[IllegalArgumentException] {
-      Crawl.run(spark, migRoot, seeds, Fetch.MockProtocol(site),
+      Crawl.run(spark, migRoot, seeds, Fetch.MockProtocol(Bk.site),
         registry, cfg1)
     }
     assert(ex.getMessage.contains("bucketed layout"))

@@ -142,4 +142,76 @@ class CrawlSpec extends AnyFunSuite with SparkSuite {
     }.toSet
     assert(sinkLines.forall(l => !dupUrls.exists(u => l.contains("\"" + u + "\""))))
   }
+
+  test("a round appends its metrics once; RoundStats are its counters") {
+    import spark.implicits._
+    val registry = Extensions.Registry(
+      urlFilters = Seq(RegexUrlFilter.parse(Iterator("+."))))
+    def parquetFiles(dir: String): Int = {
+      val p = java.nio.file.Paths.get(dir)
+      if (!Files.exists(p)) 0
+      else {
+        val s = Files.list(p)
+        try s.filter(_.toString.endsWith(".parquet")).count().toInt
+        finally s.close()
+      }
+    }
+    // the (job, name) set every round writes: four counter groups and
+    // one wall_ms gauge per job
+    val expected = (Seq("records_generated_total", "wall_ms")
+      .map("generator" -> _) ++
+      (Seq("fetched_total", "failed_fetches_total", "not_fetched_total",
+        "robots_denied_total", "robots_denied_maxcrawldelay_total",
+        "hit_by_timelimit_total", "hit_by_throughput_threshold_total",
+        "redirects_total", "fetch_latency_count_total",
+        "fetch_latency_sum_ms", "fetch_latency_p50_ms",
+        "fetch_latency_p95_ms", "fetch_latency_p99_ms", "errors_total") ++
+        Metrics.Errors.categories.map(c => s"errors_${c}_total") ++
+        Seq("bytes_downloaded_total", "wall_ms")).map("fetcher" -> _) ++
+      Seq("parsed_total", "outlinks_detected_total", "added_links_total",
+        "errors_parsing_total", "wall_ms").map("parser" -> _) ++
+      (Seq("size", "unfetched", "fetched", "gone", "redir_temp",
+        "redir_perm", "notmodified", "duplicate", "orphan")
+        .map(n => s"db_${n}_total") :+ "wall_ms").map("crawldb" -> _))
+    assert(expected.distinct.size == 39)
+
+    def crawl(metrics: Boolean): (String, Seq[Crawl.RoundStats]) = {
+      val root = Files.createTempDirectory("crawl-metrics").toString
+      val cfg = Crawl.Config(rounds = 2, metrics = metrics,
+        pacer = graft.net.Pacer.Config(serverDelayMs = 0))
+      val stores = Crawl.openStores(spark, root, cfg)
+      Crawl.inject(spark, stores, Seq(s"$A/"), registry, cfg)
+      val stats = (1 to 2).map { r =>
+        val before = parquetFiles(s"$root/metrics")
+        val (seg, st) = Crawl.round(spark, root, stores, r,
+          Fetch.MockProtocol(site), registry, cfg)
+        // the counters' own definitions, counted directly
+        assert(st == Crawl.RoundStats(r, seg.generate.count(),
+          seg.fetch.filter(_.datum.status == S.FETCH_SUCCESS).count(),
+          stores.crawldb.read().count()))
+        if (metrics) {
+          assert(parquetFiles(s"$root/metrics") == before + 1)
+          val rows = new Metrics.Table(spark, s"$root/metrics").read()
+            .as[Metrics.MetricRow].collect().filter(_.round == r)
+          assert(rows.map(m => m.job -> m.name).sorted.toSeq ==
+            expected.sorted)
+          def counter(job: String, name: String) =
+            rows.find(m => m.job == job && m.name == name).get.value
+          assert(st == Crawl.RoundStats(r,
+            counter("generator", "records_generated_total"),
+            counter("fetcher", "fetched_total"),
+            counter("crawldb", "db_size_total")))
+        }
+        st
+      }
+      (root, stats)
+    }
+    val (root, stats) = crawl(metrics = true)
+    assert(stats.map(_.generated) == Seq(1, 2))
+    // metrics off: the same stats, and nothing written
+    val (offRoot, offStats) = crawl(metrics = false)
+    assert(offStats == stats)
+    assert(!Files.exists(java.nio.file.Paths.get(offRoot, "metrics")))
+    assert(parquetFiles(s"$root/metrics") == 2)
+  }
 }

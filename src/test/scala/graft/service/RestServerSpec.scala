@@ -413,10 +413,10 @@ class RestServerSpec extends AnyFunSuite with SparkSuite {
       val base = s"http://localhost:${srv.port}"
       val dir = Files.createTempDirectory("rest-metrics").toString + "/m"
       val t = new graft.ops.Metrics.Table(spark, dir)
-      t.append(graft.ops.Metrics.gauge(spark, 1, "fetcher",
-        "fetched_total", 7))
-      t.append(graft.ops.Metrics.gauge(spark, 2, "fetcher",
-        "fetched_total", 5))
+      t.append(Seq(graft.ops.Metrics.MetricRow(1, "fetcher",
+        "fetched_total", 7)))
+      t.append(Seq(graft.ops.Metrics.MetricRow(2, "fetcher",
+        "fetched_total", 5)))
 
       assert(get(s"$base/metrics")._1 == 400)
       val (c1, summed) = get(s"$base/metrics?dir=$dir")
