@@ -75,10 +75,7 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt.max(1)
-    // SPARK_GRAFT_EXTENSIONS=1 benches the board under GraftExtensions
-    // (same knob as Verify — measure what the optimizer rules change)
-    val spark = GraftSession(s"local[$cpus]", cpus,
-      extensions = sys.env.get("SPARK_GRAFT_EXTENSIONS").contains("1"))
+    val spark = GraftSession(s"local[$cpus]", cpus)
     val loadBefore = loadAvg
     val statBefore = procStatJiffies
     // untimed warmup: JVM/codegen/parquet-footer costs land here, not in

@@ -5,9 +5,13 @@ import org.apache.spark.sql.SparkSession
 /** The one place a graft SparkSession is built. The CLI and REST server
   * (`Main.session`), `Bench`, `Verify`, `ScaleProbe` and `PlanDump`
   * differ only in the arguments: where the master and the shuffle width
-  * come from, and whether the GraftExtensions optimizer rules are on
-  * (the product session defaults them on; the driver entry points opt
-  * in, so their artifacts stay comparable across rounds).
+  * come from. Every one of them runs the same optimizer: GraftExtensions
+  * is always installed, so the oracle checks, the bench times and the
+  * plan dump shows what the CLI and REST run. To switch a rule off on a
+  * live session, name it in Spark's own
+  * `spark.sql.optimizer.excludedRules` (`graft.plans.RewriteBoundedTopK`,
+  * `graft.plans.RewriteWindowAggToJoin`,
+  * `graft.plans.RewriteKeeperElection`).
   *
   * `ui = true` leaves the Spark UI at Spark's default (the product
   * session's choice); every other entry point turns it off. The session
@@ -16,7 +20,7 @@ import org.apache.spark.sql.SparkSession
   * computation. */
 object GraftSession {
 
-  def apply(master: String, shufflePartitions: String, extensions: Boolean,
+  def apply(master: String, shufflePartitions: String,
       appName: Option[String] = None, ui: Boolean = false): SparkSession = {
     val b = SparkSession.builder()
       .master(master)
@@ -32,7 +36,7 @@ object GraftSession {
       .config("spark.sql.codegen.cache.maxEntries", "10000")
     if (!ui) b.config("spark.ui.enabled", "false")
     appName.foreach(b.appName)
-    if (extensions) b.withExtensions(new graft.plans.GraftExtensions)
+    b.withExtensions(new graft.plans.GraftExtensions)
     val spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.net.Pacer
 import graft.ops._
@@ -67,22 +67,17 @@ object Main {
   }
 
   /** The PRODUCT session every CLI verb (and the REST server the
-    * `server` verb starts) runs on. GraftExtensions is ON by default
-    * here since r13: the optimizer rules are proven answer-preserving
-    * (the whole 144-query oracle board passes under them) and they
-    * rewrite naturally-phrased hot-key window shapes — keeper
+    * `server` verb starts) runs on. Like every graft session it runs
+    * the GraftExtensions optimizer rules: they are proven
+    * answer-preserving (the whole oracle board passes under them) and
+    * they rewrite naturally-phrased hot-key window shapes — keeper
     * election, whole-partition aggregates, naive top-k — into the
-    * skew-safe aggregates this repo writes by hand. Kill switches:
-    * `SPARK_GRAFT_EXTENSIONS=0` drops the whole hook;
-    * `spark.graft.rewrite.windowAggToJoin=false` /
-    * `spark.graft.rewrite.keeperElection=false` disable one rule on a
-    * live session. (Verify/Bench keep their opt-IN knob unchanged so
-    * driver artifacts stay comparable across rounds — there the rules
-    * are the A/B subject, not the default.) */
+    * skew-safe aggregates this repo writes by hand. A rule is switched
+    * off on a live session through Spark's
+    * `spark.sql.optimizer.excludedRules` (see [[GraftSession]]). */
   private[graft] def session(): SparkSession =
     GraftSession(sys.env.getOrElse("SPARK_MASTER", "local[*]"),
       sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "32"),
-      extensions = !sys.env.get("SPARK_GRAFT_EXTENSIONS").contains("0"),
       appName = Some("graft"), ui = true)
 
   /** Build the URL filter chain from a conf dir (`-filters <dir>`, the
@@ -699,409 +694,401 @@ object Main {
         val shards = optL(rest, "-shards", 8).toInt
         val docs = Tables(spark, sfDir, "documents")
         def q(name: String) = Queries.byName(name).build(spark, sfDir)
-        var labeled = docs
-          .join(q("quality_gopher").select(col("doc_id"),
-            col("gopher_verdict")), "doc_id")
-          .join(q("dedup_exact").select(col("doc_id"),
-            col("dedup_status")), "doc_id")
-          .join(q("line_dedup").select(col("doc_id"),
-            col("n_dropped")), "doc_id")
-          // left: span_dedup has no row for docs shorter than one
-          // 15-word window - trivially zero duplicated spans
-          .join(q("span_dedup").select(col("doc_id"),
-            col("dup_bp")), Seq("doc_id"), "left")
-          .withColumn("dup_bp", coalesce(col("dup_bp"), lit(0L)))
-          .join(q("rarity_score").select(col("doc_id"),
-            col("rarity_per_token_bp")), "doc_id")
-          .withColumn("drop_reason",
-            when(col("gopher_verdict") =!= "keep", "quality")
-              .when(col("dedup_status") =!= "keep", "exact_dup")
-              .when(col("n_dropped") =!= 0, "line_dup")
-              .when(col("dup_bp") >= 2000L, "span_dup")
-              .when(col("rarity_per_token_bp") >= 400000L, "outlier")
-              .otherwise("keep"))
-        if (rest.contains("-neardup")) {
-          // near-dup policy: of each verified MinHash pair (a < b),
-          // the higher doc_id drops — chains keep their lowest member
-          val drops = q("minhash_lsh")
-            .select(col("b_id").as("doc_id")).distinct()
-            .withColumn("near_drop", lit(1))
-          labeled = labeled.join(drops, Seq("doc_id"), "left")
+        // every frame the verb pins is freed on every exit: a gate
+        // that fails its flag check throws after the first pins exist
+        val pins = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+        def pin(df: DataFrame): DataFrame = { pins += df; df }
+        try {
+          var labeled = docs
+            .join(q("quality_gopher").select(col("doc_id"),
+              col("gopher_verdict")), "doc_id")
+            .join(q("dedup_exact").select(col("doc_id"),
+              col("dedup_status")), "doc_id")
+            .join(q("line_dedup").select(col("doc_id"),
+              col("n_dropped")), "doc_id")
+            // left: span_dedup has no row for docs shorter than one
+            // 15-word window - trivially zero duplicated spans
+            .join(q("span_dedup").select(col("doc_id"),
+              col("dup_bp")), Seq("doc_id"), "left")
+            .withColumn("dup_bp", coalesce(col("dup_bp"), lit(0L)))
+            .join(q("rarity_score").select(col("doc_id"),
+              col("rarity_per_token_bp")), "doc_id")
             .withColumn("drop_reason",
-              when(col("drop_reason") === "keep" && col("near_drop") === 1,
-                "near_dup").otherwise(col("drop_reason")))
-            .drop("near_drop")
-        }
-        labeled = labeled.cache()
-        var kept = labeled.where(col("drop_reason") === "keep")
-          .select(col("doc_id"), col("text"), col("lang"), col("source"))
-        var spansRemoved = 0L
-        var substrEmptied = 0L
-        var substrCache: Option[org.apache.spark.sql.DataFrame] = None
-        if (rest.contains("-exactsubstr")) {
-          // ExactSubstr span REMOVAL (Lee et al. ACL 2022) on the kept
-          // corpus: cross-document duplicated 15-word runs are cut from
-          // the text itself (all occurrences), not just counted — the
-          // doc-level dedup stages above can't touch a boilerplate
-          // paragraph embedded in otherwise-unique documents
-          val cleaned = graft.ops.ExactSubstr
-            .clean(kept.select(col("doc_id"), col("text")))
-            .select(col("doc_id"), col("clean_text"), col("n_removed"))
-          // cached: the two metric aggregates below AND the corpus
-          // build consume this frame — uncached, the whole removal
-          // pipeline (window hashing + coverage + text rebuild, the
-          // heaviest stage of the job) would execute three times
-          val rewritten = kept.join(cleaned, "doc_id")
-            .select(col("doc_id"), col("clean_text").as("text"),
-              col("lang"), col("source"), col("n_removed"))
-            .cache()
-          substrCache = Some(rewritten)
-          spansRemoved = rewritten.agg(coalesce(sum("n_removed"), lit(0L)))
-            .head().getLong(0)
-          // a doc whose text was ENTIRELY duplicated spans is an empty
-          // string now — an empty training document is not a document;
-          // drop it under its own reason (conservation still holds)
-          substrEmptied = rewritten.where(length(col("text")) === 0).count()
-          kept = rewritten.where(length(col("text")) > 0).drop("n_removed")
-        }
-        var mixtureDropped = 0L
-        if (rest.contains("-temperature")) {
-          // α = 1/2 temperature rebalance (the mixture_temperature
-          // query's rates, applied): downsample over-represented
-          // languages so kept token shares match p_l ∝ √tok_l, sized
-          // by the binding constraint — the scarcest-relative-to-
-          // target language keeps EVERYTHING (rate 10000 bp, no
-          // upsampling ever), everything else downsamples toward its
-          // target share via the deterministic md5 coin (sample_cap's
-          // discipline: content-keyed, stable across runs and
-          // partitionings, integer-exact)
-          val byLang = kept
-            // null-lang docs take no part in the rebalance (kept
-            // whole by the left join below) — excluded here so a
-            // null group can't bind the budget it never consumes
-            .where(col("lang").isNotNull)
-            .select(col("lang"),
-              size(split(col("text"), " ")).cast("long").as("nt"))
-            .groupBy("lang").agg(sum("nt").as("tok"))
-          val keepRates = temperatureKeepRates(byLang)
-          val before = kept.count()
-          // LEFT join + keep-all default: an inner join would silently
-          // DROP docs with NULL lang (null equi-join keys never match,
-          // even though byLang's groupBy produced a null-lang rate
-          // row), misattributing them to dropped_mixture. Null-lang
-          // docs take no part in language rebalancing — keep them.
-          kept = kept.join(broadcast(keepRates), Seq("lang"), "left")
-            .where(Queries.md5Long(col("doc_id").cast("string")) % 10000L
-              < coalesce(col("keep_bp"), lit(10000L)))
-            .drop("keep_bp")
-          mixtureDropped = before - kept.count()
-        }
-        var dsirDropped = 0L
-        var dsirCache: Option[org.apache.spark.sql.DataFrame] = None
-        opt(rest, "-dsir").foreach { spec =>
-          // DSIR selection gate (dsir_select applied): keep only the
-          // top keep_bp basis-points share of the kept pool by hashed
-          // n-gram importance weight toward the target language.
-          // The cutoff weight comes from the WEIGHT HISTOGRAM — the
-          // ccnet_buckets discipline: the running count runs over the
-          // bounded per-weight census (weights are integers in
-          // half-bit units), never a per-doc global window. Ties at
-          // the cutoff weight all keep, so the kept count can exceed
-          // the target by the tie class — documented, deterministic.
-          val parts = spec.split(":", 2)
-          require(parts.length == 2 && parts(1).matches("[0-9]+"),
-            s"-dsir wants lang:keep_bp, got $spec")
-          val (targetLang, keepBp) = (parts(0), parts(1).toLong)
-          require(keepBp >= 1 && keepBp <= 10000,
-            s"-dsir keep_bp out of (0, 10000]: $keepBp")
-          // truncate the gate lineage before this stage references it
-          // repeatedly (weights + cutoff + count + build): with
-          // -exactsubstr ahead of it, the accumulated plan TEXT alone
-          // (AQE renders it per executed stage) OOM'd the driver on a
-          // 500-doc corpus — caching doesn't shrink a plan, a
-          // checkpoint does
-          kept = kept.localCheckpoint()
-          val before = kept.count()
-          val target = (before * keepBp + 9999L) / 10000L
-          // cached: the weight pipeline (corpus-wide token explode +
-          // two count shuffles, the heaviest stage of this gate) is
-          // consumed by the cutoff aggregate, the dropped count, AND
-          // the corpus build below — uncached it would execute three
-          // times (the -exactsubstr discipline)
-          val w = QueriesPipeline.dsirWeights(
-            kept.select(col("doc_id"), col("lang"), col("text")), targetLang)
-            .select(col("doc_id"), col("dsir_w"))
-            .cache()
-          dsirCache = Some(w)
-          // histogram cumsum over DESCENDING weight: the weight
-          // histogram is doc-cardinality in the worst case (every doc
-          // a distinct weight), so this must not be a no-partition
-          // window (single task) — the two-phase PrefixSum runs it at
-          // partition parallelism. Descending = ascending over the
-          // negated weight (weights are sums of bounded half-bit
-          // terms, nowhere near Long.MinValue).
-          val cutoff = graft.ops.PrefixSum.groupedRunningSum(
-              w.groupBy("dsir_w").count(),
-              lit(1), -col("dsir_w"), col("count"), "cum")
-            .where(col("cum") >= target)
-            .agg(max(col("dsir_w")).as("cutoff"))
-          kept = kept.join(w, "doc_id")
-            .crossJoin(broadcast(cutoff))
-            .where(col("dsir_w") >= coalesce(col("cutoff"), lit(Long.MinValue)))
-            .drop("dsir_w", "cutoff")
-          dsirDropped = before - kept.count()
-        }
-        var ccnetDropped = 0L
-        opt(rest, "-ccnet").foreach { keepList =>
-          // CCNet bucket gate (ccnet_buckets applied): keep only the
-          // named per-language LM-score terciles — `-ccnet head` is
-          // the paper's training corpus, `-ccnet head,middle` the
-          // permissive cut. Docs too short to score (no bigrams)
-          // count as tail: unscoreable = lowest confidence.
-          val want = keepList.split(",").map(_.trim)
-            .filter(_.nonEmpty).toSet
-          require(want.nonEmpty && want.subsetOf(
-            Set("head", "middle", "tail")),
-            s"-ccnet wants head|middle|tail, got $keepList")
-          val asg = QueriesPipeline.ccnetBucketAssign(
-              kept.select(col("doc_id"), col("lang"), col("text")))
-            .select(col("doc_id"), col("bucket"))
-          val before = kept.count()
-          // null-lang docs are EXEMPT (kept), same as the -temperature
-          // gate: they have no language tercile to fall in — without
-          // the exemption the assign's lang-keyed joins would silently
-          // classify every null-lang doc as tail regardless of fluency
-          kept = kept.join(asg, Seq("doc_id"), "left")
-            .where(col("lang").isNull ||
-              coalesce(col("bucket"), lit("tail")).isin(want.toSeq: _*))
-            .drop("bucket")
-          ccnetDropped = before - kept.count()
-        }
-        var contamDropped = 0L
-        var piiCache: Option[org.apache.spark.sql.DataFrame] = None
-        var contamCache: Option[org.apache.spark.sql.DataFrame] = None
-        opt(rest, "-decontaminate").foreach { benchDir =>
-          // Benchmark decontamination gate (the decontaminate query's
-          // relation, applied): drop any kept doc sharing a word
-          // 8-gram with the benchmark corpus at <benchDir>. Two
-          // accepted layouts, auto-detected:
-          //  - a GramStore dir (`gramstore` verb): the frozen bucketed
-          //    gram table reads in place — the repeated-increment
-          //    shape (only increment-derived rows ever shuffle);
-          //  - a raw parquet dir with a `text` column: grams computed
-          //    in-plan, join regime census-chosen (contaminationHits —
-          //    eval suites broadcast, 10M+-gram corpora shuffle-join).
-          // one synthetic doc_id PER BENCH ROW: wordGrams8 windows by
-          // (doc_id, pos), so a shared id would interleave two docs'
-          // tokens at equal positions and scramble the grams
-          // -norm: lowercase + punctuation-fold both sides before
-          // gram matching (decontaminate_norm's transform) — a
-          // GramStore dir overrides the flag with its own `norm`
-          // sidecar, because probing a store with a DIFFERENT
-          // normalization than it was installed with never matches
-          val rawNorm = rest.contains("-norm")
-          val hitsFull =
-            if (graft.ops.GramStore.isStore(benchDir)) {
-              val storeNorm = graft.ops.GramStore.normalized(benchDir)
-              if (rawNorm && !storeNorm)
-                System.err.println(s"corpus: -norm ignored — gram store " +
-                  s"$benchDir was installed raw (re-run `gramstore -norm`)")
-              graft.ops.GramStore.hits(
-                kept.select(col("doc_id"), col("text")),
-                graft.ops.GramStore.open(spark, benchDir), storeNorm)
-            } else {
-              val benchDocs = spark.read.parquet(benchDir)
-              require(benchDocs.columns.contains("text"),
-                s"-decontaminate $benchDir needs a `text` column, has " +
-                  benchDocs.columns.mkString(", "))
-              // persisted for the census and the join; every later
-              // pass over `kept` reads it too, so it is freed with the
-              // verb's other caches
-              val bench = QueriesPipeline.wordGrams8(
-                  benchDocs
-                    .select(monotonically_increasing_id().as("doc_id"),
-                      col("text")), rawNorm)
-                .select(col("g")).distinct().persist()
-              contamCache = Some(bench)
-              QueriesPipeline.contaminationHits(
-                QueriesPipeline.wordGrams8(
-                  kept.select(col("doc_id"), col("text")), rawNorm), bench)
-            }
-          val hits = hitsFull.select(col("doc_id")).distinct()
-          val before = kept.count()
-          kept = kept.join(hits, Seq("doc_id"), "left_anti")
-          contamDropped = before - kept.count()
-        }
-        var classifyDropped = 0L
-        if (rest.contains("-classify")) {
-          // Trained quality-classifier gate (the centroid_* queries,
-          // applied — the FineWeb/RefinedWeb discipline: TRAIN the
-          // quality filter on the corpus, then RUN it in the export
-          // path): one featurize pass over the kept docs trains the
-          // Rocchio centroid model (65 rows, broadcast), and every
-          // document the model scores negative drops under its own
-          // reason. The distilled label is the Gopher-style
-          // minimum-length gate re-derived from hashed bag-of-words
-          // alone — deterministic, integer-exact, no RNG.
-          val feat = QueriesPipeline.centroidFeatures(
-            kept.select(col("doc_id"), col("text"))).localCheckpoint()
-          val neg = QueriesPipeline.centroidScore(feat,
-              QueriesPipeline.centroidModel(feat))
-            .where(col("pred") === -1L).select("doc_id")
-          val before = kept.count()
-          kept = kept.join(neg, Seq("doc_id"), "left_anti")
-          classifyDropped = before - kept.count()
-        }
-        var piiRedacted = 0L
-        if (rest.contains("-pii")) {
-          // PII scrub (pii_scrub's transform, applied): redact emails /
-          // IPv4s / phone-shaped numbers in the EXPORTED text to typed
-          // placeholders. Map-only (no shuffle); runs before the
-          // curriculum/split assigners so the exported text and every
-          // assignment computed from it stay self-consistent (the
-          // recompute-from-export spec discipline).
-          // The gauge counts placeholders on the redaction OUTPUT
-          // (minus any already present), not raw pattern hits on the
-          // source: nested matches (IP-shaped host inside an email)
-          // are one redaction, not two.
-          val counted = kept
-            .withColumn("_pii_red", QueriesPipeline.piiRedact(col("text")))
-            .withColumn("_pii_n",
-              // clamped at 0 per row: a redacted span that itself
-              // contained a literal placeholder token (e.g. an <IP>
-              // inside an email local-part) consumes more placeholders
-              // than it adds, and a negative row must not deflate the
-              // aggregate gauge
-              greatest(lit(0L),
-                QueriesPipeline.piiPlaceholders(col("_pii_red")) -
-                  QueriesPipeline.piiPlaceholders(col("text"))))
-            .withColumn("text", col("_pii_red")).drop("_pii_red")
-            .cache() // consumed by the count aggregate AND the build
-          piiCache = Some(counted)
-          piiRedacted = counted.agg(coalesce(sum("_pii_n"), lit(0L)))
-            .head().getLong(0)
-          kept = counted.drop("_pii_n")
-        }
-        var corpus = kept
-          .withColumn("n_tokens", size(split(col("text"), " ")).cast("long"))
-          .withColumn("shard",
-            Queries.md5Long(col("doc_id").cast("string")) % shards)
-          .select(col("shard"), col("doc_id"), col("text"), col("lang"),
-            col("source"), col("n_tokens"))
-        if (rest.contains("-curriculum") || rest.contains("-split") ||
-            rest.contains("-softdedup")) {
-          // the assigners below reference the corpus frame SEVERAL
-          // times (token explode + join back; star edges + label
-          // init), and by here its lineage carries every gate the
-          // flags enabled (quality joins + exactsubstr rewrite + dsir
-          // weights + ccnet assign ...). Duplicating that subplan per
-          // reference blows the DRIVER heap in the optimizer long
-          // before any executor works — observed as a 500-doc OOM
-          // with -exactsubstr -dsir -split together. One eager
-          // checkpoint makes the assigners read a leaf.
-          corpus = corpus.localCheckpoint()
-        }
-        if (rest.contains("-softdedup")) {
-          // soft_dedup applied to the EXPORTED text: every doc gains
-          // its sampling weight_bp (10^8 div mean line commonness) —
-          // a REWEIGHT column, not a gate; the training loader reads
-          // it to downsample common content without losing any doc.
-          // Post-gate like the other assigners, on the post-scrub
-          // text, so recompute-from-export reproduces the column.
-          val w = QueriesPipeline.softDedupWeights(
-              corpus.select(col("doc_id"), col("text")))
-            .select(col("doc_id"), col("weight_bp"))
-          corpus = corpus.join(w, "doc_id")
-        }
-        if (rest.contains("-curriculum")) {
-          // curriculum_order applied to the EXPORTED corpus: difficulty
-          // quartile + within-(bucket, source) interleave rank columns;
-          // training order = (bucket, intra, source) lexicographic.
-          // Post-gate on purpose — an order computed over docs the
-          // gates drop would leave rank holes.
-          val asg = QueriesPipeline.curriculumAssign(
-              corpus.select(col("doc_id"), col("text"), col("source")))
-            .select(col("doc_id"), col("bucket"), col("intra"))
-          corpus = corpus.join(asg, "doc_id")
-        }
-        if (rest.contains("-split")) {
-          // leakage-safe train/val/test assignment (leakage_split
-          // applied to the EXPORTED text): docs sharing any 15-word
-          // window land in the same split — the coin is thrown once
-          // per connected-component root, so boilerplate chains can't
-          // straddle train and eval. Runs on the post-gate corpus: a
-          // split computed before dedup would waste its edges on docs
-          // the gates drop anyway.
-          val asg = QueriesPipeline.leakageSplitAssign(
-              corpus.select(col("doc_id"), col("text")))
-            .select(col("doc_id"), col("split"))
-          corpus = corpus.join(asg, "doc_id")
-        }
-        corpus = corpus.cache()
-        corpus.write.partitionBy("shard").mode("overwrite")
-          .parquet(s"$outDir/corpus")
-        corpus.groupBy("shard")
-          .agg(count(lit(1)).as("n_docs"), sum("n_tokens").as("n_tokens"),
-            min("doc_id").as("min_doc"), max("doc_id").as("max_doc"))
-          .coalesce(1).write.mode("overwrite").parquet(s"$outDir/manifest")
-        corpus.groupBy("lang", "source")
-          .agg(count(lit(1)).as("n_docs"), sum("n_tokens").as("n_tokens"))
-          .coalesce(1).write.mode("overwrite").parquet(s"$outDir/datacard")
-        if (rest.contains("-epochs")) {
-          // epoch_mix applied to the exported corpus: the per-source
-          // repeat-allocation plan (Muennighoff-style 4-epoch cap over
-          // sqrt-temperature targets) written beside the datacard —
-          // the planner table a data-constrained training run reads
-          QueriesPipeline.epochMixOf(
-              corpus.select(col("source"), col("text")))
-            .coalesce(1).write.mode("overwrite")
-            .parquet(s"$outDir/epochs")
-        }
-        val reasons = labeled.groupBy("drop_reason").count()
-          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-        // every gauge is a driver-side value: gather them, append once
-        val gauges = Seq.newBuilder[(String, Long)]
-        gauges += "docs_in" -> reasons.values.sum
-        reasons.foreach { case (reason, n) =>
-          gauges += (
-            if (reason == "keep") "docs_kept" -> (n - substrEmptied -
-              mixtureDropped - ccnetDropped - dsirDropped - contamDropped -
-              classifyDropped)
-            else s"dropped_$reason" -> n)
-        }
-        if (rest.contains("-exactsubstr")) {
-          gauges += "exactsubstr_tokens_removed" -> spansRemoved
-          gauges += "dropped_exactsubstr_empty" -> substrEmptied
-        }
-        if (rest.contains("-temperature"))
-          gauges += "dropped_mixture" -> mixtureDropped
-        if (rest.contains("-ccnet")) gauges += "dropped_ccnet" -> ccnetDropped
-        if (rest.contains("-dsir")) gauges += "dropped_dsir" -> dsirDropped
-        if (opt(rest, "-decontaminate").isDefined)
-          gauges += "dropped_contaminated" -> contamDropped
-        if (rest.contains("-classify"))
-          gauges += "dropped_classify" -> classifyDropped
-        // a TRANSFORM gauge, not a drop reason: how many PII spans were
-        // redacted in the exported text (docs are all kept)
-        if (rest.contains("-pii")) gauges += "pii_redacted" -> piiRedacted
-        if (rest.contains("-split"))
-          corpus.groupBy("split").count().collect().foreach(r =>
-            gauges += s"split_${r.getString(0)}" -> r.getLong(1))
-        new Metrics.Table(spark, s"$outDir/metrics").append(
-          gauges.result().map { case (name, v) =>
-            Metrics.MetricRow(0, "corpus", name, v)
-          })
-        labeled.unpersist()
-        substrCache.foreach(_.unpersist())
-        dsirCache.foreach(_.unpersist())
-        piiCache.foreach(_.unpersist())
-        contamCache.foreach(_.unpersist())
-        println(s"corpus: ${reasons.getOrElse("keep", 0L)} docs kept of " +
-          s"${reasons.values.sum} into $shards shards " +
-          reasons.toSeq.sortBy(_._1)
-            .map { case (k, v) => s"$k=$v" }.mkString("(", " ", ")"))
-        corpus.unpersist()
-        0
+              when(col("gopher_verdict") =!= "keep", "quality")
+                .when(col("dedup_status") =!= "keep", "exact_dup")
+                .when(col("n_dropped") =!= 0, "line_dup")
+                .when(col("dup_bp") >= 2000L, "span_dup")
+                .when(col("rarity_per_token_bp") >= 400000L, "outlier")
+                .otherwise("keep"))
+          if (rest.contains("-neardup")) {
+            // near-dup policy: of each verified MinHash pair (a < b),
+            // the higher doc_id drops — chains keep their lowest member
+            val drops = q("minhash_lsh")
+              .select(col("b_id").as("doc_id")).distinct()
+              .withColumn("near_drop", lit(1))
+            labeled = labeled.join(drops, Seq("doc_id"), "left")
+              .withColumn("drop_reason",
+                when(col("drop_reason") === "keep" && col("near_drop") === 1,
+                  "near_dup").otherwise(col("drop_reason")))
+              .drop("near_drop")
+          }
+          labeled = pin(labeled.cache())
+          var kept = labeled.where(col("drop_reason") === "keep")
+            .select(col("doc_id"), col("text"), col("lang"), col("source"))
+          var spansRemoved = 0L
+          var substrEmptied = 0L
+          if (rest.contains("-exactsubstr")) {
+            // ExactSubstr span REMOVAL (Lee et al. ACL 2022) on the kept
+            // corpus: cross-document duplicated 15-word runs are cut from
+            // the text itself (all occurrences), not just counted — the
+            // doc-level dedup stages above can't touch a boilerplate
+            // paragraph embedded in otherwise-unique documents
+            val cleaned = graft.ops.ExactSubstr
+              .clean(kept.select(col("doc_id"), col("text")))
+              .select(col("doc_id"), col("clean_text"), col("n_removed"))
+            // cached: the two metric aggregates below AND the corpus
+            // build consume this frame — uncached, the whole removal
+            // pipeline (window hashing + coverage + text rebuild, the
+            // heaviest stage of the job) would execute three times
+            val rewritten = pin(kept.join(cleaned, "doc_id")
+              .select(col("doc_id"), col("clean_text").as("text"),
+                col("lang"), col("source"), col("n_removed"))
+              .cache())
+            spansRemoved = rewritten.agg(coalesce(sum("n_removed"), lit(0L)))
+              .head().getLong(0)
+            // a doc whose text was ENTIRELY duplicated spans is an empty
+            // string now — an empty training document is not a document;
+            // drop it under its own reason (conservation still holds)
+            substrEmptied = rewritten.where(length(col("text")) === 0).count()
+            kept = rewritten.where(length(col("text")) > 0).drop("n_removed")
+          }
+          var mixtureDropped = 0L
+          if (rest.contains("-temperature")) {
+            // α = 1/2 temperature rebalance (the mixture_temperature
+            // query's rates, applied): downsample over-represented
+            // languages so kept token shares match p_l ∝ √tok_l, sized
+            // by the binding constraint — the scarcest-relative-to-
+            // target language keeps EVERYTHING (rate 10000 bp, no
+            // upsampling ever), everything else downsamples toward its
+            // target share via the deterministic md5 coin (sample_cap's
+            // discipline: content-keyed, stable across runs and
+            // partitionings, integer-exact)
+            val byLang = kept
+              // null-lang docs take no part in the rebalance (kept
+              // whole by the left join below) — excluded here so a
+              // null group can't bind the budget it never consumes
+              .where(col("lang").isNotNull)
+              .select(col("lang"),
+                size(split(col("text"), " ")).cast("long").as("nt"))
+              .groupBy("lang").agg(sum("nt").as("tok"))
+            val keepRates = temperatureKeepRates(byLang)
+            val before = kept.count()
+            // LEFT join + keep-all default: an inner join would silently
+            // DROP docs with NULL lang (null equi-join keys never match,
+            // even though byLang's groupBy produced a null-lang rate
+            // row), misattributing them to dropped_mixture. Null-lang
+            // docs take no part in language rebalancing — keep them.
+            kept = kept.join(broadcast(keepRates), Seq("lang"), "left")
+              .where(Queries.md5Long(col("doc_id").cast("string")) % 10000L
+                < coalesce(col("keep_bp"), lit(10000L)))
+              .drop("keep_bp")
+            mixtureDropped = before - kept.count()
+          }
+          var dsirDropped = 0L
+          opt(rest, "-dsir").foreach { spec =>
+            // DSIR selection gate (dsir_select applied): keep only the
+            // top keep_bp basis-points share of the kept pool by hashed
+            // n-gram importance weight toward the target language.
+            // The cutoff weight comes from the WEIGHT HISTOGRAM — the
+            // ccnet_buckets discipline: the running count runs over the
+            // bounded per-weight census (weights are integers in
+            // half-bit units), never a per-doc global window. Ties at
+            // the cutoff weight all keep, so the kept count can exceed
+            // the target by the tie class — documented, deterministic.
+            val parts = spec.split(":", 2)
+            require(parts.length == 2 && parts(1).matches("[0-9]+"),
+              s"-dsir wants lang:keep_bp, got $spec")
+            val (targetLang, keepBp) = (parts(0), parts(1).toLong)
+            require(keepBp >= 1 && keepBp <= 10000,
+              s"-dsir keep_bp out of (0, 10000]: $keepBp")
+            // truncate the gate lineage before this stage references it
+            // repeatedly (weights + cutoff + count + build): with
+            // -exactsubstr ahead of it, the accumulated plan TEXT alone
+            // (AQE renders it per executed stage) OOM'd the driver on a
+            // 500-doc corpus — caching doesn't shrink a plan, a
+            // checkpoint does
+            kept = kept.localCheckpoint()
+            val before = kept.count()
+            val target = (before * keepBp + 9999L) / 10000L
+            // cached: the weight pipeline (corpus-wide token explode +
+            // two count shuffles, the heaviest stage of this gate) is
+            // consumed by the cutoff aggregate, the dropped count, AND
+            // the corpus build below — uncached it would execute three
+            // times (the -exactsubstr discipline)
+            val w = pin(QueriesPipeline.dsirWeights(
+              kept.select(col("doc_id"), col("lang"), col("text")), targetLang)
+              .select(col("doc_id"), col("dsir_w"))
+              .cache())
+            // histogram cumsum over DESCENDING weight: the weight
+            // histogram is doc-cardinality in the worst case (every doc
+            // a distinct weight), so this must not be a no-partition
+            // window (single task) — the two-phase PrefixSum runs it at
+            // partition parallelism. Descending = ascending over the
+            // negated weight (weights are sums of bounded half-bit
+            // terms, nowhere near Long.MinValue).
+            val cutoff = graft.ops.PrefixSum.groupedRunningSum(
+                w.groupBy("dsir_w").count(),
+                lit(1), -col("dsir_w"), col("count"), "cum")
+              .where(col("cum") >= target)
+              .agg(max(col("dsir_w")).as("cutoff"))
+            kept = kept.join(w, "doc_id")
+              .crossJoin(broadcast(cutoff))
+              .where(col("dsir_w") >= coalesce(col("cutoff"), lit(Long.MinValue)))
+              .drop("dsir_w", "cutoff")
+            dsirDropped = before - kept.count()
+          }
+          var ccnetDropped = 0L
+          opt(rest, "-ccnet").foreach { keepList =>
+            // CCNet bucket gate (ccnet_buckets applied): keep only the
+            // named per-language LM-score terciles — `-ccnet head` is
+            // the paper's training corpus, `-ccnet head,middle` the
+            // permissive cut. Docs too short to score (no bigrams)
+            // count as tail: unscoreable = lowest confidence.
+            val want = keepList.split(",").map(_.trim)
+              .filter(_.nonEmpty).toSet
+            require(want.nonEmpty && want.subsetOf(
+              Set("head", "middle", "tail")),
+              s"-ccnet wants head|middle|tail, got $keepList")
+            val asg = QueriesPipeline.ccnetBucketAssign(
+                kept.select(col("doc_id"), col("lang"), col("text")))
+              .select(col("doc_id"), col("bucket"))
+            val before = kept.count()
+            // null-lang docs are EXEMPT (kept), same as the -temperature
+            // gate: they have no language tercile to fall in — without
+            // the exemption the assign's lang-keyed joins would silently
+            // classify every null-lang doc as tail regardless of fluency
+            kept = kept.join(asg, Seq("doc_id"), "left")
+              .where(col("lang").isNull ||
+                coalesce(col("bucket"), lit("tail")).isin(want.toSeq: _*))
+              .drop("bucket")
+            ccnetDropped = before - kept.count()
+          }
+          var contamDropped = 0L
+          opt(rest, "-decontaminate").foreach { benchDir =>
+            // Benchmark decontamination gate (the decontaminate query's
+            // relation, applied): drop any kept doc sharing a word
+            // 8-gram with the benchmark corpus at <benchDir>. Two
+            // accepted layouts, auto-detected:
+            //  - a GramStore dir (`gramstore` verb): the frozen bucketed
+            //    gram table reads in place — the repeated-increment
+            //    shape (only increment-derived rows ever shuffle);
+            //  - a raw parquet dir with a `text` column: grams computed
+            //    in-plan, join regime census-chosen (contaminationHits —
+            //    eval suites broadcast, 10M+-gram corpora shuffle-join).
+            // one synthetic doc_id PER BENCH ROW: wordGrams8 windows by
+            // (doc_id, pos), so a shared id would interleave two docs'
+            // tokens at equal positions and scramble the grams
+            // -norm: lowercase + punctuation-fold both sides before
+            // gram matching (decontaminate_norm's transform) — a
+            // GramStore dir overrides the flag with its own `norm`
+            // sidecar, because probing a store with a DIFFERENT
+            // normalization than it was installed with never matches
+            val rawNorm = rest.contains("-norm")
+            val hitsFull =
+              if (graft.ops.GramStore.isStore(benchDir)) {
+                val storeNorm = graft.ops.GramStore.normalized(benchDir)
+                if (rawNorm && !storeNorm)
+                  System.err.println(s"corpus: -norm ignored — gram store " +
+                    s"$benchDir was installed raw (re-run `gramstore -norm`)")
+                graft.ops.GramStore.hits(
+                  kept.select(col("doc_id"), col("text")),
+                  graft.ops.GramStore.open(spark, benchDir), storeNorm)
+              } else {
+                val benchDocs = spark.read.parquet(benchDir)
+                require(benchDocs.columns.contains("text"),
+                  s"-decontaminate $benchDir needs a `text` column, has " +
+                    benchDocs.columns.mkString(", "))
+                // persisted for the census and the join; every later
+                // pass over `kept` reads it too, so it is freed with the
+                // verb's other caches
+                val bench = pin(QueriesPipeline.wordGrams8(
+                    benchDocs
+                      .select(monotonically_increasing_id().as("doc_id"),
+                        col("text")), rawNorm)
+                  .select(col("g")).distinct().persist())
+                QueriesPipeline.contaminationHits(
+                  QueriesPipeline.wordGrams8(
+                    kept.select(col("doc_id"), col("text")), rawNorm), bench)
+              }
+            val hits = hitsFull.select(col("doc_id")).distinct()
+            val before = kept.count()
+            kept = kept.join(hits, Seq("doc_id"), "left_anti")
+            contamDropped = before - kept.count()
+          }
+          var classifyDropped = 0L
+          if (rest.contains("-classify")) {
+            // Trained quality-classifier gate (the centroid_* queries,
+            // applied — the FineWeb/RefinedWeb discipline: TRAIN the
+            // quality filter on the corpus, then RUN it in the export
+            // path): one featurize pass over the kept docs trains the
+            // Rocchio centroid model (65 rows, broadcast), and every
+            // document the model scores negative drops under its own
+            // reason. The distilled label is the Gopher-style
+            // minimum-length gate re-derived from hashed bag-of-words
+            // alone — deterministic, integer-exact, no RNG.
+            val feat = QueriesPipeline.centroidFeatures(
+              kept.select(col("doc_id"), col("text"))).localCheckpoint()
+            val neg = QueriesPipeline.centroidScore(feat,
+                QueriesPipeline.centroidModel(feat))
+              .where(col("pred") === -1L).select("doc_id")
+            val before = kept.count()
+            kept = kept.join(neg, Seq("doc_id"), "left_anti")
+            classifyDropped = before - kept.count()
+          }
+          var piiRedacted = 0L
+          if (rest.contains("-pii")) {
+            // PII scrub (pii_scrub's transform, applied): redact emails /
+            // IPv4s / phone-shaped numbers in the EXPORTED text to typed
+            // placeholders. Map-only (no shuffle); runs before the
+            // curriculum/split assigners so the exported text and every
+            // assignment computed from it stay self-consistent (the
+            // recompute-from-export spec discipline).
+            // The gauge counts placeholders on the redaction OUTPUT
+            // (minus any already present), not raw pattern hits on the
+            // source: nested matches (IP-shaped host inside an email)
+            // are one redaction, not two.
+            val counted = pin(kept
+              .withColumn("_pii_red", QueriesPipeline.piiRedact(col("text")))
+              .withColumn("_pii_n",
+                // clamped at 0 per row: a redacted span that itself
+                // contained a literal placeholder token (e.g. an <IP>
+                // inside an email local-part) consumes more placeholders
+                // than it adds, and a negative row must not deflate the
+                // aggregate gauge
+                greatest(lit(0L),
+                  QueriesPipeline.piiPlaceholders(col("_pii_red")) -
+                    QueriesPipeline.piiPlaceholders(col("text"))))
+              .withColumn("text", col("_pii_red")).drop("_pii_red")
+              .cache()) // consumed by the count aggregate AND the build
+            piiRedacted = counted.agg(coalesce(sum("_pii_n"), lit(0L)))
+              .head().getLong(0)
+            kept = counted.drop("_pii_n")
+          }
+          var corpus = kept
+            .withColumn("n_tokens", size(split(col("text"), " ")).cast("long"))
+            .withColumn("shard",
+              Queries.md5Long(col("doc_id").cast("string")) % shards)
+            .select(col("shard"), col("doc_id"), col("text"), col("lang"),
+              col("source"), col("n_tokens"))
+          if (rest.contains("-curriculum") || rest.contains("-split") ||
+              rest.contains("-softdedup")) {
+            // the assigners below reference the corpus frame SEVERAL
+            // times (token explode + join back; star edges + label
+            // init), and by here its lineage carries every gate the
+            // flags enabled (quality joins + exactsubstr rewrite + dsir
+            // weights + ccnet assign ...). Duplicating that subplan per
+            // reference blows the DRIVER heap in the optimizer long
+            // before any executor works — observed as a 500-doc OOM
+            // with -exactsubstr -dsir -split together. One eager
+            // checkpoint makes the assigners read a leaf.
+            corpus = corpus.localCheckpoint()
+          }
+          if (rest.contains("-softdedup")) {
+            // soft_dedup applied to the EXPORTED text: every doc gains
+            // its sampling weight_bp (10^8 div mean line commonness) —
+            // a REWEIGHT column, not a gate; the training loader reads
+            // it to downsample common content without losing any doc.
+            // Post-gate like the other assigners, on the post-scrub
+            // text, so recompute-from-export reproduces the column.
+            val w = QueriesPipeline.softDedupWeights(
+                corpus.select(col("doc_id"), col("text")))
+              .select(col("doc_id"), col("weight_bp"))
+            corpus = corpus.join(w, "doc_id")
+          }
+          if (rest.contains("-curriculum")) {
+            // curriculum_order applied to the EXPORTED corpus: difficulty
+            // quartile + within-(bucket, source) interleave rank columns;
+            // training order = (bucket, intra, source) lexicographic.
+            // Post-gate on purpose — an order computed over docs the
+            // gates drop would leave rank holes.
+            val asg = QueriesPipeline.curriculumAssign(
+                corpus.select(col("doc_id"), col("text"), col("source")))
+              .select(col("doc_id"), col("bucket"), col("intra"))
+            corpus = corpus.join(asg, "doc_id")
+          }
+          if (rest.contains("-split")) {
+            // leakage-safe train/val/test assignment (leakage_split
+            // applied to the EXPORTED text): docs sharing any 15-word
+            // window land in the same split — the coin is thrown once
+            // per connected-component root, so boilerplate chains can't
+            // straddle train and eval. Runs on the post-gate corpus: a
+            // split computed before dedup would waste its edges on docs
+            // the gates drop anyway.
+            val asg = QueriesPipeline.leakageSplitAssign(
+                corpus.select(col("doc_id"), col("text")))
+              .select(col("doc_id"), col("split"))
+            corpus = corpus.join(asg, "doc_id")
+          }
+          corpus = pin(corpus.cache())
+          corpus.write.partitionBy("shard").mode("overwrite")
+            .parquet(s"$outDir/corpus")
+          corpus.groupBy("shard")
+            .agg(count(lit(1)).as("n_docs"), sum("n_tokens").as("n_tokens"),
+              min("doc_id").as("min_doc"), max("doc_id").as("max_doc"))
+            .coalesce(1).write.mode("overwrite").parquet(s"$outDir/manifest")
+          corpus.groupBy("lang", "source")
+            .agg(count(lit(1)).as("n_docs"), sum("n_tokens").as("n_tokens"))
+            .coalesce(1).write.mode("overwrite").parquet(s"$outDir/datacard")
+          if (rest.contains("-epochs")) {
+            // epoch_mix applied to the exported corpus: the per-source
+            // repeat-allocation plan (Muennighoff-style 4-epoch cap over
+            // sqrt-temperature targets) written beside the datacard —
+            // the planner table a data-constrained training run reads
+            QueriesPipeline.epochMixOf(
+                corpus.select(col("source"), col("text")))
+              .coalesce(1).write.mode("overwrite")
+              .parquet(s"$outDir/epochs")
+          }
+          val reasons = labeled.groupBy("drop_reason").count()
+            .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+          // every gauge is a driver-side value: gather them, append once
+          val gauges = Seq.newBuilder[(String, Long)]
+          gauges += "docs_in" -> reasons.values.sum
+          reasons.foreach { case (reason, n) =>
+            gauges += (
+              if (reason == "keep") "docs_kept" -> (n - substrEmptied -
+                mixtureDropped - ccnetDropped - dsirDropped - contamDropped -
+                classifyDropped)
+              else s"dropped_$reason" -> n)
+          }
+          if (rest.contains("-exactsubstr")) {
+            gauges += "exactsubstr_tokens_removed" -> spansRemoved
+            gauges += "dropped_exactsubstr_empty" -> substrEmptied
+          }
+          if (rest.contains("-temperature"))
+            gauges += "dropped_mixture" -> mixtureDropped
+          if (rest.contains("-ccnet")) gauges += "dropped_ccnet" -> ccnetDropped
+          if (rest.contains("-dsir")) gauges += "dropped_dsir" -> dsirDropped
+          if (opt(rest, "-decontaminate").isDefined)
+            gauges += "dropped_contaminated" -> contamDropped
+          if (rest.contains("-classify"))
+            gauges += "dropped_classify" -> classifyDropped
+          // a TRANSFORM gauge, not a drop reason: how many PII spans were
+          // redacted in the exported text (docs are all kept)
+          if (rest.contains("-pii")) gauges += "pii_redacted" -> piiRedacted
+          if (rest.contains("-split"))
+            corpus.groupBy("split").count().collect().foreach(r =>
+              gauges += s"split_${r.getString(0)}" -> r.getLong(1))
+          new Metrics.Table(spark, s"$outDir/metrics").append(
+            gauges.result().map { case (name, v) =>
+              Metrics.MetricRow(0, "corpus", name, v)
+            })
+          println(s"corpus: ${reasons.getOrElse("keep", 0L)} docs kept of " +
+            s"${reasons.values.sum} into $shards shards " +
+            reasons.toSeq.sortBy(_._1)
+              .map { case (k, v) => s"$k=$v" }.mkString("(", " ", ")"))
+          0
+        } finally pins.foreach(_.unpersist())
       case "gramstore" :: benchDir :: storeDir :: rest =>
         // Freeze a benchmark corpus's distinct word 8-grams as a
         // bucketed store (graft.ops.GramStore) — `corpus -decontaminate

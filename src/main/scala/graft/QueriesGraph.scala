@@ -6,6 +6,7 @@ import org.apache.spark.sql.expressions.Window
 
 import Queries.{t, fxSum, sqlFxSum}
 import graft.operators.Relational
+import graft.ops.WebGraphOp
 
 /** Batch 2 — link/graph operators (SURVEY §2.10, §2.5 A6-A10, §2.3 J5/J6).
   *
@@ -69,8 +70,8 @@ object QueriesGraph {
 
   /** T3 NodeDumper: top-k webgraph nodes by a chosen metric — here
     * inlink count desc, url asc tiebreak (NodeDumper.java:84-170
-    * -inlinks/-topn mode). Plans as TakeOrderedAndProject via
-    * Relational.globalTopN: each partition keeps k candidates, the
+    * -inlinks/-topn mode). orderBy + limit plans as
+    * TakeOrderedAndProject: each partition keeps k candidates, the
     * driver merges k·P rows — no global sort materialization at any
     * graph size. */
   val nodedumpTopk = Q(
@@ -82,7 +83,7 @@ object QueriesGraph {
         .distinct()
       val inDeg = edges.groupBy(col("dst").as("url"))
         .agg(count(lit(1)).as("in_deg"))
-      Relational.globalTopN(inDeg, Seq(desc("in_deg"), asc("url")), 25)
+      inDeg.orderBy(desc("in_deg"), asc("url")).limit(25)
     },
     Some("""
       WITH e AS (SELECT DISTINCT l_orderkey AS src, l_partkey AS dst
@@ -146,13 +147,12 @@ object QueriesGraph {
   private val LINKRANK_ITERS = 10
 
   /** G2 LinkRank: damped PageRank-style loop, score' = 0.15 + 0.85·Σ
-    * contribs (LinkRank.java:302-345, 603-605). Contributions are
-    * fixed-point quantized (1e-9) before each aggregation so every
-    * iteration is order-independent and engine-exact. Per the
-    * reference's A8 duplicate-elimination (LinkRank.java:585-597), a
-    * target accepts at most ONE contribution per source domain — edges
-    * are deduped per (src domain, dst) with a deterministic keeper
-    * (lowest src). Graph: lineitem edges modded to ~500 nodes;
+    * contribs (LinkRank.java:302-345, 603-605), with the reference's A8
+    * one-contribution-per-source-domain dedup (LinkRank.java:585-597).
+    * The edge table and the loop are the `linkrank` verb's own
+    * ([[graft.ops.WebGraphOp.linkrankEdges]],
+    * [[graft.ops.WebGraphOp.linkrankLoop]]), so the oracle checks the
+    * loop users run. Graph: lineitem edges modded to ~500 nodes;
     * domain = src % 50. */
   /** The linkrank plan. `finalEager` materializes the final node table
     * (localCheckpoint) so the edge cache can be released before
@@ -169,69 +169,13 @@ object QueriesGraph {
       (col("l_partkey") % 500 + 500).as("dst"))
       .filter(col("src") =!= col("dst"))
       .distinct()
-    val wDom = Window.partitionBy((col("src") % 50).as("dom"), col("dst"))
-      .orderBy(asc("src"))
-    // node set + out-degree come from the FULL graph (Node.numOutlinks);
-    // only the inbound contributions are domain-deduped. The out-degree
-    // join is loop-invariant — hoisted onto the cached edge table so
-    // each of the 10 iterations does ONE node join + the contribution
-    // agg, not three joins. (No broadcast hints: at real scale BOTH
-    // sides are |V|/|E|-sized — shuffle joins are the right shape.)
-    val outDeg = rawEdges.groupBy("src").agg(count(lit(1)).as("out_deg"))
-    val edges = rawEdges
-      .withColumn("rn", row_number().over(wDom))
-      .filter(col("rn") === 1).drop("rn")
-      .join(outDeg, "src")
-      .cache()
+    val edges = WebGraphOp.linkrankEdges(rawEdges, col("src") % 50).cache()
     val nodes0 = rawEdges.select(col("src").as("url"))
       .union(rawEdges.select(col("dst").as("url")))
       .distinct()
       .withColumn("score", lit(1.0))
-    // r16 NEGATIVE RESULT (kept as the buildHits contrast): rewriting this
-    // loop onto src-keyed score frames (the buildHits r16 shape —
-    // per-iteration left join against the src set instead of nodes0, one
-    // final nodes0 join) measured WORSE in the paired in-JVM A/B (cpu 2.5 →
-    // 32 s raw, still 2.5 → 6.8 s after pinning the src set as a checkpoint
-    // leaf; wall ~equal; OPTIMIZATION_r16.md item 2). This loop is LAZY
-    // between its 5-iteration checkpoints, and Spark reuses the one nodes0
-    // exchange across all five nested references — the src-keyed frame
-    // defeated that reuse (its subtree is rewritten per nesting level by
-    // self-join deduplication, so nothing canonicalizes equal), turning a
-    // shared shuffle into per-level recompute. buildHits wins from the same
-    // idea only because its half-steps are EAGER checkpoints — there is no
-    // cross-level plan sharing to lose. Shipped: the r15 nodes0 form,
-    // unchanged.
-    var nodes = nodes0
-    var deadNodes: Option[org.apache.spark.sql.DataFrame] = None
-    // localCheckpoint every 5th iteration: truncates lineage so the
-    // loop survives the reference's 10-iteration config without plan
-    // blowup (SURVEY §2.10) while short runs stay a single job;
-    // Bench/Verify clear the block cache per query.
-    for (it <- 1 to LINKRANK_ITERS) {
-      val contribs = edges
-        .join(nodes, edges("src") === nodes("url"))
-        .select(col("dst"),
-          round(col("score") / col("out_deg") * 1e9, 0).cast("long")
-            .as("c_fx"))
-        .groupBy("dst").agg(sum(col("c_fx")).as("sum_fx"))
-      nodes = nodes0.select(col("url"))
-        .join(contribs, nodes0("url") === contribs("dst"), "left")
-        .select(col("url"),
-          (lit(0.15) + lit(0.85) *
-            (coalesce(col("sum_fx"), lit(0L)).cast("double") / 1e9))
-            .as("score"))
-      // truncate lineage every 5 iterations, but not on the last one —
-      // the final plan is consumed exactly once anyway. The previous
-      // 5th-iteration checkpoint is dead once the new one exists.
-      if (it % 5 == 0 && it < LINKRANK_ITERS) {
-        val c = nodes.localCheckpoint()
-        deadNodes.foreach(
-          org.apache.spark.sql.graftbridge.ColumnBridge.freeLocalCheckpoint)
-        deadNodes = Some(c)
-        nodes = c
-      }
-    }
-    val plan = nodes.select(col("url"), round(col("score"), 6).as("score"))
+    val plan = WebGraphOp.linkrankLoop(edges, nodes0, LINKRANK_ITERS)
+      .select(col("url"), round(col("score"), 6).as("score"))
     if (finalEager) {
       // materialize the small final node table, then release the edge
       // cache — callers that never clear the block cache (a conductor

@@ -240,7 +240,7 @@ object ScaleProbe {
     // spark.driver.memory is NOT set: in local mode the driver JVM
     // already exists, so the conf would be a silent no-op; the heap
     // comes from build.sbt's forked-JVM -Xmx
-    val spark = GraftSession(s"local[$cpus]", cpus, extensions = false)
+    val spark = GraftSession(s"local[$cpus]", cpus)
     // SPARK_GRAFT_SCALE_PIN_SMJ=1 disables broadcast joins for the
     // whole probe (explicit broadcast() hints still honored): the
     // documented remedy when a decade pair is a plan transition —

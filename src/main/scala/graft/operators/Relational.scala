@@ -37,12 +37,6 @@ object Relational {
       .drop("__rn")
   }
 
-  /** Exact global top-N: Spark plans TakeOrderedAndProject — no full sort
-    * materialization. Deliberately-better replacement for the reference's
-    * per-reducer quota (SURVEY §7.4). */
-  def globalTopN(df: DataFrame, order: Seq[Column], n: Int): DataFrame =
-    df.orderBy(order: _*).limit(n)
-
   /** Distributed EXACT linear-interpolated quantile (quantile_cont
     * semantics) as an aggregate expression over rank/count columns.
     *

@@ -5,7 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.schemas.{CrawlRow, CrawlStatus}
-import graft.operators.Relational
 
 /** The user-facing CrawlDb read path (CrawlDbReader.java:160-1020):
   * -stats, -dump (csv/json), -topN, -url point lookup — as operators
@@ -97,11 +96,11 @@ object CrawlDbReader {
         col("datum.signature").as("signature"))).as("value"))
       .write.mode(SaveMode.Overwrite).text(outDir)
 
-  /** -topN by score (TakeOrderedAndProject, total order via url). */
+  /** -topN by score: orderBy + limit plans TakeOrderedAndProject, so
+    * no global sort is materialized; total order via url. */
   def topN(db: Dataset[CrawlRow], n: Int): DataFrame =
-    Relational.globalTopN(
-      db.toDF().select(col("url"), col("datum.score").as("score")),
-      Seq(desc("score"), asc("url")), n)
+    db.toDF().select(col("url"), col("datum.score").as("score"))
+      .orderBy(desc("score"), asc("url")).limit(n)
 
   /** -topHosts: the k most-crawled hosts by page count, through the
     * Misra–Gries two-pass (functions/FreqSketch.scala): sketch

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -12,9 +12,11 @@ import graft.schemas.{CrawlRow, ParseDataRow}
   * ops on a webgraphdb directory (reference: WebGraph.java:99-103 dir
   * layout, LinkRank.java:302-345 loop, ScoreUpdater.java join,
   * NodeDumper.java top-k). The oracle-checked algebra of these loops
-  * lives in QueriesGraph (linkrank/webgraph_* queries); this file wires
-  * the same shapes to segment parse_data and the crawldb for the CLI
-  * verbs `webgraph`, `linkrank`, `scoreupdater`, `nodedumper`.
+  * lives in QueriesGraph (webgraph_* queries); this file wires the same
+  * shapes to segment parse_data and the crawldb for the CLI verbs
+  * `webgraph`, `linkrank`, `scoreupdater`, `nodedumper`. The LinkRank
+  * loop itself lives here only: the oracle's `linkrank` query runs
+  * [[linkrankEdges]] and [[linkrankLoop]] on its own graph.
   *
   * Layout under <webgraphdb>/: `outlinks` (src, dst, anchor — one row
   * per deduped edge) and `nodes` (url, num_inlinks, num_outlinks,
@@ -84,28 +86,76 @@ object WebGraphOp {
       java.nio.file.StandardCopyOption.ATOMIC_MOVE)
   }
 
-  /** LinkRank loop over the built graph (LinkRank.java:302-345):
-    * score' = 0.15 + 0.85·Σ(score/out_deg) with the reference's A8
-    * one-contribution-per-source-domain dedup, fixed-point quantized
-    * contributions (order-independent sums — the QueriesGraph.linkrank
-    * shape on real urls), lineage checkpoint every 5 iterations.
-    * Writes scores back into <dir>/nodes. */
+  /** LinkRank over the built graph (LinkRank.java:302-345):
+    * [[linkrankEdges]] then [[linkrankLoop]] on real urls, one
+    * contribution per source host. Writes scores back into
+    * <dir>/nodes. */
   def linkrank(spark: SparkSession, dir: String, iterations: Int = 10)
       : Unit = {
-    val e0 = readOutlinks(spark, dir)
-      .select(col("src"), col("dst"))
-    val wDom = Window
-      .partitionBy(Urls.host(col("src")).as("dom"), col("dst"))
-      .orderBy(asc("src"))
-    val outDeg = e0.groupBy("src").agg(count(lit(1)).as("out_deg"))
-    val edges = e0.withColumn("rn", row_number().over(wDom))
-      .filter(col("rn") === 1).drop("rn")
-      .join(outDeg, "src")
+    val edges = linkrankEdges(
+      readOutlinks(spark, dir).select(col("src"), col("dst")),
+      Urls.host(col("src")))
     val nodes0 = readNodes(spark, dir)
       .select(col("url"), col("num_inlinks"), col("num_outlinks"))
-    var nodes = nodes0.withColumn("score", lit(1.0))
-      .select(col("url"), col("score"))
-    var deadNodes: Option[org.apache.spark.sql.DataFrame] = None
+    val nodes = linkrankLoop(edges,
+      nodes0.withColumn("score", lit(1.0)).select(col("url"), col("score")),
+      iterations)
+    nodes0.join(nodes, "url")
+      .select(col("url"), col("num_inlinks"), col("num_outlinks"),
+        round(col("score"), 6).as("score"))
+      .write.mode(SaveMode.Overwrite).parquet(s"$dir/nodes_next")
+    swap(dir, "nodes")
+  }
+
+  /** LinkRank's edge table over a (src, dst) edge frame `e0`, with the
+    * reference's A8 duplicate elimination (LinkRank.java:585-597): a
+    * target accepts at most ONE contribution per source `domain`, so
+    * edges are deduped per (domain, dst) with a deterministic keeper
+    * (lowest src). Each kept edge carries its source's out_deg, which
+    * comes from the FULL graph (Node.numOutlinks): only the inbound
+    * contributions are domain-deduped. The out-degree join is
+    * loop-invariant, so it is done here once rather than per
+    * iteration. (No broadcast hints: at real scale BOTH sides are
+    * |V|/|E|-sized — shuffle joins are the right shape.) */
+  private[graft] def linkrankEdges(e0: DataFrame, domain: Column)
+      : DataFrame = {
+    val wDom = Window.partitionBy(domain.as("dom"), col("dst"))
+      .orderBy(asc("src"))
+    val outDeg = e0.groupBy("src").agg(count(lit(1)).as("out_deg"))
+    e0.withColumn("rn", row_number().over(wDom))
+      .filter(col("rn") === 1).drop("rn")
+      .join(outDeg, "src")
+  }
+
+  /** The LinkRank iterations over [[linkrankEdges]]' table and the
+    * initial (url, score) node frame: score' = 0.15 + 0.85·Σ(score /
+    * out_deg) (LinkRank.java:302-345, 603-605), every node keeping
+    * 0.15 when nothing links to it. Contributions are fixed-point
+    * quantized (1e-9) before each aggregation, so every iteration is
+    * order-independent and engine-exact. Returns the unrounded
+    * (url, score) frame after `iterations` steps.
+    *
+    * r16 NEGATIVE RESULT (kept as the QueriesGraph.buildHits contrast):
+    * rewriting this loop onto src-keyed score frames (the buildHits r16
+    * shape — per-iteration left join against the src set instead of the
+    * initial nodes, one final node join) measured WORSE in the paired
+    * in-JVM A/B (cpu 2.5 → 32 s raw, still 2.5 → 6.8 s after pinning the
+    * src set as a checkpoint leaf; wall ~equal; OPTIMIZATION_r16.md
+    * item 2). This loop is LAZY between its 5-iteration checkpoints, and
+    * Spark reuses the one initial-nodes exchange across all five nested
+    * references — the src-keyed frame defeated that reuse (its subtree
+    * is rewritten per nesting level by self-join deduplication, so
+    * nothing canonicalizes equal), turning a shared shuffle into
+    * per-level recompute. buildHits wins from the same idea only because
+    * its half-steps are EAGER checkpoints — there is no cross-level plan
+    * sharing to lose. */
+  private[graft] def linkrankLoop(edges: DataFrame, nodes0: DataFrame,
+      iterations: Int): DataFrame = {
+    var nodes = nodes0
+    var deadNodes: Option[DataFrame] = None
+    // localCheckpoint every 5th iteration: truncates lineage so the
+    // loop survives the reference's 10-iteration config without plan
+    // blowup (SURVEY §2.10) while short runs stay a single job.
     for (it <- 1 to iterations) {
       val contribs = edges
         .join(nodes, edges("src") === nodes("url"))
@@ -119,6 +169,9 @@ object WebGraphOp {
           (lit(0.15) + lit(0.85) *
             (coalesce(col("sum_fx"), lit(0L)).cast("double") / 1e9))
             .as("score"))
+      // not on the last iteration — the final plan is consumed exactly
+      // once anyway. The previous 5th-iteration checkpoint is dead once
+      // the new one exists.
       if (it % 5 == 0 && it < iterations) {
         val c = nodes.localCheckpoint()
         deadNodes.foreach(
@@ -127,11 +180,7 @@ object WebGraphOp {
         nodes = c
       }
     }
-    nodes0.join(nodes, "url")
-      .select(col("url"), col("num_inlinks"), col("num_outlinks"),
-        round(col("score"), 6).as("score"))
-      .write.mode(SaveMode.Overwrite).parquet(s"$dir/nodes_next")
-    swap(dir, "nodes")
+    nodes
   }
 
   /** ScoreUpdater (ScoreUpdater.java): left-join node scores into the

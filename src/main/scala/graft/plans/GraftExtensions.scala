@@ -10,7 +10,8 @@ import org.apache.spark.sql.types.IntegerType
 
 /** The engine's `SparkSessionExtensions` hook (SURVEY §7.3): what a
   * deployment passes to its session builder's `withExtensions(...)`
-  * (as `graft.GraftSession` does) or names in
+  * (as `graft.GraftSession` does for every graft session — there is one
+  * optimizer configuration) or names in
   * `spark.sql.extensions=graft.plans.GraftExtensions`.
   *
   * Registers:
@@ -33,14 +34,17 @@ import org.apache.spark.sql.types.IntegerType
   *    (`min/max/sum/count/avg(x) OVER (PARTITION BY k)`) into a
   *    map-side-combinable group-by joined back — the skew-safe shape
   *    this repo's dedup surfaces use by hand, applied by the engine
-  *    to any query (opt out:
-  *    `spark.graft.rewrite.windowAggToJoin=false`);
+  *    to any query;
   *  - [[RewriteKeeperElection]], an optimizer rule rewriting keeper
   *    election — `row_number() OVER (PARTITION BY k ORDER BY o) = 1`,
   *    filtered (keep best per group → one min_by aggregate) or
   *    labeled (mark best per group → min(struct) + join back) — into
-  *    hot-key-safe aggregate shapes (opt out:
-  *    `spark.graft.rewrite.keeperElection=false`).
+  *    hot-key-safe aggregate shapes.
+  *
+  * Each of the three rules is switched off by name through Spark's own
+  * per-rule switch, `spark.sql.optimizer.excludedRules` (comma-separated:
+  * `graft.plans.RewriteBoundedTopK`, `graft.plans.RewriteWindowAggToJoin`,
+  * `graft.plans.RewriteKeeperElection`), on a live session.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -205,8 +209,8 @@ object GraftExtensions {
     })
 
   /** Imperative registration of the SQL operator surface into a
-    * session built WITHOUT extensions (Verify/Bench default) —
-    * idempotent; product sessions get these via
+    * session built WITHOUT extensions (a user's own session, the test
+    * suites' shared one) — idempotent; product sessions get these via
     * [[GraftExtensions.apply]]. */
   def ensureTableFunctions(spark: org.apache.spark.sql.SparkSession): Unit = {
     org.apache.spark.sql.graftbridge.ColumnBridge

@@ -80,9 +80,9 @@ import org.apache.spark.sql.types._
   * keeps one copy — the copies are SQL-indistinguishable, so its
   * output is value-identical either way). For keeper election that
   * all-copies-keep reading is the min-struct semantic this repo's
-  * dedup surfaces state deliberately; opt out with
-  * `spark.graft.rewrite.keeperElection=false` if byte-level
-  * row_number parity on duplicate rows matters.
+  * dedup surfaces state deliberately; where byte-level row_number
+  * parity on duplicate rows matters, exclude the rule through Spark's
+  * `spark.sql.optimizer.excludedRules=graft.plans.RewriteKeeperElection`.
   *
   * The orderSpec is mapped to an ascending NULLS FIRST struct leg by
   * leg: ASC legs pass through (with a null flag for NULLS LAST);
@@ -100,10 +100,6 @@ object RewriteKeeperElection extends Rule[LogicalPlan]
 
   import RewriteWindowAggToJoin.{deterministicTree, freshen, hasSubquery,
     unstableRowSet}
-
-  private def enabled: Boolean =
-    conf.getConfString("spark.graft.rewrite.keeperElection", "true")
-      .toBoolean
 
   /** `e` pins `rn` to exactly 1. rn is 1-based with minimum value 1
     * for all three accepted rank functions (row_number and dense_rank
@@ -232,8 +228,7 @@ object RewriteKeeperElection extends Rule[LogicalPlan]
       kmin.toAttribute)
   }
 
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (!enabled) return plan
+  override def apply(plan: LogicalPlan): LogicalPlan =
     plan.transform {
       // ---- FILTERED keeper --------------------------------------- //
       // row_number: ONE min_by aggregate, no join (grouped only: an
@@ -309,5 +304,4 @@ object RewriteKeeperElection extends Rule[LogicalPlan]
         }.asInstanceOf[NamedExpression])
         Project(newProj, join)
     }
-  }
 }

@@ -29,8 +29,9 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * for ANY query through the session, the way a user would actually
   * phrase the computation. The child is evaluated twice (both passes
   * fully parallel) — at scale, two splittable scans beat one
-  * unsplittable group every time the group is data-sized; opt out with
-  * `spark.graft.rewrite.windowAggToJoin=false`.
+  * unsplittable group every time the group is data-sized; opt out
+  * through Spark's
+  * `spark.sql.optimizer.excludedRules=graft.plans.RewriteWindowAggToJoin`.
   *
   * Safety conditions (all required):
   *  - the Window node has NO orderSpec — the analyzer then fixes the
@@ -61,10 +62,6 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * stay consistent) — two join branches must not share attribute ids.
   */
 object RewriteWindowAggToJoin extends Rule[LogicalPlan] {
-
-  private def enabled: Boolean =
-    conf.getConfString("spark.graft.rewrite.windowAggToJoin", "true")
-      .toBoolean
 
   /** Order-independent aggregates a group-by reproduces exactly. */
   private def rewritable(ae: AggregateExpression): Boolean =
@@ -147,8 +144,7 @@ object RewriteWindowAggToJoin extends Rule[LogicalPlan] {
     (fresh, ids)
   }
 
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (!enabled) return plan
+  override def apply(plan: LogicalPlan): LogicalPlan =
     plan.transform {
       case w @ Window(windowExprs, partitionSpec, Nil, child, _)
           if windowExprs.nonEmpty && !w.isStreaming &&
@@ -203,5 +199,4 @@ object RewriteWindowAggToJoin extends Rule[LogicalPlan] {
         }
         Project(out, join)
     }
-  }
 }

@@ -52,6 +52,8 @@ class HintHygieneSpec extends AnyFunSuite with SparkSuite {
         // running a single job for most queries
         val df = q.build(spark, dir)
         df.queryExecution.executedPlan
+        // the Q contract: the caller clears what a build pinned
+        spark.catalog.clearCache()
       }
     } finally {
       rootCfg.removeAppender("graft-hint-capture")

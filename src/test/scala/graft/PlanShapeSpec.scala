@@ -80,20 +80,22 @@ class PlanShapeSpec extends AnyFunSuite with SparkSuite {
   test("decontaminate regimes: the census picks the broadcast hint, " +
     "the forced-shuffle variant carries NO hint (r14: a 10M+-gram " +
     "benchmark must never be force-broadcast)") {
+    // the Q contract: the caller clears what a build pinned
     def optimized(name: String): String = {
       val df = Queries.byName(name).build(spark, dir)
-      df.queryExecution.optimizedPlan.toString
+      try df.queryExecution.optimizedPlan.toString
+      finally spark.catalog.clearCache()
     }
     // small bench set (census <= limit): the gram join is hinted
     // broadcast — map-side, no corpus shuffle
-    assert(optimized("decontaminate").contains("strategy=broadcast"),
-      optimized("decontaminate"))
+    val small = optimized("decontaminate")
+    assert(small.contains("strategy=broadcast"), small)
     // forced big regime (census limit 0): no hint anywhere — the
     // planner sizes the join at runtime (AQE may still broadcast a
     // TINY side, which is correct; what must not happen is a hint
     // that would OVERRIDE size checks on an unbounded gram set)
-    assert(!optimized("decontaminate_shuffle").contains("strategy=broadcast"),
-      optimized("decontaminate_shuffle"))
+    val big = optimized("decontaminate_shuffle")
+    assert(!big.contains("strategy=broadcast"), big)
   }
 
   test("bm25_search: term/df/stats sides broadcast, top-10 is " +

@@ -41,11 +41,12 @@ class ProductSessionSpec extends AnyFunSuite with OwnSessions {
         q.queryExecution.optimizedPlan.toString)
       assert(q.orderBy("k").collect().map(r => (r.getString(0),
         r.getLong(1))).toSeq == Seq(("a", 1L), ("b", 7L)))
-      // and the per-rule kill switch still works on the live session
+      // and Spark's per-rule kill switch works on the live session
       // (fresh Dataset: queryExecution memoizes per instance)
-      spark.conf.set("spark.graft.rewrite.keeperElection", "false")
+      spark.conf.set("spark.sql.optimizer.excludedRules",
+        "graft.plans.RewriteKeeperElection")
       try assert(q.queryExecution.optimizedPlan.toString.contains("Window"))
-      finally spark.conf.unset("spark.graft.rewrite.keeperElection")
+      finally spark.conf.unset("spark.sql.optimizer.excludedRules")
     }
   }
 }

@@ -262,6 +262,7 @@ class QueriesEmbedRecallSpec extends AnyFunSuite with SparkSuite {
   test("embed_outliers picks each cluster's TRUE bottom-5 by centroid " +
     "cosine (bounded-agg selection == independent window recompute)") {
     val out = Queries.byName("embed_outliers").build(spark, dir).collect()
+    spark.catalog.clearCache()
     assert(out.nonEmpty)
     val byCell = out.groupBy(_.getAs[Int]("cell"))
     byCell.foreach { case (cell, rows) =>

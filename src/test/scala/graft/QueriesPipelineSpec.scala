@@ -11,7 +11,12 @@ class QueriesPipelineSpec extends AnyFunSuite with SparkSuite {
 
   private val dir = "/root/testdata/sf0.001"
 
-  private def run(name: String) = Queries.byName(name).build(spark, dir)
+  /** Builds one Q frame. The Q contract: the caller clears what the
+    * previous build pinned, as Bench and Verify do per query. */
+  private def run(name: String) = {
+    spark.catalog.clearCache()
+    Queries.byName(name).build(spark, dir)
+  }
 
   test("quality_gopher fractions are in range and verdict is consistent") {
     val rows = run("quality_gopher").collect()

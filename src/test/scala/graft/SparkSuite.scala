@@ -39,14 +39,23 @@ trait OwnSessions { self: Suite =>
     }
   }
 
-  /** local[4] with 4 shuffle partitions and GraftExtensions on. */
+  /** local[4] with 4 shuffle partitions: a graft session, so
+    * GraftExtensions is on. */
   def withExtendedSession[A](f: SparkSession => A): A =
-    withOwnSession(local(extensions = true))(f)
+    withOwnSession(local())(f)
 
-  /** The same session without GraftExtensions. */
+  /** The same session with the three GraftExtensions optimizer rules
+    * excluded through Spark's own per-rule switch: the plans Spark
+    * gives without them, the reference the rules are checked against. */
   def withPlainSession[A](f: SparkSession => A): A =
-    withOwnSession(local(extensions = false))(f)
+    withOwnSession {
+      val s = local()
+      s.conf.set("spark.sql.optimizer.excludedRules",
+        Seq("RewriteBoundedTopK", "RewriteWindowAggToJoin",
+          "RewriteKeeperElection").map("graft.plans." + _).mkString(","))
+      s
+    }(f)
 
-  private def local(extensions: Boolean): SparkSession =
-    GraftSession("local[4]", "4", extensions, Some(getClass.getSimpleName))
+  private def local(): SparkSession =
+    GraftSession("local[4]", "4", Some(getClass.getSimpleName))
 }

@@ -8,8 +8,9 @@ import graft.SparkSuite
 import graft.schemas.{Outlink, ParseDataRow}
 
 /** WebGraphOp beyond the CLI smoke: incremental build over an existing
-  * graph, edge dedup, degree derivation, scoreUpdater's keep-score
-  * semantics for urls with no node. */
+  * graph, edge dedup, degree derivation, LinkRank's values against a
+  * plain-Scala reference, scoreUpdater's keep-score semantics for urls
+  * with no node. */
 class WebGraphOpSpec extends AnyFunSuite with SparkSuite {
 
   private def pd(rows: (String, Seq[(String, String)])*) = {
@@ -50,6 +51,55 @@ class WebGraphOpSpec extends AnyFunSuite with SparkSuite {
       "http://a.com/" -> Seq("http://a.com/" -> "self",
         "http://b.com/" -> "ok")), dir)
     assert(spark.read.parquet(s"$dir/outlinks").count() == 1)
+  }
+
+  test("linkrank matches a plain-Scala LinkRank with one contribution " +
+    "per source host, across the 5th-iteration checkpoint") {
+    val links = Seq(
+      "http://a.com/1" -> Seq("http://c.com/", "http://b.com/",
+        "http://a.com/2"),
+      // a second a.com page linking c.com: only a.com/1 (the lowest
+      // src of the host) contributes to it
+      "http://a.com/2" -> Seq("http://c.com/", "http://d.com/"),
+      "http://b.com/" -> Seq("http://a.com/1", "http://c.com/",
+        "http://d.com/"),
+      "http://c.com/" -> Seq("http://a.com/1"),
+      "http://d.com/" -> Seq("http://b.com/", "http://a.com/2"),
+      "http://e.com/" -> Seq("http://c.com/"))
+    val dir = Files.createTempDirectory("wg-rank").toString
+    WebGraphOp.build(spark,
+      pd(links.map { case (u, ls) => u -> ls.map(_ -> "x") }: _*), dir)
+    WebGraphOp.linkrank(spark, dir, iterations = 6)
+    val got = spark.read.parquet(s"$dir/nodes").collect()
+      .map(r => r.getAs[String]("url") -> r.getAs[Double]("score")).toMap
+
+    // reference: LinkRank.java's damped update on 1e-9 fixed-point
+    // contributions; out-degree over the full graph, inbound edges
+    // deduped to the lowest src per (source host, target)
+    def host(u: String) = new java.net.URI(u).getHost
+    def round6(d: Double) = BigDecimal(d)
+      .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+    val edges = links.flatMap { case (s, ds) => ds.map(s -> _) }
+    val outDeg = edges.groupBy(_._1).map { case (s, es) => s -> es.size }
+    val kept = edges.groupBy { case (s, d) => (host(s), d) }
+      .values.map(_.minBy(_._1)).toSeq
+    val urls = edges.flatMap { case (s, d) => Seq(s, d) }.distinct
+    var score = urls.map(_ -> 1.0).toMap
+    for (_ <- 1 to 6) {
+      val sumFx = kept.groupBy(_._2).map { case (d, es) =>
+        d -> es.map { case (s, _) =>
+          BigDecimal(score(s) / outDeg(s) * 1e9)
+            .setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
+        }.sum
+      }
+      score = urls.map(u =>
+        u -> (0.15 + 0.85 * (sumFx.getOrElse(u, 0L).toDouble / 1e9))).toMap
+    }
+    assert(got.keySet == urls.toSet)
+    assert(got.map { case (u, v) => u -> round6(v) } ==
+      score.map { case (u, v) => u -> round6(v) })
+    // the host rule bites: without it c.com would take a.com/2's share
+    assert(kept.size == edges.size - 1)
   }
 
   test("scoreUpdater keeps the datum score for urls without a node") {

@@ -19,6 +19,20 @@ class GraftExtensionsSpec extends AnyFunSuite with graft.OwnSessions {
         .contains("bounded_sorted_list"))
       assert(q.orderBy("k").collect().map(_.getSeq[Int](1)).toSeq ==
         Seq(Seq(1, 3), Seq(2)))
+      // kill switch: Spark's own per-rule exclusion (fresh Dataset:
+      // queryExecution memoizes per instance)
+      def q2 = df.groupBy("k")
+        .agg(slice(array_sort(collect_list(col("v"))), 1, 2).as("topk"))
+      spark.conf.set("spark.sql.optimizer.excludedRules",
+        "graft.plans.RewriteBoundedTopK")
+      try {
+        assert(!q2.queryExecution.optimizedPlan.toString
+          .contains("bounded_sorted_list"))
+        assert(q2.orderBy("k").collect().map(_.getSeq[Int](1)).toSeq ==
+          Seq(Seq(1, 3), Seq(2)))
+      } finally spark.conf.unset("spark.sql.optimizer.excludedRules")
+      assert(q2.queryExecution.optimizedPlan.toString
+        .contains("bounded_sorted_list"))
     }
   }
 

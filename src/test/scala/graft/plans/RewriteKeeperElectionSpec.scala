@@ -237,11 +237,12 @@ class RewriteKeeperElectionSpec extends AnyFunSuite with graft.OwnSessions {
       assert(!optimized(ndFiltered).contains("Window"),
         optimized(ndFiltered))
       assert(ndFiltered.count() == 5)
-      // kill switch
-      spark.conf.set("spark.graft.rewrite.keeperElection", "false")
+      // kill switch: Spark's own per-rule exclusion
+      spark.conf.set("spark.sql.optimizer.excludedRules",
+        "graft.plans.RewriteKeeperElection")
       try assert(optimized(df.withColumn("rn", row_number().over(w))
         .filter(col("rn") === 1)).contains("Window"))
-      finally spark.conf.unset("spark.graft.rewrite.keeperElection")
+      finally spark.conf.unset("spark.sql.optimizer.excludedRules")
     }
   }
 

@@ -125,23 +125,24 @@ class RewriteWindowAggSpec extends AnyFunSuite with graft.OwnSessions {
       assert(nested.collect().map(r =>
         (r.getString(0), r.getInt(1), r.getInt(2), r.getInt(3))).toSet ==
         Set(("a", 5, 3, 3), ("a", 3, 3, 3), ("b", 9, 9, 9)))
-      // kill switch
-      spark.conf.set("spark.graft.rewrite.windowAggToJoin", "false")
+      // kill switch: Spark's own per-rule exclusion
+      spark.conf.set("spark.sql.optimizer.excludedRules",
+        "graft.plans.RewriteWindowAggToJoin")
       try {
         val off = df.select(col("k"),
           min("v").over(Window.partitionBy("k")).as("mn"))
         assert(optimized(off).contains("Window"))
       } finally
-        spark.conf.unset("spark.graft.rewrite.windowAggToJoin")
+        spark.conf.unset("spark.sql.optimizer.excludedRules")
     }
   }
 
   test("dogfood: a real board query (opic_distribute's count-over-" +
     "partition) rewrites Window-free under extensions, rows identical") {
-    // the full 135-query oracle board passes under extensions
-    // (SPARK_GRAFT_EXTENSIONS=1 Verify + check.py — run each round);
-    // this pins the one board query whose plan the rule changes, so
-    // a regression in either direction is caught in-suite
+    // the full oracle board passes under extensions (Verify always
+    // runs them; then check.py); this pins the one board query whose
+    // plan the rule changes, so a regression in either direction is
+    // caught in-suite
     val dir = "/root/testdata/sf0.001"
     def rows(s: SparkSession) =
       graft.Queries.byName("opic_distribute").build(s, dir)
