@@ -27,7 +27,26 @@ import graft.tables.{CrawlDbTable, Segment}
   *                      | -url <u>
   * graft.Main index     <crawldb> <linkdb> <segment> <outDir>
   * graft.Main clean     <crawldb> <sinkDir>
+  * graft.Main sitemap   <crawldb> <hostdb> -site <siteJson> [-now MS]
   * graft.Main crawl     <root> <seedFile> -site <siteJson> [-rounds N] [-topN N]
+  *                      [-delay MS] [-buckets N] [-responsetime] [-stream]
+  * graft.Main domainstats <crawldb> [-mode host|domain|suffix|tld]
+  *                        [-out <dir>] [-limit N]
+  * graft.Main protocolstats <crawldb>
+  * graft.Main freegen   <urlFile> <segment> [-filters <confDir>]
+  * graft.Main dmozparser <rdfFile> [-subset N] [-includeAdult]
+  *                       [-topic prefix] [-skew N] [-out <file>]
+  * graft.Main resolveurls <urlFile> [-mockfail h1,h2] [-limit N]
+  * graft.Main readlinkdb <linkdb> [-url <u> | -dump <out> | -limit N]
+  * graft.Main readseg   <segment> [-part generate|fetch|parse|text] [-n N]
+  * graft.Main warc      <segment> <out>
+  * graft.Main dump      <segment> <out> [-mimetype t1,t2]
+  * graft.Main commoncrawldump <segment> <out>
+  * graft.Main mergedb   <out> <crawldb>...
+  * graft.Main mergesegs <out> <segment>...
+  * graft.Main mergelinkdb <out> <linkdb>...
+  * graft.Main readhostdb <hostdb> [-dump <out> | -percentiles 50,95
+  *                       | -limit N]
   * graft.Main corpus    <sfDir> <outDir> [-shards N] [-neardup]
   *                      [-exactsubstr] [-temperature]
   *                      [-ccnet head[,middle[,tail]]]
@@ -39,7 +58,19 @@ import graft.tables.{CrawlDbTable, Segment}
   * graft.Main bpe       <sfDir> <outDir> [-merges K] [-encode <docsDir>]
   * graft.Main search    <sfDir> <queriesParquetOrString> [-k N] [-o out]
   * graft.Main classify  <sfDir> [-model out] [-o out]
+  * graft.Main metrics   <metricsDir> [-round N]
+  * graft.Main webgraph  <wgDir> <segment>
+  * graft.Main linkrank  <wgDir> [-iterations N]
+  * graft.Main scoreupdater <crawldb> <wgDir>
+  * graft.Main nodedumper <wgDir> [-by score|inlinks|outlinks] [-topn N]
+  * graft.Main filterchecker <url>... [-filters <confDir>]
+  * graft.Main normalizerchecker <url>... [-scope name]
   * graft.Main parsetext  <file> [-type ct] [-extractor boilerpipe] [-limit N]
+  * graft.Main parsechecker -site <siteJson> -url <u>
+  * graft.Main indexchecker -site <siteJson> -url <u>
+  * graft.Main robotsparser <robotsFile> <agent> <url>...
+  * graft.Main showproperties
+  * graft.Main startserver [-port N]
   * ```
   *
   * The wire protocol for `fetch`/`crawl` is a site snapshot (JSON lines:
@@ -163,7 +194,8 @@ object Main {
 
   /** Load a MockProtocol site snapshot from a JSON-lines file.
     * Only `url` is required; code/body/contentType default. */
-  def loadSite(spark: SparkSession, path: String): Fetch.MockProtocol = {
+  private def loadSite(spark: SparkSession,
+      path: String): Fetch.MockProtocol = {
     import spark.implicits._
     var df = spark.read.json(path)
     require(df.columns.contains("url"), s"site file $path needs a url field")
@@ -183,6 +215,38 @@ object Main {
     import spark.implicits._
     val now0 = optL(args.toSeq, "-now", System.currentTimeMillis())
     lazy val reg = registry(args.toSeq)
+
+    /** The checkers' one-url parse: look `-url` up in the `-site`
+      * snapshot, parse it as a successful fetch at `now0` carrying
+      * `signature`, and hand the fetch row, its Dataset and the parse
+      * to `show`. */
+    def checkOne(verb: String, rest: List[String], signature: Option[String])(
+        show: (graft.schemas.CrawlRow,
+          org.apache.spark.sql.Dataset[graft.schemas.CrawlRow],
+          Parse.ParseOutput) => Unit): Int =
+      (opt(rest, "-site"), opt(rest, "-url")) match {
+        case (Some(sf), Some(u)) =>
+          val (code, body, ct) =
+            loadSite(spark, sf).site.getOrElse(u, (14, "", ""))
+          if (code != 1) { println(s"fetch failed: code $code"); 1 }
+          else {
+            val row = graft.schemas.CrawlRow(u, graft.schemas.CrawlDatum(
+              graft.schemas.CrawlStatus.FETCH_SUCCESS, now0, 0, 2592000,
+              1f, signature, 0L, Map.empty))
+            val fetchDs = Seq(row).toDS()
+            val contentDs = Seq(graft.schemas.ContentRow(u, u,
+              body.getBytes("UTF-8"), ct, Map.empty)).toDS()
+            // strict local: a lazy val's LazyRef (+ Main$) must not
+            // ride into the executor closure (the freegen rule)
+            val reg1 = reg
+            show(row, fetchDs, Parse(fetchDs, contentDs, Parse.Config(),
+              reg1.filterChain, reg1.normalize(_, Extensions.Scope.Outlink)))
+            0
+          }
+        case _ =>
+          System.err.println(s"$verb: -site and -url required"); 2
+      }
+
     args.toList match {
       case "inject" :: crawldb :: seeds :: _ =>
         val t = graft.tables.CrawlDbStore.open(spark, crawldb)
@@ -197,7 +261,7 @@ object Main {
           topN = optL(rest, "-topN", Long.MaxValue),
           maxPerHost = optL(rest, "-maxPerHost", Int.MaxValue).toInt,
           curTime = now0), reg.schedule))
-        println(s"generate: ${seg.generate.count()} entries")
+        println(s"generate: generated=${seg.generate.count()}")
         0
       case "fetch" :: segdir :: rest =>
         opt(rest, "-site") match {
@@ -211,7 +275,7 @@ object Main {
               // http.store.responsetime (nutch-default.xml:425) —
               // default-off here, see Fetch.ResponseTimeKey rationale
               storeResponseTime = rest.contains("-storeResponseTime"))
-            println(s"fetch: ${seg.fetch.count()} rows")
+            println(s"fetch: fetched=${seg.fetch.count()}")
             0
         }
       case "parse" :: segdir :: _ =>
@@ -221,7 +285,7 @@ object Main {
         seg.writeParseData(p.parseData)
         seg.writeParseText(p.parseText)
         seg.writeCrawlParse(p.crawlParse)
-        println(s"parse: ${seg.parseData.count()} pages")
+        println(s"parse: parsed=${seg.parseData.count()}")
         0
       case "updatedb" :: crawldb :: segdir :: _ =>
         val t = graft.tables.CrawlDbStore.open(spark, crawldb)
@@ -236,7 +300,7 @@ object Main {
         val seg = new Segment(spark, segdir)
         l.install(InvertLinks(seg.parseData, l.read(),
           InvertLinks.Config()), "invertlinks")
-        println(s"invertlinks: ${l.read().count()} urls")
+        println(s"invertlinks: linkdb=${l.read().count()}")
         0
       case "dedup" :: crawldb :: _ =>
         val t = graft.tables.CrawlDbStore.open(spark, crawldb)
@@ -257,7 +321,7 @@ object Main {
               fs.split(",").map(_.trim).toSeq, pcts)
             .write.mode("overwrite").parquet(s"$hostdb/numeric-stats")
         }
-        println(s"updatehostdb: ${h.read().count()} hosts")
+        println(s"updatehostdb: hosts=${h.read().count()}")
         0
       case "readdb" :: crawldb :: rest =>
         val db = graft.tables.CrawlDbStore.open(spark, crawldb).read()
@@ -347,7 +411,7 @@ object Main {
         val docs = Index(t.read(), seg.fetch, seg.parseData, seg.parseText,
           l.read(), Index.Config())
         new IndexWriters.JsonLinesWriter().write(docs, out)
-        println(s"index: wrote ${spark.read.text(out).count()} docs to $out")
+        println(s"index: indexed=${spark.read.text(out).count()} out=$out")
         0
       case "clean" :: crawldb :: sink :: _ =>
         val t = graft.tables.CrawlDbStore.open(spark, crawldb)
@@ -678,9 +742,6 @@ object Main {
               .foreach(r => println(s"${r.host}\t${r.fetched}\t${r.unfetched}"))
             0
         }
-      // per-job counter readback (the NutchMetrics observability
-      // surface the conductor appends under <root>/metrics): summed
-      // across rounds, or -round N for one round's raw rows
       case "corpus" :: sfDir :: outDir :: rest =>
         // The training-data pipeline as ONE runnable export: the same
         // oracle-checked stage builders the queries use (quality gate,
@@ -1215,6 +1276,9 @@ object Main {
             s"${r.getAs[Long]("score_bp")}\t${r.getAs[Long]("n_matched")}")
         }
         0
+      // per-job counter readback (the NutchMetrics observability
+      // surface the conductor appends under <root>/metrics): summed
+      // across rounds, or -round N for one round's raw rows
       case "metrics" :: dir :: rest =>
         import org.apache.spark.sql.functions.col
         val t = new graft.ops.Metrics.Table(spark, dir)
@@ -1294,77 +1358,34 @@ object Main {
       case "parsechecker" :: rest =>
         // ParserChecker: fetch ONE url through the protocol seam, run
         // the real parse, print status/title/outlinks/text head
-        (opt(rest, "-site"), opt(rest, "-url")) match {
-          case (Some(sf), Some(u)) =>
-            val proto = loadSite(spark, sf)
-            val (code, body, ct) = proto.site.getOrElse(u, (14, "", ""))
-            if (code != 1) { println(s"fetch failed: code $code"); 1 }
-            else {
-              val fetchDs = Seq(graft.schemas.CrawlRow(u,
-                graft.schemas.CrawlDatum(
-                  graft.schemas.CrawlStatus.FETCH_SUCCESS, now0, 0,
-                  2592000, 1f, None, 0L, Map.empty))).toDS()
-              val contentDs = Seq(graft.schemas.ContentRow(u, u,
-                body.getBytes("UTF-8"), ct, Map.empty)).toDS()
-              // strict local: a lazy val's LazyRef (+ Main$) must not
-              // ride into the executor closure (the freegen rule)
-              val reg1 = reg
-              val p = Parse(fetchDs, contentDs, Parse.Config(),
-                reg1.filterChain,
-                reg1.normalize(_, Extensions.Scope.Outlink))
-              p.parseData.collect().foreach { d =>
-                println(s"status: ${d.parseStatus}")
-                println(s"title: ${d.title}")
-                d.outlinks.foreach(o =>
-                  println(s"outlink: ${o.toUrl}\t${o.anchor}"))
-              }
-              p.parseText.collect().foreach(t =>
-                println(s"text: ${t.text.take(200)}"))
-              0
-            }
-          case _ =>
-            System.err.println("parsechecker: -site and -url required"); 2
+        checkOne("parsechecker", rest, None) { (_, _, p) =>
+          p.parseData.collect().foreach { d =>
+            println(s"status: ${d.parseStatus}")
+            println(s"title: ${d.title}")
+            d.outlinks.foreach(o =>
+              println(s"outlink: ${o.toUrl}\t${o.anchor}"))
+          }
+          p.parseText.collect().foreach(t =>
+            println(s"text: ${t.text.take(200)}"))
         }
       case "indexchecker" :: rest =>
         // IndexingFiltersChecker: one url through fetch→parse→index,
         // print the document's fields
-        (opt(rest, "-site"), opt(rest, "-url")) match {
-          case (Some(sf), Some(u)) =>
-            val proto = loadSite(spark, sf)
-            val (code, body, ct) = proto.site.getOrElse(u, (14, "", ""))
-            if (code != 1) { println(s"fetch failed: code $code"); 1 }
-            else {
-              val datum = graft.schemas.CrawlDatum(
-                graft.schemas.CrawlStatus.DB_FETCHED, now0, 0,
-                2592000, 1f, Some("sig"), 0L, Map.empty)
-              val db = Seq(graft.schemas.CrawlRow(u, datum)).toDS()
-              val fetchDs = Seq(graft.schemas.CrawlRow(u,
-                datum.copy(status =
-                  graft.schemas.CrawlStatus.FETCH_SUCCESS))).toDS()
-              val contentDs = Seq(graft.schemas.ContentRow(u, u,
-                body.getBytes("UTF-8"), ct, Map.empty)).toDS()
-              // strict local: a lazy val's LazyRef (+ Main$) must not
-              // ride into the executor closure (the freegen rule)
-              val reg1 = reg
-              val p = Parse(fetchDs, contentDs, Parse.Config(),
-                reg1.filterChain,
-                reg1.normalize(_, Extensions.Scope.Outlink))
-              val docs = Index(db, fetchDs, p.parseData, p.parseText,
-                spark.emptyDataset[graft.tables.LinkRow], Index.Config())
-              docs.collect().foreach { d =>
-                println(s"url: ${d.url}")
-                println(s"action: ${d.action}")
-                println(s"title: ${d.title}")
-                println(s"host: ${d.host}")
-                println(s"digest: ${d.digest}")
-                println(s"boost: ${d.boost}")
-                d.anchors.foreach(a => println(s"anchor: $a"))
-                println(s"content: ${d.content.take(200)}")
-              }
-              0
-            }
-          case _ =>
-            System.err.println("indexchecker: -site and -url required"); 2
+        checkOne("indexchecker", rest, Some("sig")) { (row, fetchDs, p) =>
+          val db = Seq(row.copy(datum = row.datum.copy(
+            status = graft.schemas.CrawlStatus.DB_FETCHED))).toDS()
+          val docs = Index(db, fetchDs, p.parseData, p.parseText,
+            spark.emptyDataset[graft.tables.LinkRow], Index.Config())
+          docs.collect().foreach { d =>
+            println(s"url: ${d.url}")
+            println(s"action: ${d.action}")
+            println(s"title: ${d.title}")
+            println(s"host: ${d.host}")
+            println(s"digest: ${d.digest}")
+            println(s"boost: ${d.boost}")
+            d.anchors.foreach(a => println(s"anchor: $a"))
+            println(s"content: ${d.content.take(200)}")
+          }
         }
       case "robotsparser" :: robotsFile :: agent :: urls =>
         val rules = graft.net.Robots.parse(
@@ -1396,10 +1417,12 @@ object Main {
              |       invertlinks dedup updatehostdb readdb readlinkdb
              |       readseg readhostdb index clean sitemap crawl warc
              |       dump commoncrawldump domainstats protocolstats
-             |       mergedb mergesegs mergelinkdb webgraph linkrank
-             |       scoreupdater nodedumper filterchecker
-             |       normalizerchecker parsechecker indexchecker
-             |       robotsparser showproperties startserver""".stripMargin)
+             |       dmozparser resolveurls mergedb mergesegs
+             |       mergelinkdb corpus gramstore bpe classify search
+             |       metrics webgraph linkrank scoreupdater nodedumper
+             |       filterchecker normalizerchecker parsetext
+             |       parsechecker indexchecker robotsparser
+             |       showproperties startserver""".stripMargin)
         2
     }
   }

@@ -427,7 +427,13 @@ object QueriesText {
         .select(col("doc_id") +:
           (0 until MINHASH_H).map(i =>
             col("p.ms").getItem(i).as(s"m$i")): _*)
-        .cache() // reused by bands + both candidate sides
+        // reused by bands + both candidate sides: a LAZY
+        // localCheckpoint, not .cache() — its blocks are RDD storage
+        // the ContextCleaner frees, so a caller that only sees this
+        // Q's result (the corpus verb's -neardup) leaves no
+        // CacheManager entry behind (QueriesPipeline.ccnetBucketAssign
+        // has the r15/r16 cache-vs-checkpoint measurement)
+        .localCheckpoint(false)
       val nBands = MINHASH_H / MINHASH_BAND
       val bandCols = (0 until nBands).map { b =>
         val ms = (b * MINHASH_BAND until (b + 1) * MINHASH_BAND)

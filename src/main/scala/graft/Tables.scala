@@ -39,13 +39,4 @@ object Tables {
     }, name, inflateN)
     base
   }
-
-  /** Microsecond-precision timestamp from the raw nanosecond Long `ts`
-    * column of `events` — matches DuckDB's µs TIMESTAMP exactly.
-    * Integral division (`div`), not `/`: Spark `/` on longs is double
-    * division and ns-epoch values exceed a double's 53-bit mantissa. */
-  def eventTs(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.functions._
-    timestamp_micros(floor(c.cast("decimal(20,0)") / 1000).cast("long"))
-  }
 }

@@ -36,10 +36,6 @@ object Hashing {
       Seq(ColumnBridge.expression(c)), Seq(StringType),
       returnNullable = false))
 
-  /** Seeded variant for hash families (MinHash): h_i(x) = md5(i ‖ x). */
-  def md5LongSeeded(seed: Int, c: Column): Column =
-    md5Long(concat(lit(seed.toString), lit("|"), c))
-
   /** Fast 64-bit hash for internal (non-oracle) shuffles and sketches. */
   def fast64(c: Column): Column = xxhash64(c)
 

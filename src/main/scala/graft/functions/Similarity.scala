@@ -268,10 +268,4 @@ object Similarity {
   def cosineFx(dot: Column, normSqA: Column, normSqB: Column): Column =
     dot.cast("double") /
       (sqrt(normSqA.cast("double")) * sqrt(normSqB.cast("double")))
-
-  /** 60-bit SimHash of whitespace tokens (occurrence-weighted majority
-    * vote per bit). Returns a long column expression usable in agg form:
-    * caller explodes tokens and bits. Provided here as the per-token hash;
-    * the bit loop lives in the query (needs explode). */
-  def tokenHash60(token: Column): Column = Hashing.md5Long(token)
 }

@@ -37,26 +37,6 @@ object Relational {
       .drop("__rn")
   }
 
-  /** Distributed EXACT linear-interpolated quantile (quantile_cont
-    * semantics) as an aggregate expression over rank/count columns.
-    *
-    * Usage: rank the group with `row_number().over(partitionBy(g).orderBy
-    * (v))` into `rn` and `count(1).over(partitionBy(g))` into `n`, then
-    * aggregate with `quantileCont(v, rn, n, q)`. The sort is a shuffle,
-    * not a per-group in-memory array — unlike `percentile()`, which
-    * buffers every group value and is the driver-OOM analog inside the
-    * agg at 100 TB (VERDICT round 1, What's wrong #5). */
-  def quantileCont(v: Column, rn: Column, n: Column, q: Double): Column = {
-    val x = (n - 1).cast("double") * q
-    val lo = floor(x) + 1
-    val hi = ceil(x) + 1
-    val frac = x - floor(x)
-    // lo == hi (x integral): the single row carries weight 1
-    sum(
-      when(rn === lo, v * (lit(1.0) - frac)).otherwise(lit(0.0)) +
-        when(rn === hi && lo =!= hi, v * frac).otherwise(lit(0.0)))
-  }
-
   // -------------------------------------------------------------------
   // Two-phase EXACT quantiles (histogram merge). The round-2 sort+rank
   // form kept quantile_cont exact but ranked with
@@ -71,17 +51,11 @@ object Relational {
   // the win whenever values are quantized/discrete (retry counts,
   // intervals, fixed-point scores); for CONTINUOUS near-unique values
   // at extreme scale the histogram approaches row count and the right
-  // tool is quantileApprox below (mergeable sketch, bounded state) —
+  // tool is a mergeable sketch with bounded state
+  // (graft.functions.TDigest.quantileAgg, as readdb -stats uses) —
   // exactness is reserved for the oracle-checked paths where DuckDB
   // parity demands it.
   // -------------------------------------------------------------------
-
-  /** Bounded-state quantile for continuous high-cardinality values:
-    * percentile_approx's mergeable sketch (state O(accuracy), never
-    * O(distinct values)). Not bit-comparable across engines — use the
-    * exact histogram form for oracle-checked queries. */
-  def quantileApprox(v: Column, q: Double, accuracy: Int = 10000): Column =
-    percentile_approx(v, lit(q), lit(accuracy))
 
   /** Phase 1+2: per-group sorted (v, c) histogram. */
   def valueHistogram(df: DataFrame, groups: Seq[String], value: Column): DataFrame =
@@ -116,9 +90,10 @@ object Relational {
       hist, lit(scale))
 
   /** EXACT linear-interpolated quantile (quantile_cont semantics) over
-    * a sorted (v, c) histogram — same interpolation arithmetic as
-    * [[quantileCont]] (lo·(1−f) + hi·f), so results are bit-identical
-    * to the rank form and to DuckDB under the same rounding. */
+    * a sorted (v, c) histogram: at x = (n−1)·q, the values at 0-based
+    * ranks floor(x) and ceil(x) blend as lo·(1−f) + hi·f with f = x − floor(x),
+    * DuckDB's quantile_cont arithmetic, so results are bit-identical to
+    * DuckDB under the same rounding. */
   def histQuantileCont(hist: Column, q: Double): Column =
     histCall("histQuantileCont", org.apache.spark.sql.types.DoubleType,
       hist, lit(q))

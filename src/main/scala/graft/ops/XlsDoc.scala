@@ -32,7 +32,6 @@ object XlsDoc {
   private final class Records(parts: IndexedSeq[Array[Byte]]) {
     private var ri = 0
     private var po = 0
-    def atBoundary: Boolean = po == 0 && ri > 0
     def hasMore: Boolean = {
       while (ri < parts.length && po >= parts(ri).length) { ri += 1; po = 0 }
       ri < parts.length

@@ -9,7 +9,7 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.SparkSession
 
 import graft.ops._
-import graft.tables.{CrawlDbTable, Segment}
+import graft.tables.Segment
 
 /** §3.3 — the REST service surface (reference openapi.yaml:70-801:
   * /admin, /config CRUD, /job create/list/get, /db/crawldb, /seed
@@ -17,11 +17,16 @@ import graft.tables.{CrawlDbTable, Segment}
   * library ops, on the JDK's built-in HTTP server — zero extra
   * dependencies.
   *
-  * Jobs run async on a small pool with RUNNING/FINISHED/FAILED states,
-  * like the reference's JobManager; arguments arrive as query
-  * parameters (the reference takes JSON bodies — same information,
-  * no JSON parser needed). One process == one SparkSession, so job
-  * concurrency is Spark's scheduler concern, not ours. */
+  * A job type is a CLI verb: INJECT, GENERATE, FETCH, PARSE, UPDATEDB,
+  * INVERTLINKS, DEDUP, UPDATEHOSTDB, INDEX and READDB each run the
+  * `graft.Main` verb of that name (READDB as `readdb -stats`) with the
+  * CLI's defaults, and the job's message is what the verb prints; CLASS
+  * runs a [[JobRunner]]. Jobs run async on a small pool with
+  * RUNNING/FINISHED/FAILED states, like the reference's JobManager;
+  * arguments arrive as query parameters (the reference takes JSON
+  * bodies — same information, no JSON parser needed). One process ==
+  * one SparkSession, so job concurrency is Spark's scheduler concern,
+  * not ours. */
 object RestServer {
 
   final case class Job(id: Long, jobType: String, args: Map[String, String]) {
@@ -135,107 +140,73 @@ object RestServer {
       s"""{"id":${j.id},"type":${graft.Json.str(j.jobType)},"state":${graft.Json.str(j.state)},""" +
         s""""msg":${graft.Json.str(j.message)}}"""
 
-    /** The job verbs — the REST twin of the CLI dispatch. */
-    private def runJob(j: Job): Unit = {
+    /** Write a comma-separated seed list as `seeds.txt` in a fresh temp
+      * dir, one url per line, blanks dropped: the dir and the urls. */
+    private def writeSeeds(name: String,
+        csv: String): (java.nio.file.Path, Seq[String]) = {
+      val urls = csv.split(",").map(_.trim).filter(_.nonEmpty).toSeq
+      val dir = java.nio.file.Files.createTempDirectory(s"graft-seed-$name-")
+      java.nio.file.Files.writeString(dir.resolve("seeds.txt"),
+        urls.mkString("", "\n", "\n"))
+      (dir, urls)
+    }
+
+    private def runJob(j: Job): Unit = j.jobType match {
+      case "CLASS" =>
+        // openapi JobType CLASS + jobClassName: run any JobRunner by
+        // fully qualified class name (the reference's run-a-NutchTool
+        // escape hatch). The type check comes BEFORE instantiation —
+        // newInstance on an arbitrary classpath name would run its
+        // static init and constructor as a network-reachable gadget.
+        val cls = Class.forName(j.args("jobClassName"), false,
+          getClass.getClassLoader)
+        require(classOf[JobRunner].isAssignableFrom(cls),
+          s"${j.args("jobClassName")} is not a JobRunner")
+        j.message = cls.getDeclaredConstructor().newInstance()
+          .asInstanceOf[JobRunner].run(spark, j.args)
+      case _ => j.message = runVerb(j)
+    }
+
+    /** Every other job type names a `graft.Main` verb: the job runs
+      * `Main.run` on the verb's argv, and its message is what the verb
+      * prints. A non-zero exit fails the job. */
+    private def runVerb(j: Job): String = {
       val a = j.args
-      // between-phases stop gate: stop/abort cancel the job group with
-      // cancelJobGroupAndFutureJobs (running AND later-submitted Spark
-      // jobs die), but driver-side work BETWEEN Spark jobs — a count
-      // composed after an install, a second output write — would still
-      // run to its next action; each multi-phase verb checks here
-      // before starting its next phase so a stop lands at the phase
-      // boundary, not after the whole workload
-      def gate(): Unit =
-        if (j.state == "STOPPING" || j.state == "KILLING")
-          throw new InterruptedException(s"job ${j.id} ${j.state}")
-      def crawldb = graft.tables.CrawlDbStore.open(spark, a("crawldb"))
-      def now = a.get("now").map(_.toLong)
-        .getOrElse(System.currentTimeMillis())
-      val registry = graft.plugins.Extensions.Registry(
-        urlFilters = Seq(graft.net.RegexUrlFilter.parse(Iterator("+."))))
-      j.jobType match {
-        case "INJECT" =>
-          import spark.implicits._
-          val seeds = a.get("seedFile")
-            .map(f => spark.read.textFile(f))
-            .getOrElse(a("seedList").split(",").toSeq.toDS())
-          crawldb.install(Inject(crawldb.read(), seeds, Inject.Config(),
-            registry.filterChain, now), s"rest-inject-${j.id}")
-          gate()
-          j.message = s"db=${crawldb.read().count()}"
-        case "GENERATE" =>
-          val seg = new Segment(spark, a("segment"))
-          seg.writeGenerate(Generate(crawldb.read(), Generate.Config(
-            topN = a.get("topN").map(_.toLong).getOrElse(Long.MaxValue),
-            curTime = now), registry.schedule))
-          gate()
-          j.message = s"generated=${seg.generate.count()}"
-        case "UPDATEDB" =>
-          val seg = new Segment(spark, a("segment"))
-          crawldb.install(graft.crawl.UpdateDb(
-            crawldb.read().union(seg.fetch).union(seg.crawlParse), now,
-            registry.schedule, registry.scoring), s"rest-updatedb-${j.id}")
-          gate()
-          j.message = s"db=${crawldb.read().count()}"
-        case "INVERTLINKS" =>
-          val l = graft.tables.LinkDbStore.open(spark, a("linkdb"))
-          val seg = new Segment(spark, a("segment"))
-          l.install(InvertLinks(seg.parseData, l.read(),
-            InvertLinks.Config()), s"rest-invertlinks-${j.id}")
-          gate()
-          j.message = s"linkdb=${l.read().count()}"
-        case "DEDUP" =>
-          crawldb.install(Dedup(crawldb.read()), s"rest-dedup-${j.id}")
-          j.message = "ok"
-        case "UPDATEHOSTDB" =>
-          val h = graft.tables.HostDbStore.open(spark, a("hostdb"))
-          h.install(UpdateHostDb(crawldb.read(), h.read(), now),
-            s"rest-hostdb-${j.id}")
-          gate()
-          j.message = s"hosts=${h.read().count()}"
-        case "FETCH" =>
-          // site snapshot through the protocol seam (the CLI's -site)
-          val seg = new Segment(spark, a("segment"))
-          Fetch.toSegment(seg.generate,
-            graft.Main.loadSite(spark, a("siteFile")), now, seg)
-          gate()
-          j.message = s"fetched=${seg.fetch.count()}"
-        case "PARSE" =>
-          val seg = new Segment(spark, a("segment"))
-          val p = Parse(seg.fetch, seg.content, Parse.Config(),
-            registry.filterChain)
-          seg.writeParseData(p.parseData)
-          gate()
-          seg.writeParseText(p.parseText)
-          gate()
-          seg.writeCrawlParse(p.crawlParse)
-          gate()
-          j.message = s"parsed=${seg.parseData.count()}"
-        case "INDEX" =>
-          val l = graft.tables.LinkDbStore.open(spark, a("linkdb"))
-          val seg = new Segment(spark, a("segment"))
-          val docs = Index(crawldb.read(), seg.fetch, seg.parseData,
-            seg.parseText, l.read(), Index.Config())
-          new IndexWriters.JsonLinesWriter().write(docs, a("out"))
-          gate()
-          j.message = s"indexed=${spark.read.text(a("out")).count()}"
-        case "READDB" =>
-          j.message = CrawlDbReader.stats(crawldb.read())
-            .orderBy("status").collect()
-            .map(r => r.mkString(":")).mkString(",")
-        case "CLASS" =>
-          // openapi JobType CLASS + jobClassName: run any JobRunner by
-          // fully qualified class name (the reference's run-a-NutchTool
-          // escape hatch). The type check comes BEFORE instantiation —
-          // newInstance on an arbitrary classpath name would run its
-          // static init and constructor as a network-reachable gadget.
-          val cls = Class.forName(a("jobClassName"), false,
-            getClass.getClassLoader)
-          require(classOf[JobRunner].isAssignableFrom(cls),
-            s"${a("jobClassName")} is not a JobRunner")
-          j.message = cls.getDeclaredConstructor().newInstance()
-            .asInstanceOf[JobRunner].run(spark, a)
-        case other => throw new IllegalArgumentException(s"job type $other")
+      val now = a.get("now").toSeq.flatMap(Seq("-now", _))
+      // a seedList is injected through a seed file, removed afterwards
+      val seedDir = if (j.jobType == "INJECT" && !a.contains("seedFile"))
+        Some(writeSeeds(s"job${j.id}", a("seedList"))._1) else None
+      try {
+        val argv: Seq[String] = j.jobType match {
+          case "INJECT" => Seq("inject", a("crawldb"), a.getOrElse("seedFile",
+            seedDir.get.resolve("seeds.txt").toString)) ++ now
+          case "GENERATE" => Seq("generate", a("crawldb"), a("segment")) ++
+            a.get("topN").toSeq.flatMap(Seq("-topN", _)) ++ now
+          case "FETCH" =>
+            Seq("fetch", a("segment"), "-site", a("siteFile")) ++ now
+          case "PARSE" => Seq("parse", a("segment"))
+          case "UPDATEDB" =>
+            Seq("updatedb", a("crawldb"), a("segment")) ++ now
+          case "INVERTLINKS" => Seq("invertlinks", a("linkdb"), a("segment"))
+          case "DEDUP" => Seq("dedup", a("crawldb"))
+          case "UPDATEHOSTDB" =>
+            Seq("updatehostdb", a("crawldb"), a("hostdb")) ++ now
+          case "INDEX" =>
+            Seq("index", a("crawldb"), a("linkdb"), a("segment"), a("out"))
+          case "READDB" => Seq("readdb", a("crawldb"), "-stats")
+          case other => throw new IllegalArgumentException(s"job type $other")
+        }
+        val out = new java.io.ByteArrayOutputStream()
+        val rc = Console.withOut(new java.io.PrintStream(out, true, "UTF-8")) {
+          graft.Main.run(spark, argv.toArray)
+        }
+        val text = out.toString(StandardCharsets.UTF_8).trim
+        if (rc != 0)
+          throw new IllegalStateException(s"${argv.head} exited $rc: $text")
+        text
+      } finally seedDir.foreach { d =>
+        java.nio.file.Files.deleteIfExists(d.resolve("seeds.txt"))
+        java.nio.file.Files.delete(d)
       }
     }
 
@@ -429,12 +400,7 @@ object RestServer {
                 reply(ex, 400, """{"error":"invalid seed list name"}""")
               case (Some(name), Some(urls)) =>
                 try {
-                  val list =
-                    urls.split(",").map(_.trim).filter(_.nonEmpty).toSeq
-                  val dir = java.nio.file.Files.createTempDirectory(
-                    s"graft-seed-$name-")
-                  java.nio.file.Files.writeString(dir.resolve("seeds.txt"),
-                    list.mkString("", "\n", "\n"))
+                  val (dir, list) = writeSeeds(name, urls)
                   seedLists.put(name, (dir.toString, list))
                   replyText(ex, 200, dir.toString)
                 } catch {

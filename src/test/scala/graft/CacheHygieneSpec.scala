@@ -118,4 +118,14 @@ class CacheHygieneSpec extends AnyFunSuite with SparkSuite {
     assert(selfCheck > 0, "capture self-check failed")
     assert(msgs.isEmpty, msgs.toArray.mkString("\n"))
   }
+
+  test("corpus -neardup run twice leaves the CacheManager empty") {
+    spark.catalog.clearCache()
+    val root = java.nio.file.Files.createTempDirectory("neardup-cache").toString
+    for (out <- Seq("a", "b")) {
+      assert(Main.run(spark, Array("corpus", dir, s"$root/$out",
+        "-neardup")) == 0)
+      assert(ColumnBridge.cacheIsEmpty(spark), s"after run $out")
+    }
+  }
 }

@@ -4,16 +4,12 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.Suite
 
-/** Shared local SparkSession for operator specs. */
+/** Shared local SparkSession for operator specs: the product session
+  * (GraftExtensions on), local[4] with 4 shuffle partitions. */
 trait SparkSuite extends BeforeAndAfterAll { self: Suite =>
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .appName(getClass.getSimpleName)
-    .getOrCreate()
+  lazy val spark: SparkSession =
+    GraftSession("local[4]", "4", Some(getClass.getSimpleName))
 
   override def afterAll(): Unit = {
     try spark.stop()

@@ -71,10 +71,7 @@ class FileProtocolSpec extends AnyFunSuite {
   }
 
   test("a full crawl round descends a directory tree via the listing") {
-    import org.apache.spark.sql.SparkSession
-    val spark = SparkSession.builder().master("local[2]")
-      .config("spark.sql.shuffle.partitions", 2)
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession("local[2]", "2")
     try {
       import spark.implicits._
       val root = Files.createTempDirectory("fileproto-crawl")

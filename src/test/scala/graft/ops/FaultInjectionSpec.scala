@@ -32,12 +32,8 @@ class FaultInjectionSpec extends AnyFunSuite with BeforeAndAfterAll {
     SparkSession.getActiveSession.foreach(_.stop())
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
-    spark = SparkSession.builder()
-      .master("local[4, 2]") // 2 task attempts: planted failures retry
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", "false")
-      .appName(getClass.getSimpleName)
-      .getOrCreate()
+    // local[4, 2]: 2 task attempts, so planted failures retry
+    spark = graft.GraftSession("local[4, 2]", "4", Some(getClass.getSimpleName))
     spark.sparkContext.setLogLevel("ERROR")
   }
 

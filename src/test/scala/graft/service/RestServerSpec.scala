@@ -149,11 +149,42 @@ class RestServerSpec extends AnyFunSuite with SparkSuite {
       assert(p.contains("parsed=1"), p)
       job(s"type=updatedb&crawldb=$root/db&segment=$root/seg" +
         "&now=1700000002000")
+      val il = job(s"type=invertlinks&linkdb=$root/ldb&segment=$root/seg")
+      assert(il.contains("linkdb="), il)
+      val dd = job(s"type=dedup&crawldb=$root/db")
+      assert(dd.contains("dedup:"), dd)
+      val hd = job(s"type=updatehostdb&crawldb=$root/db&hostdb=$root/hdb" +
+        "&now=1700000002000")
+      assert(hd.contains("hosts=1"), hd)
       val ix = job(s"type=index&crawldb=$root/db&linkdb=$root/ldb" +
         s"&segment=$root/seg&out=$root/sink")
       assert(ix.contains("indexed="), ix)
       val rd = job(s"type=readdb&crawldb=$root/db")
       assert(rd.contains("db_fetched"), rd)
+
+      // parity: the CLI verbs on the same inputs and `now` values build
+      // the same crawldb as the REST jobs
+      val cli = Files.createTempDirectory("rest-jobs-cli").toString
+      Files.writeString(Paths.get(cli, "seeds.txt"), s"$A/\n")
+      Console.withOut(new java.io.PrintStream(
+          new java.io.ByteArrayOutputStream())) {
+        Seq(
+          Seq("inject", s"$cli/db", s"$cli/seeds.txt", "-now", "1700000000000"),
+          Seq("generate", s"$cli/db", s"$cli/seg", "-now", "1700000001000"),
+          Seq("fetch", s"$cli/seg", "-site", s"$root/site.json",
+            "-now", "1700000001000"),
+          Seq("parse", s"$cli/seg"),
+          Seq("updatedb", s"$cli/db", s"$cli/seg", "-now", "1700000002000"),
+          Seq("invertlinks", s"$cli/ldb", s"$cli/seg"),
+          Seq("dedup", s"$cli/db"),
+          Seq("updatehostdb", s"$cli/db", s"$cli/hdb", "-now", "1700000002000")
+        ).foreach(v => assert(graft.Main.run(spark, v.toArray) == 0, v))
+      }
+      def dbRows(dir: String): Seq[String] =
+        graft.tables.CrawlDbStore.open(spark, dir).read().collect()
+          .map(_.toString).toSeq.sorted
+      assert(dbRows(s"$root/db").nonEmpty)
+      assert(dbRows(s"$root/db") == dbRows(s"$cli/db"))
 
       // DbQuery type=topN / type=dump stream line data (the openapi
       // octet-stream half of the enum; stats/url are the JSON half)
