@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.net.Pacer
 import graft.ops._
 import graft.plugins.Extensions
-import graft.tables.{CrawlDbTable, Segment}
+import graft.tables.Segment
 
 /** The `bin/nutch` verb dispatcher (src/bin/nutch:243-327) as a thin CLI
   * over the library ops. Every verb is one library call on the parquet
@@ -72,6 +72,11 @@ import graft.tables.{CrawlDbTable, Segment}
   * graft.Main showproperties
   * graft.Main startserver [-port N]
   * ```
+  *
+  * Every CrawlDb, LinkDb and HostDb a verb opens has one layout, the
+  * bucketed generations of `tables.GenTable`; `crawl -buckets N`
+  * (N ≥ 1) sizes a fresh root, and a db dir that does not exist yet
+  * gets one bucket per task slot (at most 32).
   *
   * The wire protocol for `fetch`/`crawl` is a site snapshot (JSON lines:
   * url, code, body, contentType) served through MockProtocol — the
@@ -434,9 +439,14 @@ object Main {
             0
         }
       case "crawl" :: root :: seeds :: rest =>
-        opt(rest, "-site") match {
-          case None => System.err.println("crawl: -site required"); 2
-          case Some(sf) =>
+        val asked = opt(rest, "-buckets")
+        (opt(rest, "-site"), asked.map(_.toIntOption.filter(_ >= 1))) match {
+          case (None, _) => System.err.println("crawl: -site required"); 2
+          case (_, Some(None)) =>
+            System.err.println(
+              s"crawl: -buckets must be a positive integer, got ${asked.get}")
+            2
+          case (Some(sf), buckets) =>
             val site = loadSite(spark, sf)
             val seedList = spark.read.textFile(seeds).collect().toSeq
             val nRounds = optL(rest, "-rounds", 1).toInt
@@ -445,10 +455,8 @@ object Main {
               topN = optL(rest, "-topN", Long.MaxValue),
               startTime = now0,
               pacer = Pacer.Config(serverDelayMs = optL(rest, "-delay", 0)),
-              // bucketed is the default, sized by the session on a
-              // fresh root; `-buckets 0` opts out to the plain layout,
-              // `-buckets N` sizes the layout
-              buckets = opt(rest, "-buckets").map(_.toInt),
+              // sizes a fresh root; not given, the session sizes it
+              buckets = buckets.flatten,
               storeResponseTime = rest.contains("-responsetime"))
             val summary =
               if (rest.contains("-stream") && nRounds >= 1 &&

@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 
 import graft.crawl.{FetchSchedule, UpdateDb}
 import graft.plugins.Extensions
-import graft.tables.{CrawlDbTable, HostDbTable, LinkDbTable, Segment}
+import graft.tables.{CrawlDbStore, HostDbStore, LinkDbStore, Segment}
 
 /** The crawl conductor — the `bin/crawl` driver re-expressed as a
   * library call (src/bin/crawl:285-406 lifecycle: inject once, then per
@@ -15,12 +15,6 @@ import graft.tables.{CrawlDbTable, HostDbTable, LinkDbTable, Segment}
   * run is reproducible. All state lives in the copy-on-write tables
   * under `root`. */
 object Crawl {
-
-  /** Cap of the bucket count a fresh root gets when none was asked for
-    * ([[Width.fromSlots]]: one bucket per task slot, at most this). A
-    * 1000-executor deployment would size the layout to its target
-    * per-bucket file size with an explicit count instead. */
-  val DefaultBuckets = 32
 
   final case class Config(
       rounds: Int = 1,
@@ -48,21 +42,21 @@ object Crawl {
       // per-job counter rows appended to <root>/metrics each round
       // (the NutchMetrics/LatencyTracker observability surface)
       metrics: Boolean = true,
-      // url-bucketed CrawlDb layout (tables.BucketedCrawlDbTable) —
-      // THE DEFAULT since r9: every url-keyed join reads the db side
-      // Exchange-free (the co-located-join layout for a CrawlDb that
-      // outweighs its per-round segments by orders of magnitude;
-      // byte-identical output A/B-proven in CrawlRoundSpec). The
-      // field mirrors the crawl verb's `-buckets`: None (not asked)
-      // sizes a fresh root by the session (Width.fromSlots), Some(n)
-      // gives it n buckets, Some(0) opts out to the plain
-      // generation-swapped layout. An existing root keeps its count.
-      // An existing plain crawldb migrates automatically on the next
-      // bucketed run (one-time rewrite into generation 1).
+      // bucket count of a FRESH root, as the crawl verb's `-buckets`
+      // asks it: None (not asked) sizes it by the session
+      // (tables.GenTable.open), Some(n ≥ 1) gives it n. An existing
+      // root keeps the count it was written with. Every url-keyed join
+      // reads the bucketed db side Exchange-free (the co-located-join
+      // layout for a CrawlDb that outweighs its per-round segments by
+      // orders of magnitude; CrawlRoundSpec shows the count changes no
+      // result).
       buckets: Option[Int] = None,
       // record per-URL protocol elapsed ms (_rs_) so the metrics table
       // carries real fetch_latency_* percentiles (http.store.responsetime)
-      storeResponseTime: Boolean = false)
+      storeResponseTime: Boolean = false) {
+    require(buckets.forall(_ >= 1),
+      s"buckets must be at least 1, got ${buckets.get}")
+  }
 
   final case class RoundStats(round: Int, generated: Long, fetched: Long,
       dbSize: Long)
@@ -75,47 +69,20 @@ object Crawl {
     * ([[graft.streaming.StreamingCrawl]]), so both drive the SAME
     * stores through the SAME round body. */
   final case class Stores(
-      crawldb: graft.tables.CrawlDbStore,
-      linkdb: graft.tables.LinkDbStore,
-      hostdb: graft.tables.HostDbStore,
+      crawldb: CrawlDbStore,
+      linkdb: LinkDbStore,
+      hostdb: HostDbStore,
       metrics: Option[Metrics.Table])
 
+  /** Open the three dbs under `root`. The asked count only sizes a
+    * fresh crawldb; a fresh linkdb or hostdb takes the crawldb's count,
+    * so the indexing cogroup's two db sides stay co-bucketed (the
+    * hostdb buckets on HOST, its merge key). */
   def openStores(spark: SparkSession, root: String, cfg: Config): Stores = {
-    def guardPlain(db: String): Unit =
-      // a bucketed db must not be silently read as empty by the
-      // plain store — fail loudly instead of restarting the crawl
-      require(!java.nio.file.Files.exists(
-        java.nio.file.Paths.get(root, db, "GENERATION")),
-        s"$root/$db uses the bucketed layout (GENERATION file " +
-          "present); run without -buckets 0, or copy the current " +
-          "generation out to a plain layout first")
-    val (crawldb, linkdb, hostdb) = cfg.buckets match {
-      case Some(0) =>
-        guardPlain("crawldb"); guardPlain("linkdb"); guardPlain("hostdb")
-        (new CrawlDbTable(spark, s"$root/crawldb"),
-          new LinkDbTable(spark, s"$root/linkdb"),
-          new HostDbTable(spark, s"$root/hostdb"))
-      case asked =>
-        val n = asked.getOrElse(Width.fromSlots(spark, DefaultBuckets))
-        // the count only sizes a FRESH root: BucketedGenTable keeps
-        // an existing root's on-disk count (its _BUCKETS sidecar), so a
-        // default run can never silently re-layout a db installed with
-        // a different -buckets. The CrawlDb and LinkDb share the count
-        // so the indexing cogroup's two db sides stay co-bucketed —
-        // when the crawldb already exists, its count seeds a fresh
-        // linkdb too. The hostdb buckets on HOST (its merge key).
-        val cdb = new graft.tables.BucketedCrawlDbTable(
-          spark, s"$root/crawldb", n)
-        cdb.migrateFromPlain() // no-op unless a plain `current` exists
-        val ldb = new graft.tables.BucketedLinkDbTable(
-          spark, s"$root/linkdb", cdb.buckets)
-        ldb.migrateFromPlain()
-        val hdb = new graft.tables.BucketedHostDbTable(
-          spark, s"$root/hostdb", cdb.buckets)
-        hdb.migrateFromPlain()
-        (cdb, ldb, hdb)
-    }
-    Stores(crawldb, linkdb, hostdb,
+    val crawldb = CrawlDbStore.open(spark, s"$root/crawldb", cfg.buckets)
+    val n = Some(crawldb.buckets)
+    Stores(crawldb, LinkDbStore.open(spark, s"$root/linkdb", n),
+      HostDbStore.open(spark, s"$root/hostdb", n),
       if (cfg.metrics) Some(new Metrics.Table(spark, s"$root/metrics"))
       else None)
   }

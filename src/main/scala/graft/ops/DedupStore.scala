@@ -124,7 +124,8 @@ object DedupStore {
       part: String, key: String): DataFrame = {
     val t = tag(dir, part)
     if (!spark.catalog.tableExists(t))
-      Bucketed.register(spark, t, s"$dir/$part", buckets, key)
+      Bucketed.register(spark, t, s"$dir/$part", buckets,
+        spark.read.parquet(s"$dir/$part").schema, key)
     spark.table(t)
   }
 

@@ -87,7 +87,8 @@ object GramStore {
         .bucketSpec.map(_.numBuckets)
     if (!registeredBuckets.contains(buckets)) {
       spark.sql(s"DROP TABLE IF EXISTS `$t`")
-      Bucketed.register(spark, t, s"$dir/grams", buckets, key = "g")
+      Bucketed.register(spark, t, s"$dir/grams", buckets,
+        spark.read.parquet(s"$dir/grams").schema, key = "g")
     }
     spark.table(t)
   }

@@ -12,7 +12,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * frame, so the call plans but does not run it; an unavailable
   * estimate counts as unbounded and lands on `hi`.
   *
-  * [[fromSlots]]: the bucket count of a fresh crawl root. */
+  * [[fromSlots]]: the bucket count of a fresh crawl db. */
 object Width {
 
   def fromStats(df: DataFrame, taskBytes: Long, lo: Int, hi: Int): Int =
@@ -26,7 +26,7 @@ object Width {
       .min(BigInt(hi)).max(BigInt(lo)).toInt
 
   /** One bucket per task slot of the session, capped at `cap`, at least
-    * 1: the bucket count `Crawl.openStores` gives a FRESH crawl root
+    * 1: the bucket count `tables.GenTable.open` gives a FRESH crawl db
     * when no count was asked for. Every url join over a bucketed db
     * runs one task per bucket and AQE cannot coalesce a bucketed side,
     * so buckets beyond the slots only add per-task cost (32 buckets of

@@ -56,6 +56,9 @@ object RestServer {
     private val jobs = new ConcurrentHashMap[Long, Job]()
     private val nextId = new AtomicLong(1)
     private val pool = Executors.newFixedThreadPool(2)
+    // the HttpServer's request threads: owned here so stop() ends them
+    private val requests = Executors.newFixedThreadPool(4)
+    http.setExecutor(requests)
     // runner thread per live job: abort interrupts it on top of the
     // job-group cancel (stop is the graceful half — cancel only)
     private val jobThreads = new ConcurrentHashMap[Long, Thread]()
@@ -101,7 +104,9 @@ object RestServer {
       new ConcurrentHashMap[String, (String, Seq[String])]()
 
     def port: Int = http.getAddress.getPort
-    def stop(): Unit = { http.stop(0); pool.shutdownNow() }
+    def stop(): Unit = {
+      http.stop(0); requests.shutdownNow(); pool.shutdownNow()
+    }
 
     private def q(ex: HttpExchange): Map[String, String] = {
       val raw = Option(ex.getRequestURI.getRawQuery).getOrElse("")
@@ -677,7 +682,6 @@ object RestServer {
   /** Start on `port` (0 = ephemeral). */
   def start(spark: SparkSession, port: Int = 8081): Server = {
     val http = HttpServer.create(new InetSocketAddress(port), 0)
-    http.setExecutor(Executors.newFixedThreadPool(4))
     val s = new Server(spark, http)
     s.install()
     http.start()

@@ -2,32 +2,15 @@ package graft.tables
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
-import org.apache.spark.sql.{Dataset, Encoder, SaveMode, SparkSession}
+import org.apache.spark.sql.{Dataset, Encoder, Encoders, SaveMode,
+  SparkSession}
+import org.apache.spark.sql.types.StructType
 
+import graft.ops.UpdateHostDb.HostRow
 import graft.schemas._
 
-/** Parquet-backed crawl tables with the reference's copy-on-write install
-  * semantics (CrawlDb.java:163-181 install/swap): every update writes a
-  * NEW generation directory, then atomically swaps `current` → `old` →
-  * gone. Readers of the previous generation are never disturbed — the
-  * same discipline that lets a 1000-executor job read `current` while
-  * updatedb writes the next one. */
+/** File helpers of the copy-on-write table writers. */
 object Install {
-
-  /** Write-then-swap: `ds` → <table>/.tmp-<nonce>, then
-    * current → old (replacing old), tmp → current. */
-  def install[T](ds: Dataset[T], tableDir: String, nonce: String): Unit = {
-    val dir = Paths.get(tableDir)
-    Files.createDirectories(dir)
-    val tmp = dir.resolve(s".tmp-$nonce")
-    ds.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    val current = dir.resolve("current")
-    val old = dir.resolve("old")
-    if (Files.exists(old)) deleteRecursively(old)
-    if (Files.exists(current))
-      Files.move(current, old, StandardCopyOption.ATOMIC_MOVE)
-    Files.move(tmp, current, StandardCopyOption.ATOMIC_MOVE)
-  }
 
   def deleteRecursively(p: Path): Unit = {
     if (Files.isDirectory(p))
@@ -36,65 +19,8 @@ object Install {
   }
 }
 
-/** What the conductor needs from a CrawlDb, layout-agnostic: plain
-  * generation-swapped parquet ([[CrawlDbTable]]) or the url-bucketed
-  * layout ([[BucketedCrawlDbTable]]). */
-trait CrawlDbStore {
-  def read(): Dataset[CrawlRow]
-  def install(next: Dataset[CrawlRow], nonce: String): Unit
-}
-
-object CrawlDbStore {
-  /** Open a CrawlDb in WHATEVER layout is on disk: a GENERATION
-    * pointer means the url-bucketed layout (bucket count resolved by
-    * [[GenLayout.resolveBuckets]] — never guessed), otherwise the
-    * plain generation-swapped layout. Every single-step entry point
-    * (CLI verbs, REST readers) must open through this — a plain
-    * CrawlDbTable pointed at a bucketed root silently reads EMPTY,
-    * and a plain install would write a `current` the bucketed
-    * conductor ignores (split-brain). */
-  def open(spark: SparkSession, dir: String): CrawlDbStore =
-    if (GenLayout.isBucketed(dir)) new BucketedCrawlDbTable(spark, dir,
-      GenLayout.resolveBuckets(spark, dir, GenLayout.generation(dir), "url"))
-    else new CrawlDbTable(spark, dir)
-}
-
-/** Layout-agnostic handle on a LinkDb: plain ([[LinkDbTable]]) or
-  * url-bucketed ([[BucketedLinkDbTable]]) — the LinkDb is the OTHER
-  * db-sized relation in the per-round url joins (the indexing cogroup
-  * reads CrawlDb ⋈ LinkDb ⋈ segments, IndexerMapReduce.java:309-393;
-  * `linkdb.max.inlinks` bounds rows per url, not the url count), so it
-  * earns the same Exchange-free layout the CrawlDb got in r9. */
-trait LinkDbStore {
-  def read(): Dataset[LinkRow]
-  def install(next: Dataset[LinkRow], nonce: String): Unit
-}
-
-object LinkDbStore {
-  /** Layout-detecting open, mirroring [[CrawlDbStore.open]]. */
-  def open(spark: SparkSession, dir: String): LinkDbStore =
-    if (GenLayout.isBucketed(dir)) new BucketedLinkDbTable(spark, dir,
-      GenLayout.resolveBuckets(spark, dir, GenLayout.generation(dir), "url"))
-    else new LinkDbTable(spark, dir)
-}
-
-/** The CrawlDb: url → CrawlDatum at <dir>/current (SURVEY §1.1). */
-final class CrawlDbTable(spark: SparkSession, dir: String)
-    extends CrawlDbStore {
-  import spark.implicits._
-
-  def exists: Boolean = Files.exists(Paths.get(dir, "current"))
-
-  def read(): Dataset[CrawlRow] =
-    if (exists) spark.read.parquet(s"$dir/current").as[CrawlRow]
-    else spark.emptyDataset[CrawlRow]
-
-  def install(next: Dataset[CrawlRow], nonce: String): Unit =
-    Install.install(next, dir, nonce)
-}
-
 /** The generation-pointer + bucket-count bookkeeping shared by the
-  * bucketed CrawlDb and LinkDb stores. A bucketed db root holds:
+  * CrawlDb, LinkDb and HostDb stores ([[GenTable]]). A db root holds:
   *
   *   - `GENERATION` — pointer file naming the live generation `g<N>`
   *     (the `current` symlink's role), swapped write-then-atomic-move;
@@ -104,13 +30,11 @@ final class CrawlDbTable(spark: SparkSession, dir: String)
   *     Spark's parquet reader ignores it). Written before the pointer
   *     swap, so it is crash-atomic by the same write-before-pointer
   *     discipline as the data;
-  *   - `BUCKETS` — dir-scoped hint kept for pre-r10 roots, updated
-  *     atomically; per-generation sidecars take precedence.
+  *   - `BUCKETS` — a dir-scoped count that roots written before
+  *     per-generation sidecars may carry; read as a fallback, never
+  *     written.
   */
 private[tables] object GenLayout {
-
-  def isBucketed(dir: String): Boolean =
-    Files.exists(Paths.get(dir, "GENERATION"))
 
   def generation(dir: String): Long = {
     val f = Paths.get(dir, "GENERATION")
@@ -226,27 +150,26 @@ private[tables] object GenLayout {
   }
 }
 
-/** Shared machinery of the bucketed, generation-pointered stores: every
+/** The one on-disk layout of the CrawlDb, LinkDb and HostDb: every
   * generation is a bucketed catalog table under `<dir>/g<N>`, with a
-  * GENERATION pointer file playing the role of the `current` symlink.
-  * Same copy-on-write discipline as [[Install]] — a new generation is
+  * GENERATION pointer file naming the live one (the reference's
+  * `current`, CrawlDb.java:163-181 install/swap). A new generation is
   * fully written (data + its `_BUCKETS` sidecar) before the pointer
   * moves, the previous generation survives one swap for in-flight
-  * readers, older ones are dropped.
+  * readers, older ones are dropped — so readers of the previous
+  * generation are never disturbed while the next one is written.
   *
-  * What it buys at scale: every url-keyed join against the db — the
-  * indexing cogroup, dedup merge-back, linkdb-side joins — reads the
-  * db side WITHOUT an Exchange (the bucket layout already satisfies
-  * the join's required distribution), so the 10^9-row side of the
-  * per-round joins never reshuffles; only the small per-round segment
-  * side moves.
+  * What the bucketing buys at scale: every key join against the db —
+  * the indexing cogroup, dedup merge-back, linkdb-side joins, the
+  * hostdb census merge — reads the db side WITHOUT an Exchange (the
+  * bucket layout already satisfies the join's required distribution),
+  * so the 10^9-row side of the per-round joins never reshuffles; only
+  * the small per-round segment side moves.
   *
-  * `requestedBuckets` only applies to the FIRST generation of a fresh
-  * root; an existing root keeps the count it was written with (so a
-  * default run can never silently re-layout a db installed with a
-  * different `-buckets`). */
-sealed abstract class BucketedGenTable[T](spark: SparkSession, dir: String,
-    requestedBuckets: Int, prefix: String, key: String = "url")(
+  * Stores are made only by their companion's `open`
+  * ([[GenTable.open]]), the one place a db's bucket count is decided. */
+sealed abstract class GenTable[T](spark: SparkSession, dir: String,
+    freshBuckets: Int, prefix: String, key: String)(
     implicit enc: Encoder[T]) {
 
   private val tag =
@@ -256,12 +179,11 @@ sealed abstract class BucketedGenTable[T](spark: SparkSession, dir: String,
   private def tableName(g: Long) = s"${tag}_g$g"
 
   /** The effective bucket count: the on-disk layout's count when a
-    * generation exists, else the requested count a first install will
-    * use. */
+    * generation exists, else the count a first install will use. */
   def buckets: Int = {
     val g = generation
     if (g > 0L) GenLayout.resolveBuckets(spark, dir, g, key)
-    else requestedBuckets
+    else freshBuckets
   }
 
   def read(): Dataset[T] = {
@@ -272,32 +194,33 @@ sealed abstract class BucketedGenTable[T](spark: SparkSession, dir: String,
       // catalog entry is session-scoped: a NEW session resuming this
       // root re-registers the generation's parquet before reading, so
       // the bucketed layout (and its Exchange-free joins) carries
-      // across JVMs like the plain layout's <dir>/current does.
-      // Registration MUST use the count the generation was written
-      // with (GenLayout.resolveBuckets) — a caller-supplied mismatch
-      // would silently mis-declare the layout and corrupt bucket
-      // pruning
+      // across JVMs. Registration MUST use the count the generation was
+      // written with (GenLayout.resolveBuckets) — a mismatch would
+      // silently mis-declare the layout and corrupt bucket pruning —
+      // and takes the encoder's schema, so re-opening runs no
+      // schema-inference job
       if (!spark.catalog.tableExists(tableName(g)))
         Bucketed.register(spark, tableName(g), s"$dir/g$g",
-          GenLayout.resolveBuckets(spark, dir, g, key), key)
+          GenLayout.resolveBuckets(spark, dir, g, key), enc.schema, key)
       spark.table(tableName(g)).as[T](enc)
     }
   }
 
-  /** One-way, idempotent migration from the plain generation-swapped
-    * layout: an existing `<dir>/current` (and no GENERATION pointer)
-    * is rewritten as bucketed generation 1, then the plain dirs are
-    * dropped — same write-before-pointer discipline as [[install]], so
-    * a crash mid-migration leaves either the untouched plain layout or
-    * a complete bucketed one, never a torn state. */
-  def migrateFromPlain(): Unit = {
+  /** One-way, idempotent import of a root written before every db had
+    * this layout: an existing `<dir>/current` (and no GENERATION
+    * pointer) is rewritten as generation 1, then the old `current` and
+    * `old` dirs are dropped — same write-before-pointer discipline as
+    * [[install]], so a crash mid-import leaves either the untouched old
+    * root or a complete generation 1, never a torn state. The only code
+    * that knows the old format. */
+  private[tables] def migrateFromPlain(): Unit = {
     val cur = Paths.get(dir, "current")
     if (generation == 0L && Files.exists(cur))
-      install(spark.read.parquet(cur.toString).as[T](enc), "migrate")
-    // cleanup is RETRIED on every call, not only the migrating one: a
+      install(spark.read.schema(enc.schema).parquet(cur.toString).as[T](enc),
+        "migrate")
+    // cleanup is RETRIED on every open, not only the importing one: a
     // crash between the pointer swap above and the deletes below must
-    // not leave a stale plain `current` that a mis-routed plain reader
-    // would serve as live data forever
+    // not leave a stale `current` behind
     if (generation > 0L) {
       if (Files.exists(cur)) Install.deleteRecursively(cur)
       val old = Paths.get(dir, "old")
@@ -307,7 +230,7 @@ sealed abstract class BucketedGenTable[T](spark: SparkSession, dir: String,
 
   def install(next: Dataset[T], nonce: String): Unit = {
     val g = generation + 1
-    val n = buckets // existing layout's count, or requested on a fresh root
+    val n = buckets // existing layout's count, or the fresh count
     Files.createDirectories(Paths.get(dir))
     Bucketed.install(next.toDF(), tableName(g), s"$dir/g$g", n, key)
     // per-generation sidecar: records the count this generation was
@@ -316,11 +239,8 @@ sealed abstract class BucketedGenTable[T](spark: SparkSession, dir: String,
     // (a crash here leaves the pointer on g-1, whose own sidecar is
     // already in place). Underscore prefix keeps Spark's reader off it.
     Files.writeString(Paths.get(dir, s"g$g", "_BUCKETS"), n.toString)
-    // dir-scoped hint for pre-r10 tooling; atomic so no reader ever
-    // sees a torn write, and per-generation sidecars outrank it anyway
-    GenLayout.atomicWrite(Paths.get(dir, "BUCKETS"), n.toString, nonce)
-    // pointer swap mirrors Install's discipline: write-then-atomic-move,
-    // never an in-place rewrite a crash could truncate
+    // pointer swap: write-then-atomic-move, never an in-place rewrite a
+    // crash could truncate
     GenLayout.atomicWrite(Paths.get(dir, "GENERATION"), g.toString, nonce)
     // keep g-1 for in-flight readers (the `old` generation); drop g-2
     if (g >= 3) {
@@ -330,23 +250,79 @@ sealed abstract class BucketedGenTable[T](spark: SparkSession, dir: String,
   }
 }
 
-/** The CrawlDb over the url-bucketed layout ([[BucketedGenTable]]). */
-final class BucketedCrawlDbTable(spark: SparkSession, dir: String,
-    buckets: Int)
-    extends BucketedGenTable[CrawlRow](spark, dir, buckets,
-      "graft_crawldb_")(
-      org.apache.spark.sql.Encoders.product[CrawlRow])
-    with CrawlDbStore
+object GenTable {
 
-/** The LinkDb over the url-bucketed layout ([[BucketedGenTable]]) —
-  * co-bucketed with the CrawlDb so the indexing cogroup's TWO db-sized
-  * sides both read Exchange-free. */
-final class BucketedLinkDbTable(spark: SparkSession, dir: String,
+  /** Cap of the bucket count a fresh db gets when none was asked for
+    * ([[graft.ops.Width.fromSlots]]: one bucket per task slot, at most
+    * this). A 1000-executor deployment would size the layout to its
+    * target per-bucket file size with an explicit count instead. */
+  val DefaultBuckets = 32
+
+  /** Open the db at `dir`, whoever asks: the conductor, a CLI verb or a
+    * REST job. `buckets` sizes a FRESH dir only (default: one bucket
+    * per task slot, at most [[DefaultBuckets]]); an existing root keeps
+    * the count it was written with, resolved here, so a corrupt or
+    * underivable layout fails the open rather than a later read. A
+    * root written before every db had this layout (a `<dir>/current`)
+    * is imported once as generation 1 — so the first open of such a
+    * root writes, even for a read-only verb. */
+  private[tables] def open[S <: GenTable[_]](spark: SparkSession,
+      buckets: Option[Int])(mk: Int => S): S = {
+    val store =
+      mk(buckets.getOrElse(graft.ops.Width.fromSlots(spark, DefaultBuckets)))
+    store.migrateFromPlain()
+    store.buckets // an existing root resolves its count now
+    store
+  }
+}
+
+/** The CrawlDb: url → CrawlDatum (SURVEY §1.1), url-bucketed. */
+final class CrawlDbStore private (spark: SparkSession, dir: String,
     buckets: Int)
-    extends BucketedGenTable[LinkRow](spark, dir, buckets,
-      "graft_linkdb_")(
-      org.apache.spark.sql.Encoders.product[LinkRow])
-    with LinkDbStore
+    extends GenTable[CrawlRow](spark, dir, buckets, "graft_crawldb_",
+      "url")(Encoders.product[CrawlRow])
+
+object CrawlDbStore {
+  /** See [[GenTable.open]]. */
+  def open(spark: SparkSession, dir: String,
+      buckets: Option[Int] = None): CrawlDbStore =
+    GenTable.open(spark, buckets)(new CrawlDbStore(spark, dir, _))
+}
+
+/** The LinkDb: url → bounded inlink list (LinkDb.java, FIXTURES §A5),
+  * url-bucketed — the OTHER db-sized relation in the per-round url
+  * joins (the indexing cogroup reads CrawlDb ⋈ LinkDb ⋈ segments,
+  * IndexerMapReduce.java:309-393; `linkdb.max.inlinks` bounds rows per
+  * url, not the url count). Co-bucketed with the CrawlDb, the indexing
+  * cogroup's two db-sized sides both read Exchange-free. */
+final class LinkDbStore private (spark: SparkSession, dir: String,
+    buckets: Int)
+    extends GenTable[LinkRow](spark, dir, buckets, "graft_linkdb_",
+      "url")(Encoders.product[LinkRow])
+
+object LinkDbStore {
+  /** See [[GenTable.open]]. */
+  def open(spark: SparkSession, dir: String,
+      buckets: Option[Int] = None): LinkDbStore =
+    GenTable.open(spark, buckets)(new LinkDbStore(spark, dir, _))
+}
+
+/** The HostDb: host → census/failure counters (UpdateHostDbJob),
+  * host-bucketed — the per-round hostdb refresh is a full-outer merge
+  * ON HOST of the crawldb census into the previous hostdb
+  * (UpdateHostDbReducer.java:176-349), so the stored side reads
+  * Exchange-free every round. */
+final class HostDbStore private (spark: SparkSession, dir: String,
+    buckets: Int)
+    extends GenTable[HostRow](spark, dir, buckets, "graft_hostdb_",
+      "host")(Encoders.product[HostRow])
+
+object HostDbStore {
+  /** See [[GenTable.open]]. */
+  def open(spark: SparkSession, dir: String,
+      buckets: Option[Int] = None): HostDbStore =
+    GenTable.open(spark, buckets)(new HostDbStore(spark, dir, _))
+}
 
 /** One segment directory with its parquet parts (SURVEY §1.1; segment
   * naming Generator.java:58-63). Every part is a typed table, so it is
@@ -379,7 +355,7 @@ final class Segment(spark: SparkSession, val dir: String) {
     spark.read.schema(enc.schema).parquet(s"$dir/$name").as[T]
 }
 
-/** Opt-in url-bucketed table layout — the 100 TB co-located-join path.
+/** Bucketed catalog tables — the 100 TB co-located-join path.
   * Two tables written with the same bucket count on `url` join with
   * ZERO Exchange on either side (bucket layout satisfies the join's
   * required distribution), which turns the per-round url-keyed joins —
@@ -388,8 +364,8 @@ final class Segment(spark: SparkSession, val dir: String) {
   * the avoided shuffle dominates the round's cost. Bucket metadata
   * lives in the session catalog (saveAsTable is how Spark records it);
   * `path` keeps the data external under the caller's table directory,
-  * so the copy-on-write Install discipline carries over by writing a
-  * new generation table name and dropping the old one.
+  * so the copy-on-write discipline carries over by writing a new
+  * generation table name and dropping the old one.
   * BucketedSpec asserts the Exchange-free plan against a plain-parquet
   * A/B of the same join. */
 object Bucketed {
@@ -412,76 +388,17 @@ object Bucketed {
     * [[install]] in an earlier session) under `tableName` without
     * rewriting data: the files already carry saveAsTable's bucket-id
     * naming, so a CREATE TABLE with the matching CLUSTERED BY spec
-    * restores the bucket metadata a new session's catalog lost. */
+    * restores the bucket metadata a new session's catalog lost.
+    * `schema` is the files' schema: a typed store passes its encoder's,
+    * so registering runs no job to infer it from the files. */
   def register(spark: SparkSession, tableName: String, path: String,
-      buckets: Int, key: String = "url"): Unit = {
-    val schema = spark.read.parquet(path).schema.toDDL
-    spark.sql(s"""CREATE TABLE IF NOT EXISTS `$tableName` ($schema)
+      buckets: Int, schema: StructType, key: String): Unit = {
+    spark.sql(s"""CREATE TABLE IF NOT EXISTS `$tableName` (${schema.toDDL})
       USING parquet OPTIONS (path '$path')
       CLUSTERED BY ($key) SORTED BY ($key) INTO $buckets BUCKETS""")
   }
 }
 
-/** The LinkDb: url → bounded inlink list (LinkDb.java, FIXTURES §A5). */
+/** A LinkDb row: url → bounded inlink list. */
 final case class Inlink(fromUrl: String, anchor: String)
 final case class LinkRow(url: String, inlinks: Seq[Inlink])
-
-final class LinkDbTable(spark: SparkSession, dir: String)
-    extends LinkDbStore {
-  import spark.implicits._
-
-  def exists: Boolean = Files.exists(Paths.get(dir, "current"))
-
-  def read(): Dataset[LinkRow] =
-    if (exists) spark.read.parquet(s"$dir/current").as[LinkRow]
-    else spark.emptyDataset[LinkRow]
-
-  def install(next: Dataset[LinkRow], nonce: String): Unit =
-    Install.install(next, dir, nonce)
-}
-
-/** Layout-agnostic handle on a HostDb: plain ([[HostDbTable]]) or
-  * host-bucketed ([[BucketedHostDbTable]]) — the per-round hostdb
-  * refresh is a full-outer merge ON HOST of the crawldb census into
-  * the previous hostdb (UpdateHostDbReducer.java:176-349); bucketing
-  * the stored side on host reads it Exchange-free every round, the
-  * same move the url-keyed dbs got. */
-trait HostDbStore {
-  def read(): Dataset[graft.ops.UpdateHostDb.HostRow]
-  def install(next: Dataset[graft.ops.UpdateHostDb.HostRow],
-      nonce: String): Unit
-}
-
-object HostDbStore {
-  /** Layout-detecting open, mirroring [[CrawlDbStore.open]]. */
-  def open(spark: SparkSession, dir: String): HostDbStore =
-    if (GenLayout.isBucketed(dir)) new BucketedHostDbTable(spark, dir,
-      GenLayout.resolveBuckets(spark, dir, GenLayout.generation(dir),
-        "host"))
-    else new HostDbTable(spark, dir)
-}
-
-/** The HostDb: host → census/failure counters (UpdateHostDbJob). */
-final class HostDbTable(spark: SparkSession, dir: String)
-    extends HostDbStore {
-  import spark.implicits._
-
-  def exists: Boolean = Files.exists(Paths.get(dir, "current"))
-
-  def read(): Dataset[graft.ops.UpdateHostDb.HostRow] =
-    if (exists) spark.read.parquet(s"$dir/current")
-      .as[graft.ops.UpdateHostDb.HostRow]
-    else spark.emptyDataset[graft.ops.UpdateHostDb.HostRow]
-
-  def install(next: Dataset[graft.ops.UpdateHostDb.HostRow],
-      nonce: String): Unit =
-    Install.install(next, dir, nonce)
-}
-
-/** The HostDb over the host-bucketed layout ([[BucketedGenTable]]). */
-final class BucketedHostDbTable(spark: SparkSession, dir: String,
-    buckets: Int)
-    extends BucketedGenTable[graft.ops.UpdateHostDb.HostRow](spark, dir,
-      buckets, "graft_hostdb_", key = "host")(
-      org.apache.spark.sql.Encoders.product[graft.ops.UpdateHostDb.HostRow])
-    with HostDbStore

@@ -152,7 +152,7 @@ class MainCliSpec extends AnyFunSuite with SparkSuite {
     assert(v("clean", crawldb, s"$root/sink") == 0)
 
     // state sanity: the fetched seed is db_fetched, p1 discovered
-    val db = new graft.tables.CrawlDbTable(spark, crawldb).read().collect()
+    val db = graft.tables.CrawlDbStore.open(spark, crawldb).read().collect()
     assert(db.map(_.url).toSet.contains(s"$A/p1"))
 
     // unknown verb
@@ -173,7 +173,7 @@ class MainCliSpec extends AnyFunSuite with SparkSuite {
     assert(Main.run(spark, Array("inject", s"$root/crawldb",
       s"$root/seeds.txt", "-filters", conf.toString,
       "-now", "1700000000000")) == 0)
-    val urls = new graft.tables.CrawlDbTable(spark, s"$root/crawldb")
+    val urls = graft.tables.CrawlDbStore.open(spark, s"$root/crawldb")
       .read().collect().map(_.url).toSet
     assert(urls == Set("http://keep.example.com/"))
   }
@@ -189,19 +189,26 @@ class MainCliSpec extends AnyFunSuite with SparkSuite {
     assert(Main.run(spark, Array("crawl", s"$root/crawl", s"$root/seeds.txt",
       "-site", s"$root/site.json", "-rounds", "2",
       "-now", "1700000000000")) == 0)
-    val db = new graft.tables.BucketedCrawlDbTable(spark,
-      s"$root/crawl/crawldb", graft.ops.Crawl.DefaultBuckets)
-      .read().collect()
+    val store = graft.tables.CrawlDbStore.open(spark, s"$root/crawl/crawldb")
+    val db = store.read().collect()
     assert(db.length == 2) // seed + discovered p1
     // no -buckets: the fresh root got one bucket per slot of the
-    // local[4] session; -buckets 0 is the plain layout
-    assert(Files.readString(Paths.get(root, "crawl", "crawldb", "BUCKETS"))
-      .trim == "4")
-    assert(Main.run(spark, Array("crawl", s"$root/plain", s"$root/seeds.txt",
-      "-site", s"$root/site.json", "-now", "1700000000000",
-      "-buckets", "0")) == 0)
-    assert(Files.exists(Paths.get(root, "plain", "crawldb", "current")))
-    assert(!Files.exists(Paths.get(root, "plain", "crawldb", "GENERATION")))
+    // local[4] session
+    assert(store.buckets == 4)
+    // -buckets takes a positive integer: anything else exits 2 before
+    // the crawl starts, and leaves no root behind
+    for (bad <- Seq("0", "-3", "x")) {
+      val err = new java.io.ByteArrayOutputStream()
+      val stderr = System.err
+      System.setErr(new java.io.PrintStream(err, true))
+      val rc = try Main.run(spark, Array("crawl", s"$root/bad",
+        s"$root/seeds.txt", "-site", s"$root/site.json", "-buckets", bad))
+      finally System.setErr(stderr)
+      assert(rc == 2, s"-buckets $bad")
+      assert(err.toString.linesIterator.contains(
+        s"crawl: -buckets must be a positive integer, got $bad"), err)
+      assert(!Files.exists(Paths.get(root, "bad")))
+    }
     // the conductor appended per-job counters; the metrics verb reads
     // them back (summed across rounds, and raw per round)
     assert(Main.run(spark,
@@ -230,9 +237,8 @@ class MainCliSpec extends AnyFunSuite with SparkSuite {
         "-site", s"$root/site.json", "-rounds", "2",
         "-now", "1700000000000") ++ mode) == 0)
     }
-    def dump(dir: String) = new graft.tables.BucketedCrawlDbTable(spark,
-      s"$dir/crawldb", graft.ops.Crawl.DefaultBuckets)
-      .read().collect().map(r => r.url -> r.datum).toMap
+    def dump(dir: String) = graft.tables.CrawlDbStore.open(spark,
+      s"$dir/crawldb").read().collect().map(r => r.url -> r.datum).toMap
     val s = dump(s"$root/stream")
     assert(s.nonEmpty && s == dump(s"$root/batch"))
   }
@@ -249,11 +255,10 @@ class MainCliSpec extends AnyFunSuite with SparkSuite {
       "-now", "1700000000000")) == 0)
     val dbDir = s"$root/c/crawldb"
     assert(Files.exists(Paths.get(dbDir, "GENERATION")))
-    // readdb against the bucketed root sees the data (a plain open
-    // would silently read empty)
+    // readdb against the conductor's root sees its data
     assert(Main.run(spark, Array("readdb", dbDir, "-stats")) == 0)
-    // inject against the bucketed root MERGES into the bucketed db
-    // instead of writing a plain `current` the conductor would ignore
+    // inject MERGES into the conductor's db rather than writing a
+    // second layout beside it
     Files.writeString(Paths.get(root, "seeds2.txt"),
       "http://late-seed.example.com/\n")
     assert(Main.run(spark, Array("inject", dbDir, s"$root/seeds2.txt",
@@ -264,6 +269,73 @@ class MainCliSpec extends AnyFunSuite with SparkSuite {
       .read().collect().map(_.url).toSet
     assert(urls.contains("http://late-seed.example.com/"))
     assert(urls.contains(s"$A/"))
+  }
+
+  test("a root in the old plain <db>/current layout is imported once " +
+    "as generation 1, whichever verb opens it") {
+    import spark.implicits._
+    import graft.schemas.{CrawlDatum, CrawlRow}
+    import graft.tables.{CrawlDbStore, HostDbStore, Inlink, LinkDbStore,
+      LinkRow}
+    import graft.ops.UpdateHostDb.HostRow
+    val root = Files.createTempDirectory("cli-plain-root").toString
+    Files.writeString(Paths.get(root, "seeds.txt"), s"$A/\n")
+    Files.writeString(Paths.get(root, "site.json"),
+      s"""{"url": "$A/", "code": 1, "body": "<html><title>A</title><body>x</body></html>", "contentType": "text/html"}""")
+    val crawl = s"$root/crawl"
+    val crawlRows = Seq(
+      CrawlRow(s"$A/", CrawlDatum.unfetched(1700000000000L, 3600)),
+      CrawlRow(s"$A/old", CrawlDatum.unfetched(1600000000000L, 3600)
+        .copy(score = 2.5f, signature = Some("sig"))))
+    val linkRows = Seq(LinkRow(s"$A/old",
+      Seq(Inlink("http://from.example.com/", "anchor"))))
+    val hostRows = Seq(HostRow("cli-a.example.com", 1, 2L, 0, 0, 0, 0, 0,
+      0, 1.5, 1000L))
+    // what a crawl root written before the one layout holds: the live
+    // `current` generation and the previous one at `old`
+    for (gen <- Seq("current", "old")) {
+      crawlRows.toDS().write.parquet(s"$crawl/crawldb/$gen")
+      linkRows.toDS().write.parquet(s"$crawl/linkdb/$gen")
+      hostRows.toDS().write.parquet(s"$crawl/hostdb/$gen")
+    }
+    def generation(db: String) =
+      Files.readString(Paths.get(crawl, db, "GENERATION")).trim.toInt
+    def sortedCrawl(ds: org.apache.spark.sql.Dataset[CrawlRow]) =
+      ds.collect().sortBy(_.url).toSeq
+
+    // a read-only verb imports the crawldb (its first open writes)
+    val out = new java.io.ByteArrayOutputStream()
+    val rc = Console.withOut(new java.io.PrintStream(out)) {
+      Main.run(spark, Array("readdb", s"$crawl/crawldb", "-stats"))
+    }
+    assert(rc == 0, out.toString)
+    assert(out.toString.linesIterator.exists(_.matches("db_unfetched\\t2\\b.*")),
+      out.toString)
+    assert(generation("crawldb") == 1)
+    assert(sortedCrawl(spark.read.parquet(s"$crawl/crawldb/g1")
+      .as[CrawlRow]) == crawlRows)
+    // a writing verb opens the imported root: no second import
+    Files.writeString(Paths.get(root, "seeds2.txt"),
+      "http://late-seed.example.com/\n")
+    assert(Main.run(spark, Array("inject", s"$crawl/crawldb",
+      s"$root/seeds2.txt", "-now", "1700000001000")) == 0)
+    assert(generation("crawldb") == 2)
+    assert(CrawlDbStore.open(spark, s"$crawl/crawldb").read().collect()
+      .map(_.url).toSet == crawlRows.map(_.url).toSet +
+        "http://late-seed.example.com/")
+    // the conductor imports the linkdb and hostdb the same way
+    assert(Main.run(spark, Array("crawl", crawl, s"$root/seeds.txt",
+      "-site", s"$root/site.json", "-now", "1700000002000")) == 0)
+    assert(generation("hostdb") == 1) // the CLI crawl keeps no hostdb
+    assert(HostDbStore.open(spark, s"$crawl/hostdb").read().collect()
+      .toSeq == hostRows)
+    assert(generation("linkdb") == 2) // g1 import + the round's install
+    assert(spark.read.parquet(s"$crawl/linkdb/g1").as[LinkRow].collect()
+      .toSeq == linkRows)
+    assert(LinkDbStore.open(spark, s"$crawl/linkdb").read().collect()
+      .map(_.url).toSet.contains(s"$A/old"))
+    for (db <- Seq("crawldb", "linkdb", "hostdb"); gen <- Seq("current", "old"))
+      assert(!Files.exists(Paths.get(crawl, db, gen)), s"$db/$gen")
   }
 
   test("merge verbs, webgraph family, checkers, readhostdb, showproperties") {
@@ -297,7 +369,7 @@ class MainCliSpec extends AnyFunSuite with SparkSuite {
 
     // mergedb: union of the two one-host dbs
     assert(v("mergedb", s"$root/db_m", s"$root/db_a", s"$root/db_b") == 0)
-    val mergedUrls = new graft.tables.CrawlDbTable(spark, s"$root/db_m")
+    val mergedUrls = graft.tables.CrawlDbStore.open(spark, s"$root/db_m")
       .read().collect().map(_.url).toSet
     assert(mergedUrls.contains(s"$A/") && mergedUrls.contains(s"$B/"))
 
@@ -309,7 +381,7 @@ class MainCliSpec extends AnyFunSuite with SparkSuite {
     // mergelinkdb: both cross-host inlink sets survive
     assert(v("mergelinkdb", s"$root/ldb_m", s"$root/ldb_a",
       s"$root/ldb_b") == 0)
-    val l = new graft.tables.LinkDbTable(spark, s"$root/ldb_m")
+    val l = graft.tables.LinkDbStore.open(spark, s"$root/ldb_m")
       .read().collect().map(r => r.url -> r.inlinks.map(_.fromUrl)).toMap
     assert(l(s"$B/").contains(s"$A/"))
     assert(l(s"$A/").contains(s"$B/"))
@@ -327,7 +399,7 @@ class MainCliSpec extends AnyFunSuite with SparkSuite {
     assert(scored(s"$A/") > 0.15)
     assert(v("nodedumper", s"$root/wg", "-by", "inlinks", "-topn", "2") == 0)
     assert(v("scoreupdater", s"$root/db_m", s"$root/wg") == 0)
-    val dbScores = new graft.tables.CrawlDbTable(spark, s"$root/db_m")
+    val dbScores = graft.tables.CrawlDbStore.open(spark, s"$root/db_m")
       .read().collect().map(r => r.url -> r.datum.score).toMap
     assert(math.abs(dbScores(s"$A/") - scored(s"$A/")) < 1e-5)
 
@@ -450,7 +522,7 @@ class MainCliSpec extends AnyFunSuite with SparkSuite {
     // the seed list feeds inject like any other
     assert(v("inject", s"$root/crawldb", s"$root/seeds.txt",
       "-now", "1700000000000") == 0)
-    assert(new graft.tables.CrawlDbTable(spark, s"$root/crawldb")
+    assert(graft.tables.CrawlDbStore.open(spark, s"$root/crawldb")
       .read().count() == 3)
   }
 

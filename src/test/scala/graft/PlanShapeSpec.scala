@@ -30,7 +30,7 @@ class PlanShapeSpec extends AnyFunSuite with SparkSuite {
     import graft.schemas.{CrawlDatum, CrawlRow}
     val root = java.nio.file.Files
       .createTempDirectory("plan-bucket-prune").toString
-    val db = new graft.tables.BucketedCrawlDbTable(spark, root, 8)
+    val db = graft.tables.CrawlDbStore.open(spark, root, Some(8))
     val rows = (0 until 400).map(i =>
       CrawlRow(s"http://h${i % 11}.example.com/p$i",
         CrawlDatum.unfetched(i.toLong, 3600)))

@@ -141,10 +141,10 @@ class FetchHttpSpec extends AnyFunSuite with SparkSuite {
     withServer { (_, base) =>
       import graft.ops.{Fetch, Generate, Inject, Parse}
       import graft.crawl.{DefaultFetchSchedule, ScheduleConfig, UpdateDb}
-      import graft.tables.{CrawlDbTable, Segment}
+      import graft.tables.{CrawlDbStore, Segment}
       import spark.implicits._
       val root = Files.createTempDirectory("graft-http-round").toString
-      val crawldb = new CrawlDbTable(spark, s"$root/crawldb")
+      val crawldb = CrawlDbStore.open(spark, s"$root/crawldb")
       val acceptAll = RegexUrlFilter.parse(Iterator("+."))
       val schedule = DefaultFetchSchedule(ScheduleConfig())
 

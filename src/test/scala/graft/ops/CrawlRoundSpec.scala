@@ -8,7 +8,7 @@ import graft.SparkSuite
 import graft.crawl.{DefaultFetchSchedule, ScheduleConfig, UpdateDb}
 import graft.net.RegexUrlFilter
 import graft.schemas.{CrawlRow, CrawlStatus => S}
-import graft.tables.{CrawlDbTable, LinkDbTable, Segment}
+import graft.tables.{CrawlDbStore, LinkDbStore, Segment}
 
 /** End-to-end mini crawl over the table layer (SURVEY §7.2 slice):
   * inject → generate → fetch (mock protocol) → parse → updatedb →
@@ -51,8 +51,8 @@ class CrawlRoundSpec extends AnyFunSuite with SparkSuite {
   test("two full crawl rounds over the table layer") {
     import spark.implicits._
     val root = Files.createTempDirectory("graft-crawl").toString
-    val crawldb = new CrawlDbTable(spark, s"$root/crawldb")
-    val linkdb = new LinkDbTable(spark, s"$root/linkdb")
+    val crawldb = CrawlDbStore.open(spark, s"$root/crawldb")
+    val linkdb = LinkDbStore.open(spark, s"$root/linkdb")
 
     // ---- inject ----
     val seeds = spark.createDataset(Seq(
@@ -147,8 +147,11 @@ class CrawlRoundSpec extends AnyFunSuite with SparkSuite {
     // duplicate content: page1/page2 share the parse-text signature
     assert(after2(s"$A/page1").signature.isDefined)
     assert(after2(s"$A/page1").signature == after2(s"$A/page2").signature)
-    // copy-on-write: previous generation still readable at old/
-    assert(Files.exists(java.nio.file.Paths.get(s"$root/crawldb/old")))
+    // copy-on-write: the previous generation survives the swap
+    val live = Files.readString(
+      java.nio.file.Paths.get(root, "crawldb", "GENERATION")).trim.toLong
+    assert(Files.exists(java.nio.file.Paths.get(root, "crawldb",
+      s"g${live - 1}")))
 
     // ---- index ----
     val docs = Index(crawldb.read(),
@@ -237,7 +240,7 @@ class CrawlRoundSpec extends AnyFunSuite with SparkSuite {
   test("adaptive schedule grows the interval on unchanged content") {
     import spark.implicits._
     val root = Files.createTempDirectory("graft-adaptive").toString
-    val crawldb = new CrawlDbTable(spark, s"$root/crawldb")
+    val crawldb = CrawlDbStore.open(spark, s"$root/crawldb")
     val adaptive = graft.crawl.AdaptiveFetchSchedule(schedCfg)
     val url = s"$A/page1"
 
@@ -308,22 +311,15 @@ class CrawlRoundSpec extends AnyFunSuite with SparkSuite {
   }
 
   /** The bucket counts of the three stores `openStores` hands out for
-    * `root` (0 for a plain store). */
+    * `root`. */
   private def storeBuckets(root: String, cfg: Crawl.Config): Seq[Int] = {
-    import graft.tables._
     val s = Crawl.openStores(spark, root, cfg)
-    Seq(s.crawldb, s.linkdb, s.hostdb).map {
-      case t: BucketedCrawlDbTable => t.buckets
-      case t: BucketedLinkDbTable => t.buckets
-      case t: BucketedHostDbTable => t.buckets
-      case _: CrawlDbTable | _: LinkDbTable | _: HostDbTable => 0
-    }
+    Seq(s.crawldb.buckets, s.linkdb.buckets, s.hostdb.buckets)
   }
 
   test("bucket count changes no result; a fresh root's count follows " +
     "the session, an existing root keeps its own") {
     import org.apache.spark.sql.functions.col
-    import graft.tables.{CrawlDbStore, LinkDbStore}
     // what a crawl leaves behind, layout-free: sorted db and linkdb
     // rows and every counter (wall_ms is a clock, not a result)
     def outcome(run: (String, Crawl.Summary)) = {
@@ -339,22 +335,23 @@ class CrawlRoundSpec extends AnyFunSuite with SparkSuite {
           .where(col("name") =!= "wall_ms").as[Metrics.MetricRow]
           .collect().sortBy(m => (m.round, m.job, m.name)).toSeq)
     }
-    val layouts = Seq(Some(0), Some(1), Some(4), Some(8), Some(32), None)
+    val layouts = Seq(Some(1), Some(4), Some(8), Some(32), None)
     val runs = layouts.map(b => b -> Bk.crawl(b)).toMap
-    val plain = outcome(runs(Some(0)))
-    assert(plain._3.nonEmpty && plain._4.nonEmpty)
+    val one = outcome(runs(Some(1)))
+    assert(one._3.nonEmpty && one._4.nonEmpty)
     for (b <- layouts.tail)
-      assert(outcome(runs(b)) == plain, s"buckets $b")
+      assert(outcome(runs(b)) == one, s"buckets $b")
 
     // the rule: one bucket per slot on a fresh root, shared by all
     // three stores; an explicit count wins; an existing root keeps its
-    // count whatever is asked; -buckets 0 is the plain layout
+    // count whatever is asked; a count below 1 is rejected
     assert(spark.sparkContext.defaultParallelism == 4)
     def fresh() = Files.createTempDirectory("crawl-rule").toString
     assert(storeBuckets(fresh(), Bk.config(None)) == Seq(4, 4, 4))
     assert(storeBuckets(fresh(), Crawl.Config()) == Seq(4, 4, 4))
     assert(storeBuckets(fresh(), Bk.config(Some(32))) == Seq(32, 32, 32))
-    assert(storeBuckets(fresh(), Bk.config(Some(0))) == Seq(0, 0, 0))
+    for (b <- Seq(0, -3))
+      intercept[IllegalArgumentException](Bk.config(Some(b)))
     assert(storeBuckets(runs(None)._1, Bk.config(None)) == Seq(4, 4, 4))
     assert(storeBuckets(runs(Some(32))._1, Bk.config(None)) ==
       Seq(32, 32, 32))
@@ -397,64 +394,56 @@ class CrawlRoundSpec extends AnyFunSuite with SparkSuite {
   test("bucketed CrawlDb layout: conductor A/B identical, join Exchange-free") {
     import org.apache.spark.sql.functions.col
     import Bk.{registry, seeds}
-    val (plainRoot, plainSum) = Bk.crawl(Some(0))
+    val (oneRoot, oneSum) = Bk.crawl(Some(1))
     val (bRoot, bSum) = Bk.crawl(Some(8))
 
     // byte-identical rounds and final db between the two layouts
-    assert(bSum == plainSum)
-    def dump(store: graft.tables.CrawlDbStore) =
+    assert(bSum == oneSum)
+    def dump(store: CrawlDbStore) =
       store.read().collect().map(r => r.url -> r.datum).toMap
-    val plainDb = dump(new graft.tables.CrawlDbTable(
-      spark, s"$plainRoot/crawldb"))
-    val bDb = dump(new graft.tables.BucketedCrawlDbTable(
-      spark, s"$bRoot/crawldb", 8))
-    assert(bDb == plainDb)
+    val oneDb = dump(CrawlDbStore.open(spark, s"$oneRoot/crawldb"))
+    val bDb = dump(CrawlDbStore.open(spark, s"$bRoot/crawldb"))
+    assert(bDb == oneDb)
 
     // the LinkDb is bucketed alongside the CrawlDb (r10): byte-identical
-    // content between the layouts, and the bucketed run really wrote
+    // content between the layouts, and the 8-bucket run really wrote
     // the generation-pointer layout with the crawldb's count
-    def dumpLinks(store: graft.tables.LinkDbStore) =
+    def dumpLinks(store: LinkDbStore) =
       store.read().collect()
         .map(r => r.url -> r.inlinks.sortBy(i => (i.fromUrl, i.anchor)))
         .toMap
-    val plainLinks = dumpLinks(new graft.tables.LinkDbTable(
-      spark, s"$plainRoot/linkdb"))
-    val bLinkStore = graft.tables.LinkDbStore.open(spark, s"$bRoot/linkdb")
-    assert(bLinkStore.isInstanceOf[graft.tables.BucketedLinkDbTable])
-    assert(bLinkStore.asInstanceOf[graft.tables.BucketedLinkDbTable]
-      .buckets == 8)
-    assert(dumpLinks(bLinkStore) == plainLinks)
-    assert(plainLinks.nonEmpty)
-
-    // migration path (bucketed is the conductor default since r9): one
-    // round plain, then a bucketed run resumes the same root — the
-    // plain current is rewritten as generation 1 and round 2 continues
-    // on it; final db byte-identical to both straight 2-round runs
-    val migRoot = Files.createTempDirectory("crawl-mig").toString
-    val cfg1 = Crawl.Config(rounds = 1, buckets = Some(0),
-      pacer = graft.net.Pacer.Config(serverDelayMs = 0))
-    Crawl.run(spark, migRoot, seeds, Fetch.MockProtocol(Bk.site),
-      registry, cfg1)
+    val oneLinks = dumpLinks(LinkDbStore.open(spark, s"$oneRoot/linkdb"))
+    val bLinkStore = LinkDbStore.open(spark, s"$bRoot/linkdb")
     assert(Files.exists(
-      java.nio.file.Paths.get(migRoot, "crawldb", "current")))
+      java.nio.file.Paths.get(bRoot, "linkdb", "GENERATION")))
+    assert(bLinkStore.buckets == 8)
+    assert(dumpLinks(bLinkStore) == oneLinks)
+    assert(oneLinks.nonEmpty)
+
+    // a root written before every db had the generation layout (the
+    // plain `<db>/current` parquet, written here by hand from round 1
+    // of a one-round crawl) resumes: its current is imported as
+    // generation 1 and round 2 continues on it; final db byte-identical
+    // to both straight 2-round runs
+    val cfg1 = Crawl.Config(rounds = 1,
+      pacer = graft.net.Pacer.Config(serverDelayMs = 0))
+    val r1Root = Files.createTempDirectory("crawl-r1").toString
+    Crawl.run(spark, r1Root, seeds, Fetch.MockProtocol(Bk.site),
+      registry, cfg1)
+    val migRoot = Files.createTempDirectory("crawl-mig").toString
+    CrawlDbStore.open(spark, s"$r1Root/crawldb").read()
+      .write.parquet(s"$migRoot/crawldb/current")
+    LinkDbStore.open(spark, s"$r1Root/linkdb").read()
+      .write.parquet(s"$migRoot/linkdb/current")
     Crawl.run(spark, migRoot, seeds, Fetch.MockProtocol(Bk.site),
       registry, cfg1.copy(buckets = Some(8),
         startTime = cfg1.startTime + cfg1.roundMillis)) // round 2's clock
-    assert(!Files.exists(
-      java.nio.file.Paths.get(migRoot, "crawldb", "current")))
-    assert(Files.exists(
-      java.nio.file.Paths.get(migRoot, "crawldb", "GENERATION")))
-    val migDb = dump(new graft.tables.BucketedCrawlDbTable(
-      spark, s"$migRoot/crawldb", 8))
-    assert(migDb == plainDb)
-
-    // opting back out against a bucketed root fails loudly instead of
-    // silently restarting from an empty plain db
-    val ex = intercept[IllegalArgumentException] {
-      Crawl.run(spark, migRoot, seeds, Fetch.MockProtocol(Bk.site),
-        registry, cfg1)
+    for (db <- Seq("crawldb", "linkdb")) {
+      assert(!Files.exists(java.nio.file.Paths.get(migRoot, db, "current")))
+      assert(Files.exists(java.nio.file.Paths.get(migRoot, db, "GENERATION")))
     }
-    assert(ex.getMessage.contains("bucketed layout"))
+    val migDb = dump(CrawlDbStore.open(spark, s"$migRoot/crawldb"))
+    assert(migDb == oneDb)
 
     // the db side of a url join over the bucketed current generation
     // plans with NO Exchange under the bucketed scan (the segment side
@@ -462,8 +451,7 @@ class CrawlRoundSpec extends AnyFunSuite with SparkSuite {
     val prior = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", -1)
     try {
-      val db = new graft.tables.BucketedCrawlDbTable(
-        spark, s"$bRoot/crawldb", 8).read().toDF()
+      val db = CrawlDbStore.open(spark, s"$bRoot/crawldb").read().toDF()
       val seg = new graft.tables.Segment(spark, s"$bRoot/segments/r1")
         .fetch.toDF().select(col("url"), col("datum").as("fetchDatum"))
       val joined = db.join(seg, "url")

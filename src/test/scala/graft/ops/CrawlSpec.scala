@@ -8,7 +8,7 @@ import graft.SparkSuite
 import graft.net.RegexUrlFilter
 import graft.plugins.Extensions
 import graft.schemas.{CrawlStatus => S}
-import graft.tables.CrawlDbTable
+import graft.tables.CrawlDbStore
 
 /** Drives the whole lifecycle through the bin/crawl conductor. */
 class CrawlSpec extends AnyFunSuite with SparkSuite {
@@ -40,8 +40,7 @@ class CrawlSpec extends AnyFunSuite with SparkSuite {
     assert(summary.hosts == 2)
     assert(summary.indexed >= 2)
 
-    val db = new graft.tables.BucketedCrawlDbTable(spark,
-      s"$root/crawldb", Crawl.DefaultBuckets).read().collect()
+    val db = CrawlDbStore.open(spark, s"$root/crawldb").read().collect()
       .map(r => r.url -> r.datum).toMap
     assert(db(s"$A/").status == S.DB_FETCHED)
     assert(db(s"$A/p1").status == S.DB_FETCHED ||
@@ -98,8 +97,7 @@ class CrawlSpec extends AnyFunSuite with SparkSuite {
     assert(hosts("site-a.example.com").fetched >= 1)
 
     // _ngt_ markers were stamped at generate and stripped by updatedb
-    val db = new graft.tables.BucketedCrawlDbTable(spark,
-      s"$root/crawldb", Crawl.DefaultBuckets).read().collect()
+    val db = CrawlDbStore.open(spark, s"$root/crawldb").read().collect()
     assert(db.nonEmpty)
     assert(db.forall(!_.datum.metadata.contains(
       graft.schemas.CrawlDatum.GenerateTimeKey)), db.mkString("\n"))
@@ -126,8 +124,7 @@ class CrawlSpec extends AnyFunSuite with SparkSuite {
 
     // the sitemap-declared url entered the db and was fetched in a
     // later round
-    val db = new graft.tables.BucketedCrawlDbTable(spark,
-      s"$root/crawldb", Crawl.DefaultBuckets).read().collect()
+    val db = CrawlDbStore.open(spark, s"$root/crawldb").read().collect()
       .map(r => r.url -> r.datum).toMap
     assert(db.contains(s"$A/from-sitemap"), db.keys)
     assert(db(s"$A/from-sitemap").status == S.DB_FETCHED ||

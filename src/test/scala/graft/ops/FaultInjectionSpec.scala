@@ -8,13 +8,13 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.schemas.{CrawlDatum, CrawlRow, CrawlStatus => S}
-import graft.tables.{BucketedCrawlDbTable, CrawlDbTable, Install, Segment}
+import graft.tables.{CrawlDbStore, Segment}
 
 /** Fault injection for the write paths: a task that fails on its FIRST
   * attempt (and succeeds on retry) must leave no partial or duplicate
   * visible state behind any of the three write disciplines —
   * Fetch.toSegment's stage-then-derive, the copy-on-write table
-  * installs (plain and bucketed), and the partitioned log (whose
+  * installs, and the partitioned log (whose
   * documented contract is at-least-once for a concurrent tailer but
   * exactly-once for the sealed batch, because a retry rewrites its
   * deterministic segment files in place). A task that fails EVERY
@@ -81,43 +81,23 @@ class FaultInjectionSpec extends AnyFunSuite with BeforeAndAfterAll {
     CrawlRow(s"http://cow.example.com/p$i",
       CrawlDatum.unfetched(1000L + i, 3600)))
 
-  test("copy-on-write install survives a first-attempt task failure " +
-    "with exactly-once rows (plain and bucketed)") {
+  test("copy-on-write install survives a first-attempt task failure") {
     val sp = spark; import sp.implicits._
     val flakyDs = spark.createDataset(rows(100))
       .map(r => flakyOnFirstAttempt(r))
 
-    val plainDir = Files.createTempDirectory("fault-plain").toString
-    val plain = new CrawlDbTable(spark, s"$plainDir/db")
-    plain.install(spark.createDataset(rows(10)), "g1") // prior generation
-    plain.install(flakyDs, "g2")
-    val got = plain.read().collect()
-    assert(got.length == 100 && got.map(_.url).distinct.length == 100)
-
     val bDir = Files.createTempDirectory("fault-bucketed").toString
-    val bucketed = new BucketedCrawlDbTable(spark, s"$bDir/db", 4)
-    bucketed.install(spark.createDataset(rows(10)), "g1")
+    val bucketed = CrawlDbStore.open(spark, s"$bDir/db", Some(4))
+    bucketed.install(spark.createDataset(rows(10)), "g1") // prior generation
     bucketed.install(flakyDs, "g2")
     val gotB = bucketed.read().collect()
     assert(gotB.length == 100 && gotB.map(_.url).distinct.length == 100)
   }
 
-  test("an install that fails every attempt leaves the previous " +
-    "generation fully readable (plain and bucketed)") {
+  test("a failing install leaves the previous generation readable") {
     val sp = spark; import sp.implicits._
-    val plainDir = Files.createTempDirectory("fault-perm").toString
-    val plain = new CrawlDbTable(spark, s"$plainDir/db")
-    plain.install(spark.createDataset(rows(25)), "g1")
-    intercept[org.apache.spark.SparkException] {
-      plain.install(spark.createDataset(rows(100)).map(alwaysFail _), "g2")
-    }
-    assert(plain.read().collect().map(_.url).toSet ==
-      rows(25).map(_.url).toSet) // current untouched
-    assert(!Files.list(Paths.get(plainDir, "db")).iterator().hasNext ||
-      Files.exists(Paths.get(plainDir, "db", "current")))
-
     val bDir = Files.createTempDirectory("fault-perm-b").toString
-    val bucketed = new BucketedCrawlDbTable(spark, s"$bDir/db", 4)
+    val bucketed = CrawlDbStore.open(spark, s"$bDir/db", Some(4))
     bucketed.install(spark.createDataset(rows(25)), "g1")
     intercept[Exception] {
       bucketed.install(spark.createDataset(rows(100)).map(alwaysFail _),

@@ -122,6 +122,23 @@ class RestServerSpec extends AnyFunSuite with SparkSuite {
     } finally srv.stop()
   }
 
+  test("a stopped server leaves no live non-daemon thread behind") {
+    import scala.jdk.CollectionConverters._
+    def liveNonDaemon(): Set[Thread] = Thread.getAllStackTraces.keySet
+      .asScala.filter(t => t.isAlive && !t.isDaemon).toSet
+    val before = liveNonDaemon()
+    for (_ <- 1 to 3) {
+      val srv = RestServer.start(spark, port = 0)
+      try assert(get(s"http://localhost:${srv.port}/admin")._1 == 200)
+      finally srv.stop()
+    }
+    // shut-down pool threads exit asynchronously: wait for them
+    def leaked = liveNonDaemon() -- before
+    val deadline = System.nanoTime() + 10000000000L
+    while (leaked.nonEmpty && System.nanoTime() < deadline) Thread.sleep(50)
+    assert(leaked.isEmpty, leaked.map(_.getName).mkString(", "))
+  }
+
   test("full job-type surface: fetch, parse, index, readdb (openapi JobType)") {
     val srv = RestServer.start(spark, port = 0)
     try {

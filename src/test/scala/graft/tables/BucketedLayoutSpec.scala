@@ -41,9 +41,10 @@ class BucketedLayoutSpec extends AnyFunSuite with SparkSuite {
     "over the torn dir-scoped file)") {
     val sp = spark; import sp.implicits._
     val root = Files.createTempDirectory("layout-crash").toString
-    val db = new BucketedCrawlDbTable(spark, root, 4)
+    val db = CrawlDbStore.open(spark, root, Some(4))
     db.install(spark.createDataset(crawlRows(40)), "g1")
     assert(Files.readString(Paths.get(root, "g1", "_BUCKETS")).trim == "4")
+    assert(!Files.exists(Paths.get(root, "BUCKETS"))) // sidecars only
 
     // simulate the crash window of an install that was CHANGING the
     // count to 8: g2's data + sidecar and the dir-scoped BUCKETS are
@@ -56,7 +57,7 @@ class BucketedLayoutSpec extends AnyFunSuite with SparkSuite {
 
     wipeCatalog("graft_crawldb_") // fresh JVM: catalog gone, disk stays
     val reopened = CrawlDbStore.open(spark, root)
-    assert(reopened.asInstanceOf[BucketedCrawlDbTable].buckets == 4,
+    assert(reopened.buckets == 4,
       "live generation g1 must re-register with the count IT was " +
         "written with, not the torn dir-scoped hint")
     assert(reopened.read().count() == 40) // g1, not the torn g2
@@ -83,15 +84,14 @@ class BucketedLayoutSpec extends AnyFunSuite with SparkSuite {
       .where(pmod(hash(col("url")), lit(8)) =!= 7)
     val kept = keep.count()
     assert(kept < 400 && kept > 300, s"planted skew broke: $kept")
-    val db = new BucketedCrawlDbTable(spark, root, 8)
+    val db = CrawlDbStore.open(spark, root, Some(8))
     db.install(keep, "g1")
     assert(!Files.list(Paths.get(root, "g1")).toArray.map(_.toString)
       .exists(_.contains("_00007")), "top bucket unexpectedly non-empty")
     Files.delete(Paths.get(root, "g1", "_BUCKETS"))
-    Files.delete(Paths.get(root, "BUCKETS"))
     wipeCatalog("graft_crawldb_")
     val reopened = CrawlDbStore.open(spark, root)
-    assert(reopened.asInstanceOf[BucketedCrawlDbTable].buckets == 8,
+    assert(reopened.buckets == 8,
       "derivation must validate against the data's hash placement, " +
         "never register the max-file-id+1 undercount")
     assert(reopened.read().count() == kept)
@@ -103,14 +103,13 @@ class BucketedLayoutSpec extends AnyFunSuite with SparkSuite {
     "fails loudly; a garbage sidecar names the file") {
     val sp = spark; import sp.implicits._
     val root = Files.createTempDirectory("layout-derive").toString
-    val db = new BucketedCrawlDbTable(spark, root, 8)
+    val db = CrawlDbStore.open(spark, root, Some(8))
     db.install(spark.createDataset(crawlRows(200)), "g1")
     // age the root back to the pre-r10 layout: no sidecars at all
     Files.delete(Paths.get(root, "g1", "_BUCKETS"))
-    Files.delete(Paths.get(root, "BUCKETS"))
     wipeCatalog("graft_crawldb_")
     val reopened = CrawlDbStore.open(spark, root)
-    assert(reopened.asInstanceOf[BucketedCrawlDbTable].buckets == 8)
+    assert(reopened.buckets == 8)
     assert(reopened.read().count() == 200)
     wipeCatalog("graft_crawldb_")
 
@@ -134,14 +133,39 @@ class BucketedLayoutSpec extends AnyFunSuite with SparkSuite {
       ex2.getMessage)
   }
 
+  test("re-opening a db after a catalog wipe runs no schema-inference " +
+    "job") {
+    val sp = spark; import sp.implicits._
+    val root = Files.createTempDirectory("layout-reopen").toString
+    CrawlDbStore.open(spark, root, Some(4))
+      .install(spark.createDataset(crawlRows(40)), "g1")
+    wipeCatalog("graft_crawldb_") // fresh JVM: catalog gone, disk stays
+    // open + plan re-register the generation without a job: the only
+    // job of the group below is the marker that follows them
+    val sc = spark.sparkContext
+    sc.setJobGroup("db-reopen", "re-open the db")
+    try {
+      CrawlDbStore.open(spark, root).read().queryExecution.analyzed
+      sc.parallelize(Seq(1), 1).count() // the marker: one job
+    } finally sc.clearJobGroup()
+    // job events reach the status store asynchronously, in order
+    val deadline = System.nanoTime() + 10000000000L
+    def jobs = sc.statusTracker.getJobIdsForGroup("db-reopen")
+    while (jobs.isEmpty && System.nanoTime() < deadline) Thread.sleep(20)
+    assert(jobs.length == 1, s"jobs ${jobs.mkString(", ")}")
+    assert(CrawlDbStore.open(spark, root).read().collect().sortBy(_.url)
+      .toSeq == crawlRows(40).sortBy(_.url))
+    wipeCatalog("graft_crawldb_")
+  }
+
   test("an existing root keeps its on-disk count even when opened with " +
     "a different requested count (no silent re-layout)") {
     val sp = spark; import sp.implicits._
     val root = Files.createTempDirectory("layout-keep").toString
-    val db8 = new BucketedCrawlDbTable(spark, root, 8)
+    val db8 = CrawlDbStore.open(spark, root, Some(8))
     db8.install(spark.createDataset(crawlRows(50)), "g1")
     // a later run configured with a different default must not re-layout
-    val db32 = new BucketedCrawlDbTable(spark, root, 32)
+    val db32 = CrawlDbStore.open(spark, root, Some(32))
     assert(db32.buckets == 8)
     db32.install(spark.createDataset(crawlRows(60)), "g2")
     assert(Files.readString(Paths.get(root, "g2", "_BUCKETS")).trim == "8")
@@ -153,19 +177,24 @@ class BucketedLayoutSpec extends AnyFunSuite with SparkSuite {
     "LinkDbStore.open detects the layout") {
     val sp = spark; import sp.implicits._
     val root = Files.createTempDirectory("layout-linkdb").toString
-    val ldb = new BucketedLinkDbTable(spark, root, 4)
+    val ldb = LinkDbStore.open(spark, root, Some(4))
     ldb.install(spark.createDataset(linkRows(60)), "g1")
     wipeCatalog("graft_linkdb_")
     val reopened = LinkDbStore.open(spark, root)
-    assert(reopened.isInstanceOf[BucketedLinkDbTable])
+    assert(reopened.buckets == 4)
     assert(reopened.read().collect().map(_.url).sorted.toSeq ==
       linkRows(60).map(_.url).sorted)
     wipeCatalog("graft_linkdb_")
-    // and a plain dir still opens plain
-    val plainRoot = Files.createTempDirectory("layout-linkdb-plain").toString
-    new LinkDbTable(spark, plainRoot)
-      .install(spark.createDataset(linkRows(5)), "g1")
-    assert(LinkDbStore.open(spark, plainRoot).isInstanceOf[LinkDbTable])
+    // and a fresh dir opens in the same layout, one bucket per slot of
+    // the local[4] session
+    val freshRoot = Files.createTempDirectory("layout-linkdb-fresh").toString
+    val fresh = LinkDbStore.open(spark, freshRoot)
+    assert(fresh.buckets == 4)
+    fresh.install(spark.createDataset(linkRows(5)), "g1")
+    assert(Files.readString(Paths.get(freshRoot, "GENERATION")).trim == "1")
+    assert(Files.readString(Paths.get(freshRoot, "g1", "_BUCKETS")).trim ==
+      "4")
+    wipeCatalog("graft_linkdb_")
   }
 
   test("bucketed HostDb (keyed on host): resumes across a catalog wipe, " +
@@ -173,7 +202,7 @@ class BucketedLayoutSpec extends AnyFunSuite with SparkSuite {
     val sp = spark; import sp.implicits._
     import graft.ops.UpdateHostDb
     val root = Files.createTempDirectory("layout-hostdb").toString
-    val hdb = new BucketedHostDbTable(spark, root, 4)
+    val hdb = HostDbStore.open(spark, root, Some(4))
     val rows = (0 until 40).map(i => UpdateHostDb.HostRow(
       s"h$i.example.com", i, 2L * i, 0, 0, 0, 0, 0, 0, i * 1.5, 1000L))
     hdb.install(spark.createDataset(rows), "g1")
@@ -181,7 +210,7 @@ class BucketedLayoutSpec extends AnyFunSuite with SparkSuite {
       .filter(_.startsWith("graft_hostdb_"))
       .foreach(n => spark.sql(s"DROP TABLE `$n`"))
     val reopened = HostDbStore.open(spark, root)
-    assert(reopened.isInstanceOf[BucketedHostDbTable])
+    assert(reopened.buckets == 4)
     assert(reopened.read().collect().map(_.host).sorted.toSeq ==
       rows.map(_.host).sorted)
 
@@ -216,9 +245,9 @@ class BucketedLayoutSpec extends AnyFunSuite with SparkSuite {
     val sp = spark; import sp.implicits._
     val root = Files.createTempDirectory("layout-index").toString
     val n = 200
-    val cdb = new BucketedCrawlDbTable(spark, s"$root/crawldb", 8)
+    val cdb = CrawlDbStore.open(spark, s"$root/crawldb", Some(8))
     cdb.install(spark.createDataset(crawlRows(n)), "g1")
-    val ldb = new BucketedLinkDbTable(spark, s"$root/linkdb", 8)
+    val ldb = LinkDbStore.open(spark, s"$root/linkdb", Some(8))
     ldb.install(spark.createDataset(linkRows(n)), "g1")
     val urls = crawlRows(n).map(_.url)
     val fetch = spark.createDataset(urls.map(u => CrawlRow(u,

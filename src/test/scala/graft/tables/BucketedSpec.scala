@@ -72,7 +72,7 @@ class BucketedSpec extends AnyFunSuite with SparkSuite {
     import spark.implicits._
     import graft.schemas.{CrawlDatum, CrawlRow}
     val root = Files.createTempDirectory("graft-bucketed3").toString
-    val t = new BucketedCrawlDbTable(spark, root, buckets = 4)
+    val t = CrawlDbStore.open(spark, root, Some(4))
     val data = (1 to 60).map(i =>
       CrawlRow(s"http://h${i % 7}.com/p$i", CrawlDatum.unfetched(i.toLong, 30)))
     t.install(data.toDS(), "n1")
@@ -85,7 +85,7 @@ class BucketedSpec extends AnyFunSuite with SparkSuite {
     assert(tbl.nonEmpty)
     tbl.foreach(n => spark.sql(s"DROP TABLE `$n`"))
 
-    val t2 = new BucketedCrawlDbTable(spark, root, buckets = 4)
+    val t2 = CrawlDbStore.open(spark, root)
     val resumed = t2.read()
     assert(resumed.collect().map(_.url).sorted.toSeq ==
       data.map(_.url).sorted)
