@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 import graft.net.Pacer
 import graft.ops._
@@ -72,6 +72,11 @@ import graft.tables.Segment
   * graft.Main showproperties
   * graft.Main startserver [-port N]
   * ```
+  *
+  * `corpus` takes every gauge from one aggregate over its drop ledger
+  * (each input doc with the reason it dropped, or `keep`): `docs_in`,
+  * `docs_kept` (0 when nothing survives) and `dropped_<reason>` per
+  * reason seen and per gate run; its summary line prints the same.
   *
   * Every CrawlDb, LinkDb and HostDb a verb opens has one layout, the
   * bucketed generations of `tables.GenTable`; `crawl -buckets N`
@@ -801,11 +806,38 @@ object Main {
                   "near_dup").otherwise(col("drop_reason")))
               .drop("near_drop")
           }
-          labeled = pin(labeled.cache())
-          var kept = labeled.where(col("drop_reason") === "keep")
-            .select(col("doc_id"), col("text"), col("lang"), col("source"))
-          var spansRemoved = 0L
-          var substrEmptied = 0L
+          // The drop LEDGER: every input doc with its drop_reason (mark,
+          // never delete — readdb -stats / dedup). A gate computes on the
+          // live rows (drop_reason = keep), marks its reason on the rows
+          // it drops and nulls their text; the text transforms carry
+          // their counts as columns (n_removed, pii_n). One aggregate
+          // gives every gauge: docs_in = kept + dropped_* by construction.
+          val live = col("drop_reason") === "keep"
+          var ledger = pin(labeled.select(col("doc_id"),
+              when(live, col("text")).as("text"), col("lang"),
+              col("source"), col("drop_reason"),
+              lit(0L).as("n_removed"), lit(0L).as("pii_n"))
+            .cache())
+          def liveRows(cs: String*): DataFrame =
+            ledger.where(live).select(cs.map(col): _*)
+          // every gate that ran reports its gauge, 0 if it dropped none
+          val gated = scala.collection.mutable.ArrayBuffer.empty[String]
+          // a gate's drop, with `where(keeps)`'s rule: the live rows
+          // where `keeps` is false OR null take `reason`
+          def mark(marked: DataFrame, reason: String,
+              keeps: Column): DataFrame = {
+            gated += reason
+            marked
+              .withColumn("drop_reason",
+                when(live && !coalesce(keeps, lit(false)), reason)
+                  .otherwise(col("drop_reason")))
+              .withColumn("text", when(live, col("text")))
+          }
+          // the id-set form: the live rows whose doc_id is in `ids`
+          def dropIds(reason: String, ids: DataFrame): DataFrame =
+            mark(ledger.join(ids.select(col("doc_id"), lit(true).as("_drop")),
+              Seq("doc_id"), "left"), reason, col("_drop").isNull)
+              .drop("_drop")
           if (rest.contains("-exactsubstr")) {
             // ExactSubstr span REMOVAL (Lee et al. ACL 2022) on the kept
             // corpus: cross-document duplicated 15-word runs are cut from
@@ -813,25 +845,22 @@ object Main {
             // doc-level dedup stages above can't touch a boilerplate
             // paragraph embedded in otherwise-unique documents
             val cleaned = graft.ops.ExactSubstr
-              .clean(kept.select(col("doc_id"), col("text")))
+              .clean(liveRows("doc_id", "text"))
               .select(col("doc_id"), col("clean_text"), col("n_removed"))
-            // cached: the two metric aggregates below AND the corpus
-            // build consume this frame — uncached, the whole removal
-            // pipeline (window hashing + coverage + text rebuild, the
-            // heaviest stage of the job) would execute three times
-            val rewritten = pin(kept.join(cleaned, "doc_id")
-              .select(col("doc_id"), col("clean_text").as("text"),
-                col("lang"), col("source"), col("n_removed"))
-              .cache())
-            spansRemoved = rewritten.agg(coalesce(sum("n_removed"), lit(0L)))
-              .head().getLong(0)
             // a doc whose text was ENTIRELY duplicated spans is an empty
             // string now — an empty training document is not a document;
-            // drop it under its own reason (conservation still holds)
-            substrEmptied = rewritten.where(length(col("text")) === 0).count()
-            kept = rewritten.where(length(col("text")) > 0).drop("n_removed")
+            // drop it under its own reason
+            ledger = mark(ledger.drop("n_removed")
+                .join(cleaned, Seq("doc_id"), "left")
+                .withColumn("text", col("clean_text"))
+                .withColumn("n_removed", coalesce(col("n_removed"), lit(0L)))
+                .drop("clean_text"),
+              "exactsubstr_empty", length(col("text")) > 0)
+            // cached: every later gate reads it twice (live rows, then
+            // the mark), and uncached the removal pipeline — the job's
+            // heaviest stage — would run per read
+            ledger = pin(ledger.cache())
           }
-          var mixtureDropped = 0L
           if (rest.contains("-temperature")) {
             // α = 1/2 temperature rebalance (the mixture_temperature
             // query's rates, applied): downsample over-represented
@@ -842,7 +871,7 @@ object Main {
             // target share via the deterministic md5 coin (sample_cap's
             // discipline: content-keyed, stable across runs and
             // partitionings, integer-exact)
-            val byLang = kept
+            val byLang = liveRows("lang", "text")
               // null-lang docs take no part in the rebalance (kept
               // whole by the left join below) — excluded here so a
               // null group can't bind the budget it never consumes
@@ -851,19 +880,18 @@ object Main {
                 size(split(col("text"), " ")).cast("long").as("nt"))
               .groupBy("lang").agg(sum("nt").as("tok"))
             val keepRates = temperatureKeepRates(byLang)
-            val before = kept.count()
             // LEFT join + keep-all default: an inner join would silently
             // DROP docs with NULL lang (null equi-join keys never match,
             // even though byLang's groupBy produced a null-lang rate
             // row), misattributing them to dropped_mixture. Null-lang
             // docs take no part in language rebalancing — keep them.
-            kept = kept.join(broadcast(keepRates), Seq("lang"), "left")
-              .where(Queries.md5Long(col("doc_id").cast("string")) % 10000L
-                < coalesce(col("keep_bp"), lit(10000L)))
+            ledger = mark(
+              ledger.join(broadcast(keepRates), Seq("lang"), "left"),
+              "mixture",
+              Queries.md5Long(col("doc_id").cast("string")) % 10000L <
+                coalesce(col("keep_bp"), lit(10000L)))
               .drop("keep_bp")
-            mixtureDropped = before - kept.count()
           }
-          var dsirDropped = 0L
           opt(rest, "-dsir").foreach { spec =>
             // DSIR selection gate (dsir_select applied): keep only the
             // top keep_bp basis-points share of the kept pool by hashed
@@ -881,21 +909,21 @@ object Main {
             require(keepBp >= 1 && keepBp <= 10000,
               s"-dsir keep_bp out of (0, 10000]: $keepBp")
             // truncate the gate lineage before this stage references it
-            // repeatedly (weights + cutoff + count + build): with
+            // repeatedly (weights + cutoff + pool count + mark): with
             // -exactsubstr ahead of it, the accumulated plan TEXT alone
             // (AQE renders it per executed stage) OOM'd the driver on a
             // 500-doc corpus — caching doesn't shrink a plan, a
             // checkpoint does
-            kept = kept.localCheckpoint()
-            val before = kept.count()
-            val target = (before * keepBp + 9999L) / 10000L
+            ledger = ledger.localCheckpoint()
+            // the target is a share of the live pool: the one count a
+            // gate still takes
+            val target = (liveRows("doc_id").count() * keepBp + 9999L) / 10000L
             // cached: the weight pipeline (corpus-wide token explode +
             // two count shuffles, the heaviest stage of this gate) is
-            // consumed by the cutoff aggregate, the dropped count, AND
-            // the corpus build below — uncached it would execute three
-            // times (the -exactsubstr discipline)
+            // consumed by the cutoff aggregate AND the mark join —
+            // uncached it would execute twice
             val w = pin(QueriesPipeline.dsirWeights(
-              kept.select(col("doc_id"), col("lang"), col("text")), targetLang)
+              liveRows("doc_id", "lang", "text"), targetLang)
               .select(col("doc_id"), col("dsir_w"))
               .cache())
             // histogram cumsum over DESCENDING weight: the weight
@@ -910,13 +938,13 @@ object Main {
                 lit(1), -col("dsir_w"), col("count"), "cum")
               .where(col("cum") >= target)
               .agg(max(col("dsir_w")).as("cutoff"))
-            kept = kept.join(w, "doc_id")
-              .crossJoin(broadcast(cutoff))
-              .where(col("dsir_w") >= coalesce(col("cutoff"), lit(Long.MinValue)))
+            // a live doc with no weight row drops (null keeps)
+            ledger = mark(ledger.join(w, Seq("doc_id"), "left")
+                .crossJoin(broadcast(cutoff)),
+              "dsir",
+              col("dsir_w") >= coalesce(col("cutoff"), lit(Long.MinValue)))
               .drop("dsir_w", "cutoff")
-            dsirDropped = before - kept.count()
           }
-          var ccnetDropped = 0L
           opt(rest, "-ccnet").foreach { keepList =>
             // CCNet bucket gate (ccnet_buckets applied): keep only the
             // named per-language LM-score terciles — `-ccnet head` is
@@ -929,20 +957,17 @@ object Main {
               Set("head", "middle", "tail")),
               s"-ccnet wants head|middle|tail, got $keepList")
             val asg = QueriesPipeline.ccnetBucketAssign(
-                kept.select(col("doc_id"), col("lang"), col("text")))
+                liveRows("doc_id", "lang", "text"))
               .select(col("doc_id"), col("bucket"))
-            val before = kept.count()
             // null-lang docs are EXEMPT (kept), same as the -temperature
             // gate: they have no language tercile to fall in — without
             // the exemption the assign's lang-keyed joins would silently
             // classify every null-lang doc as tail regardless of fluency
-            kept = kept.join(asg, Seq("doc_id"), "left")
-              .where(col("lang").isNull ||
+            ledger = mark(ledger.join(asg, Seq("doc_id"), "left"), "ccnet",
+              col("lang").isNull ||
                 coalesce(col("bucket"), lit("tail")).isin(want.toSeq: _*))
               .drop("bucket")
-            ccnetDropped = before - kept.count()
           }
-          var contamDropped = 0L
           opt(rest, "-decontaminate").foreach { benchDir =>
             // Benchmark decontamination gate (the decontaminate query's
             // relation, applied): drop any kept doc sharing a word
@@ -969,16 +994,14 @@ object Main {
                 if (rawNorm && !storeNorm)
                   System.err.println(s"corpus: -norm ignored — gram store " +
                     s"$benchDir was installed raw (re-run `gramstore -norm`)")
-                graft.ops.GramStore.hits(
-                  kept.select(col("doc_id"), col("text")),
+                graft.ops.GramStore.hits(liveRows("doc_id", "text"),
                   graft.ops.GramStore.open(spark, benchDir), storeNorm)
               } else {
                 val benchDocs = spark.read.parquet(benchDir)
                 require(benchDocs.columns.contains("text"),
                   s"-decontaminate $benchDir needs a `text` column, has " +
                     benchDocs.columns.mkString(", "))
-                // persisted for the census and the join; every later
-                // pass over `kept` reads it too, so it is freed with the
+                // persisted for the census and the join; freed with the
                 // verb's other caches
                 val bench = pin(QueriesPipeline.wordGrams8(
                     benchDocs
@@ -986,15 +1009,12 @@ object Main {
                         col("text")), rawNorm)
                   .select(col("g")).distinct().persist())
                 QueriesPipeline.contaminationHits(
-                  QueriesPipeline.wordGrams8(
-                    kept.select(col("doc_id"), col("text")), rawNorm), bench)
+                  QueriesPipeline.wordGrams8(liveRows("doc_id", "text"),
+                    rawNorm), bench)
               }
-            val hits = hitsFull.select(col("doc_id")).distinct()
-            val before = kept.count()
-            kept = kept.join(hits, Seq("doc_id"), "left_anti")
-            contamDropped = before - kept.count()
+            ledger = dropIds("contaminated",
+              hitsFull.select(col("doc_id")).distinct())
           }
-          var classifyDropped = 0L
           if (rest.contains("-classify")) {
             // Trained quality-classifier gate (the centroid_* queries,
             // applied — the FineWeb/RefinedWeb discipline: TRAIN the
@@ -1006,29 +1026,26 @@ object Main {
             // minimum-length gate re-derived from hashed bag-of-words
             // alone — deterministic, integer-exact, no RNG.
             val feat = QueriesPipeline.centroidFeatures(
-              kept.select(col("doc_id"), col("text"))).localCheckpoint()
-            val neg = QueriesPipeline.centroidScore(feat,
+              liveRows("doc_id", "text")).localCheckpoint()
+            ledger = dropIds("classify", QueriesPipeline.centroidScore(feat,
                 QueriesPipeline.centroidModel(feat))
-              .where(col("pred") === -1L).select("doc_id")
-            val before = kept.count()
-            kept = kept.join(neg, Seq("doc_id"), "left_anti")
-            classifyDropped = before - kept.count()
+              .where(col("pred") === -1L).select("doc_id"))
           }
-          var piiRedacted = 0L
           if (rest.contains("-pii")) {
             // PII scrub (pii_scrub's transform, applied): redact emails /
             // IPv4s / phone-shaped numbers in the EXPORTED text to typed
             // placeholders. Map-only (no shuffle); runs before the
             // curriculum/split assigners so the exported text and every
             // assignment computed from it stay self-consistent (the
-            // recompute-from-export spec discipline).
+            // recompute-from-export spec discipline). Dropped rows'
+            // text is null, so only live rows change.
             // The gauge counts placeholders on the redaction OUTPUT
             // (minus any already present), not raw pattern hits on the
             // source: nested matches (IP-shaped host inside an email)
             // are one redaction, not two.
-            val counted = pin(kept
+            ledger = ledger
               .withColumn("_pii_red", QueriesPipeline.piiRedact(col("text")))
-              .withColumn("_pii_n",
+              .withColumn("pii_n",
                 // clamped at 0 per row: a redacted span that itself
                 // contained a literal placeholder token (e.g. an <IP>
                 // inside an email local-part) consumes more placeholders
@@ -1038,30 +1055,23 @@ object Main {
                   QueriesPipeline.piiPlaceholders(col("_pii_red")) -
                     QueriesPipeline.piiPlaceholders(col("text"))))
               .withColumn("text", col("_pii_red")).drop("_pii_red")
-              .cache()) // consumed by the count aggregate AND the build
-            piiRedacted = counted.agg(coalesce(sum("_pii_n"), lit(0L)))
-              .head().getLong(0)
-            kept = counted.drop("_pii_n")
           }
+          // the gates → assign boundary: ONE eager pin. The gauges and
+          // the corpus read it, and the assigners (several references
+          // each) read a leaf instead of re-planning every gate per
+          // reference (a 500-doc driver OOM with -exactsubstr -dsir
+          // -split). Through a cache, so the checkpoint carries the
+          // real size, not the optimizer's product-over-left-joins
+          // estimate that plans every later join as a shuffle.
+          ledger = pin(ledger.cache()).localCheckpoint()
+          val kept = ledger.where(live)
+            .select(col("doc_id"), col("text"), col("lang"), col("source"))
           var corpus = kept
             .withColumn("n_tokens", size(split(col("text"), " ")).cast("long"))
             .withColumn("shard",
               Queries.md5Long(col("doc_id").cast("string")) % shards)
             .select(col("shard"), col("doc_id"), col("text"), col("lang"),
               col("source"), col("n_tokens"))
-          if (rest.contains("-curriculum") || rest.contains("-split") ||
-              rest.contains("-softdedup")) {
-            // the assigners below reference the corpus frame SEVERAL
-            // times (token explode + join back; star edges + label
-            // init), and by here its lineage carries every gate the
-            // flags enabled (quality joins + exactsubstr rewrite + dsir
-            // weights + ccnet assign ...). Duplicating that subplan per
-            // reference blows the DRIVER heap in the optimizer long
-            // before any executor works — observed as a 500-doc OOM
-            // with -exactsubstr -dsir -split together. One eager
-            // checkpoint makes the assigners read a leaf.
-            corpus = corpus.localCheckpoint()
-          }
           if (rest.contains("-softdedup")) {
             // soft_dedup applied to the EXPORTED text: every doc gains
             // its sampling weight_bp (10^8 div mean line commonness) —
@@ -1118,33 +1128,22 @@ object Main {
               .coalesce(1).write.mode("overwrite")
               .parquet(s"$outDir/epochs")
           }
-          val reasons = labeled.groupBy("drop_reason").count()
-            .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+          val byReason = ledger.groupBy("drop_reason")
+            .agg(count(lit(1)), sum("n_removed"), sum("pii_n")).collect()
+          val n = byReason.map(r => r.getString(0) -> r.getLong(1)).toMap
+            .withDefaultValue(0L)
+          val reasons = (n.keySet - "keep" ++ gated).toSeq.sorted
           // every gauge is a driver-side value: gather them, append once
           val gauges = Seq.newBuilder[(String, Long)]
-          gauges += "docs_in" -> reasons.values.sum
-          reasons.foreach { case (reason, n) =>
-            gauges += (
-              if (reason == "keep") "docs_kept" -> (n - substrEmptied -
-                mixtureDropped - ccnetDropped - dsirDropped - contamDropped -
-                classifyDropped)
-              else s"dropped_$reason" -> n)
-          }
-          if (rest.contains("-exactsubstr")) {
-            gauges += "exactsubstr_tokens_removed" -> spansRemoved
-            gauges += "dropped_exactsubstr_empty" -> substrEmptied
-          }
-          if (rest.contains("-temperature"))
-            gauges += "dropped_mixture" -> mixtureDropped
-          if (rest.contains("-ccnet")) gauges += "dropped_ccnet" -> ccnetDropped
-          if (rest.contains("-dsir")) gauges += "dropped_dsir" -> dsirDropped
-          if (opt(rest, "-decontaminate").isDefined)
-            gauges += "dropped_contaminated" -> contamDropped
-          if (rest.contains("-classify"))
-            gauges += "dropped_classify" -> classifyDropped
+          gauges += "docs_in" -> n.values.sum
+          gauges += "docs_kept" -> n("keep")
+          reasons.foreach(r => gauges += s"dropped_$r" -> n(r))
+          if (rest.contains("-exactsubstr"))
+            gauges += "exactsubstr_tokens_removed" -> byReason.map(_.getLong(2)).sum
           // a TRANSFORM gauge, not a drop reason: how many PII spans were
-          // redacted in the exported text (docs are all kept)
-          if (rest.contains("-pii")) gauges += "pii_redacted" -> piiRedacted
+          // redacted in the exported text
+          if (rest.contains("-pii"))
+            gauges += "pii_redacted" -> byReason.map(_.getLong(3)).sum
           if (rest.contains("-split"))
             corpus.groupBy("split").count().collect().foreach(r =>
               gauges += s"split_${r.getString(0)}" -> r.getLong(1))
@@ -1152,10 +1151,9 @@ object Main {
             gauges.result().map { case (name, v) =>
               Metrics.MetricRow(0, "corpus", name, v)
             })
-          println(s"corpus: ${reasons.getOrElse("keep", 0L)} docs kept of " +
-            s"${reasons.values.sum} into $shards shards " +
-            reasons.toSeq.sortBy(_._1)
-              .map { case (k, v) => s"$k=$v" }.mkString("(", " ", ")"))
+          println(s"corpus: ${n("keep")} docs kept of ${n.values.sum} " +
+            s"into $shards shards " + ("keep" +: reasons).sorted
+              .map(r => s"$r=${n(r)}").mkString("(", " ", ")"))
           0
         } finally pins.foreach(_.unpersist())
       case "gramstore" :: benchDir :: storeDir :: rest =>

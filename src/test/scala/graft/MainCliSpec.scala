@@ -1006,6 +1006,112 @@ class MainCliSpec extends AnyFunSuite with SparkSuite {
     assert(epochs.except(want).isEmpty && want.except(epochs).isEmpty)
   }
 
+  /** The `corpus` job's gauges under `out`, by name. */
+  private def corpusGauges(out: String): Map[String, Long] = {
+    import org.apache.spark.sql.functions.col
+    new graft.ops.Metrics.Table(spark, s"$out/metrics").read()
+      .where(col("job") === "corpus").select("name", "value").collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+  }
+
+  test("corpus summary line reports the exported count and every gate's " +
+    "drops, equal to the gauges") {
+    import org.apache.spark.sql.functions.{col, size, split}
+    val root = Files.createTempDirectory("cli-corpus-summary").toString
+    def v(args: String*): Int = Main.run(spark, args.toArray)
+    val sf = "/root/testdata/sf0.001"
+    // the benchmark: two docs the label gates keep, so the
+    // decontamination gate drops at least those two after the label
+    // stage has counted them as kept
+    assert(v("corpus", sf, s"$root/base", "-shards", "2") == 0)
+    spark.read.parquet(s"$root/base/corpus")
+      .where(size(split(col("text"), " ")) >= 8)
+      .orderBy("doc_id").limit(2).select("text")
+      .write.parquet(s"$root/bench")
+    val out = new java.io.ByteArrayOutputStream()
+    val rc = Console.withOut(new java.io.PrintStream(out)) {
+      v("corpus", sf, s"$root/out", "-shards", "2",
+        "-decontaminate", s"$root/bench")
+    }
+    assert(rc == 0, out.toString)
+    val g = corpusGauges(s"$root/out")
+    assert(g("dropped_contaminated") >= 2, g)
+    val line = """corpus: (\d+) docs kept of (\d+) into 2 shards \((.*)\)""".r
+      .findFirstMatchIn(out.toString)
+      .getOrElse(fail(s"no summary line in: $out"))
+    assert(line.group(1).toLong == g("docs_kept"), line.matched)
+    assert(line.group(2).toLong == g("docs_in"), line.matched)
+    val printed = line.group(3).split(" ").map { kv =>
+      val Array(k, n) = kv.split("=", 2); k -> n.toLong }.toMap
+    assert(printed == g.collect {
+      case (k, n) if k.startsWith("dropped_") => k.stripPrefix("dropped_") -> n
+      case ("docs_kept", n) => "keep" -> n
+    }, line.matched)
+  }
+
+  test("corpus reports docs_kept = 0 and writes an empty export when the " +
+    "label gates reject every doc") {
+    import org.apache.spark.sql.functions.{col, length}
+    import scala.jdk.CollectionConverters._
+    val sp = spark; import sp.implicits._
+    val root = Files.createTempDirectory("cli-corpus-none").toString
+    def v(args: String*): Int = Main.run(spark, args.toArray)
+    // one repeated token: every doc's top 2-gram is 100% of its
+    // bigrams, over Gopher's 20% limit
+    (1 to 6).map(i => (i.toLong, Seq.fill(40 + i)("x").mkString(" "),
+        "en", "web"))
+      .toDF("doc_id", "text", "lang", "source")
+      .withColumn("n_chars", length(col("text")).cast("long"))
+      .write.parquet(s"$root/sf/documents.parquet")
+    assert(v("corpus", s"$root/sf", s"$root/out", "-shards", "2") == 0)
+    val g = corpusGauges(s"$root/out")
+    assert(g.get("docs_kept").contains(0L), g)
+    assert(g("docs_in") == 6L && g("dropped_quality") == 6L, g)
+    val files = Files.walk(Paths.get(s"$root/out/corpus"))
+    try assert(!files.iterator().asScala.exists(_.toString.endsWith(".parquet")))
+    finally files.close()
+    assert(spark.read.parquet(s"$root/out/manifest").isEmpty)
+  }
+
+  test("corpus with every gate and assigner at once: the ledger conserves, " +
+    "each gate reports once, the export matches docs_kept, no cache left") {
+    import org.apache.spark.sql.functions.{col, sum}
+    import org.apache.spark.sql.graftbridge.ColumnBridge
+    spark.catalog.clearCache()
+    val root = Files.createTempDirectory("cli-corpus-all").toString
+    def v(args: String*): Int = Main.run(spark, args.toArray)
+    val sf = "/root/testdata/sf0.001"
+    val docs = Tables(spark, sf, "documents")
+    docs.where(col("doc_id") % 25 === 0).select("text")
+      .write.parquet(s"$root/bench")
+    assert(v("corpus", sf, s"$root/out", "-shards", "4", "-neardup",
+      "-exactsubstr", "-temperature", "-dsir", "en:5000",
+      "-ccnet", "head,middle", "-decontaminate", s"$root/bench",
+      "-classify", "-pii", "-softdedup", "-curriculum", "-split",
+      "-epochs") == 0)
+    val m = new graft.ops.Metrics.Table(spark, s"$root/out/metrics").read()
+      .where(col("job") === "corpus")
+    val names = m.select("name").collect().map(_.getString(0)).toSeq
+    assert(names.distinct.size == names.size, names)
+    val g = corpusGauges(s"$root/out")
+    val perGate = Seq("dropped_exactsubstr_empty", "dropped_mixture",
+      "dropped_dsir", "dropped_ccnet", "dropped_contaminated",
+      "dropped_classify", "exactsubstr_tokens_removed", "pii_redacted")
+    assert(perGate.forall(g.contains), g)
+    assert(g("docs_in") == docs.count())
+    val dropped = g.collect { case (k, n) if k.startsWith("dropped_") => n }.sum
+    assert(g("docs_in") == g("docs_kept") + dropped, g)
+    val corpus = spark.read.parquet(s"$root/out/corpus")
+    assert(corpus.count() == g("docs_kept"))
+    assert(spark.read.parquet(s"$root/out/manifest").agg(sum("n_docs"))
+      .head().getLong(0) == g("docs_kept"))
+    assert(g.collect { case (k, n) if k.startsWith("split_") => n }.sum ==
+      g("docs_kept"), g)
+    assert(Seq("weight_bp", "bucket", "intra", "split")
+      .forall(corpus.columns.contains), corpus.columns.toSeq)
+    assert(ColumnBridge.cacheIsEmpty(spark))
+  }
+
   test("bpe verb: one training run writes the merge table and the " +
     "fertility audit, matching the oracle-checked queries") {
     val root = Files.createTempDirectory("cli-bpe").toString
